@@ -19,6 +19,8 @@ import numpy as np
 import pandas as pd
 
 TOP_K = 15  # ResearchEngine.DEFAULT_TOP_K: what interactive users get
+# query-set sizes; with the 11 reference queries, match has 16 queries
+N_DRAWN, N_PHRASES, N_FUZZY, N_ES = 5, 4, 4, 4
 BURSTINESS = 0.3  # realistic-text shape: tf and dl vary, so pruning can act
 _WORD_RE = re.compile(r"[a-z][a-z0-9]*")
 
@@ -26,20 +28,22 @@ _WORD_RE = re.compile(r"[a-z][a-z0-9]*")
 @dataclass(frozen=True)
 class Scale:
     """Corpus and batch sizes. ``n_convs`` conversations are indexed;
-    ``n_append_convs`` more arrive later as one append micro-batch."""
+    ``n_append_convs`` more arrive later, split evenly into
+    ``n_append_batches`` append micro-batches."""
 
     n_convs: int
     n_append_convs: int
+    n_append_batches: int
     batch_size: int  # queries per search_many batch
     n_delete_convs: int  # conversations tombstoned by delete_by_query
 
 
 SCALES = {
-    "full": Scale(n_convs=800, n_append_convs=80, batch_size=16,
-                  n_delete_convs=20),
+    "full": Scale(n_convs=800, n_append_convs=90, n_append_batches=1,
+                  batch_size=16, n_delete_convs=20),
     # the self-test's tiny corpus: same code paths, seconds per phase
-    "tiny": Scale(n_convs=150, n_append_convs=40, batch_size=8,
-                  n_delete_convs=5),
+    "tiny": Scale(n_convs=150, n_append_convs=40, n_append_batches=2,
+                  batch_size=8, n_delete_convs=5),
 }
 
 
@@ -52,18 +56,21 @@ def write_corpus(spark, seed: int, scale: Scale, n_parts: int,
                  out_dir: str) -> list[str]:
     """Generate every conversation of the run in one Spark job and write it
     as parquet, one directory per ingest step: ``part=0`` is the base corpus,
-    ``part=1`` the append micro-batch. Returns the two directories."""
+    ``part=1`` onwards the append micro-batches. Returns the directories."""
     from pyspark.sql import functions as F
 
     from research_engine_spark.corpus import synth_transcripts
 
     total = scale.n_convs + scale.n_append_convs
     idx = F.substring("conv_id", 6, 8).cast("int")
+    batch = ((idx - scale.n_convs) * scale.n_append_batches
+             / scale.n_append_convs).cast("int") + 1
     (synth_transcripts(spark, n_convs=total, seed=seed,
                        burstiness=BURSTINESS, n_partitions=n_parts)
-     .withColumn("part", (idx >= scale.n_convs).cast("int"))
+     .withColumn("part", F.when(idx < scale.n_convs, 0).otherwise(batch))
      .write.partitionBy("part").parquet(out_dir))
-    return [f"{out_dir}/part=0", f"{out_dir}/part=1"]
+    return [f"{out_dir}/part={i}"
+            for i in range(scale.n_append_batches + 1)]
 
 
 @dataclass
@@ -83,7 +90,7 @@ def make_queries(seed: int, corpus: pd.DataFrame, scale: Scale) -> QuerySet:
     """Queries drawn from the same seed as the corpus: the 11 reference
     queries, 1-5 term match queries over the corpus's Zipf vocabulary
     (plain, stopword-heavy and rare AND common shapes), phrases from
-    bigrams of real turns and fuzzy queries: the reference queries with a
+    bigrams of real turns and fuzzy queries: reference queries with a
     one-edit typo."""
     from research_engine_spark.functions.analyzer import analyze_query
     from research_engine_spark.reference_queries import REFERENCE_QUERIES
@@ -101,7 +108,7 @@ def make_queries(seed: int, corpus: pd.DataFrame, scale: Scale) -> QuerySet:
         return list(rng.choice(vocab, size=n, p=zipf_p))
 
     match = list(REFERENCE_QUERIES)
-    for i in range(24):
+    for i in range(N_DRAWN):
         shape = i % 3
         if shape == 0:  # plain Zipf draw, 1-5 terms
             terms = zipf_terms(int(rng.integers(1, 6)))
@@ -115,7 +122,7 @@ def make_queries(seed: int, corpus: pd.DataFrame, scale: Scale) -> QuerySet:
 
     phrases: list[str] = []
     long_turns = [t for t in texts if len(_WORD_RE.findall(t)) >= 2]
-    while len(phrases) < 12:
+    while len(phrases) < N_PHRASES:
         turn = long_turns[int(rng.integers(len(long_turns)))]
         words = re.findall(r"\S+", turn)
         j = int(rng.integers(len(words) - 1))
@@ -123,11 +130,12 @@ def make_queries(seed: int, corpus: pd.DataFrame, scale: Scale) -> QuerySet:
         if all(pair):
             phrases.append(" ".join(pair))
 
-    # fuzzy: the reference queries as users mistype them, one edit in one
-    # word of four or more letters
+    # fuzzy: reference queries as users mistype them, one edit in one word
+    # of four or more letters
     fuzzy: list[str] = []
-    for query in REFERENCE_QUERIES:
-        words = query.split()
+    for j in sorted(rng.choice(len(REFERENCE_QUERIES), size=N_FUZZY,
+                               replace=False)):
+        words = REFERENCE_QUERIES[int(j)].split()
         long = [i for i, w in enumerate(words) if len(w.strip("?")) >= 4]
         i = long[int(rng.integers(len(long)))]
         words[i] = _one_edit(words[i].strip("?"), rng)
@@ -136,7 +144,7 @@ def make_queries(seed: int, corpus: pd.DataFrame, scale: Scale) -> QuerySet:
     # term-level clauses name index terms, i.e. analyzed (stemmed) words
     index_terms = sorted({t for w in vocab[:200] for t, _ in analyze_query(w)})
     es_bodies = []
-    for i in range(4):
+    for i in range(N_ES):
         a, b_, c = (str(w) for w in rng.choice(index_terms, size=3,
                                                replace=False))
         if i % 2 == 0:

@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
 """Serve / scan benchmark of the research_engine_spark engine.
 
-    python3 perfbench/run.py --workload serve --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload serve --seed 1 --seconds 8 --trace 0
 
 Run from the root of a checkout. One run starts a local Spark session on
-every core, generates its inputs from ``--seed``, builds a positional index,
-serves a closed-loop query mix for ``--seconds`` seconds through one client,
-then appends, deletes and compacts, checking every result against the BM25
-oracle. The last line of stdout is one JSON object with ``correct``,
+every core, generates its inputs and expected results from ``--seed``,
+builds a positional index, serves a fixed closed-loop request list through
+one client (one pass of about 8 s on a 4-vCPU host per 8 s of
+``--seconds``), then appends, deletes and compacts, checking every result
+against the BM25 oracle. The last line of stdout is one JSON object with ``correct``,
 ``attempted``, ``failed`` and ``metrics``: the end-to-end metrics with
 ``--trace 0``, the per-layer metrics with ``--trace 1``. A full report
 (host weather, every metric, and with tracing the spans and the self-time
@@ -38,73 +39,23 @@ ROOT = os.path.dirname(HERE)
 FIXED_ENV = {"PYTHONHASHSEED": "0", "PYTHONPATH": ROOT}
 
 WORKLOADS = ("serve", "scan")
-# one cycle of the closed loop; "batch" is one search_many over the fixed
-# seeded batch, everything else is a single request
-CYCLES = {
-    "serve": ("search", "phrase", "search", "bool_should", "fuzzy", "es",
-              "batch"),
-    "scan": ("search", "search", "search", "agg", "batch"),
-}
-TRACE_CYCLES = {"serve": 3, "scan": 1}  # fixed work per traced pass
+# one pass of the read window covers every payload of the workload's mix
+# once, plus this many search_many calls over the fixed seeded batch
+BATCH_REPEATS = {"serve": 6, "scan": 2}
+PASS_S = 8  # nominal length of one pass on a 4-vCPU host
 SETUP_PASSES = 3  # timed reader open + first answer, median taken
+PROBE_REPS = 2  # timed probe passes after the delete, median taken
+# measured and printed beside the end-to-end metrics, but not gated: a run
+# holds 28 (serve) or 7 (scan) single requests, so p95 is near the maximum
+REPORTED = {"query_p95_ms": "ms"}
 
-# the result line's end-to-end metrics, as in BENCHMARK.json. query_p95_ms
-# is reported beside them but not gated: a run's window holds 12-30
-# requests, so p95 is near the maximum and spreads wider than any bound
-E2E_UNITS = {
-    "setup_s": "s", "query_p50_ms": "ms",
-    "batch_qps": "1/s", "build_turns_per_s": "1/s",
-    "append_turns_per_s": "1/s", "compact_s": "s",
-    "index_bytes_per_input_byte": "ratio", "driver_peak_rss_mb": "MB",
-}
-# per-layer metric -> (unit, which direction is better), as in BENCHMARK.json
-LAYER_METRICS = {
-    "session.start_s": ("s", "lower"),
-    "session.jvm_peak_rss_mb": ("MB", "lower"),
-    "analyzer.query_ms": ("ms", "lower"),
-    "scorer.reader_open_ms": ("ms", "lower"),
-    "scorer.term_stats_ms": ("ms", "lower"),
-    "scorer.term_stats_calls": ("count", "lower"),
-    "scorer.search_ms": ("ms", "lower"),
-    "scorer.path.driver_local": ("count", "higher"),
-    "scorer.path.driver_local_blockmax": ("count", "higher"),
-    "scorer.path.fallback_plain": ("count", "lower"),
-    "scorer.path.single_clause_pruned": ("count", "higher"),
-    "scorer.path.two_phase": ("count", "higher"),
-    "scorer.blocks_kept_frac": ("ratio", "lower"),
-    "codec.decode_ms": ("ms", "lower"),
-    "codec.postings_decoded": ("count", "lower"),
-    "codec.postings_per_hit": ("ratio", "lower"),
-    "spark.collect_ms": ("ms", "lower"),
-    "spark.jobs_per_query": ("count", "lower"),
-    "spark.stages_per_query": ("count", "lower"),
-    "spark.tasks_per_query": ("count", "lower"),
-    "spark.executor_cpu_ms_per_query": ("ms", "lower"),
-    "spark.pyworker_cpu_ms_per_query": ("ms", "lower"),
-    "spark.input_bytes_per_query": ("bytes", "lower"),
-    "spark.shuffle_bytes_per_query": ("bytes", "lower"),
-    "esdsl.search_ms": ("ms", "lower"),
-    "indexer.docs_write_s": ("s", "lower"),
-    "indexer.doc_stats_s": ("s", "lower"),
-    "indexer.term_stats_s": ("s", "lower"),
-    "indexer.spimi_pack_s": ("s", "lower"),
-    "indexer.lineage_s": ("s", "lower"),
-    "indexer.shuffle_bytes_per_turn": ("bytes", "lower"),
-    "indexer.pyworker_cpu_s_per_kturn": ("s", "lower"),
-    "indexer.append_s": ("s", "lower"),
-    "indexer.compact_s": ("s", "lower"),
-    "indexer.compact_shuffle_bytes": ("bytes", "lower"),
-    "storage.segments_before_compact": ("count", "lower"),
-    "deletes.delete_ms": ("ms", "lower"),
-    "deletes.tombstones": ("count", "lower"),
-    "storage.postings_bytes": ("bytes", "lower"),
-    "storage.docs_bytes": ("bytes", "lower"),
-    "storage.doc_stats_bytes": ("bytes", "lower"),
-    "storage.term_stats_bytes": ("bytes", "lower"),
-    "storage.lineage_bytes": ("bytes", "lower"),
-    "storage.files": ("count", "lower"),
-    "trace.overhead_frac": ("ratio", "lower"),
-}
+
+def metric_units() -> tuple[dict[str, str], dict[str, str]]:
+    """(end-to-end, per-layer) metric name -> unit, from BENCHMARK.json."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return ({m["name"]: m["unit"] for m in spec["end_to_end"]},
+            {m["name"]: m["unit"] for m in spec["per_layer"]})
 
 
 def parse_args(argv):
@@ -192,7 +143,9 @@ class Bench:
         if tr is None or not tr.on:
             t0 = time.perf_counter()
             out = fn()
-            return out, time.perf_counter() - t0
+            wall = time.perf_counter() - t0
+            self.timeline.append((self.phase, kind, wall))
+            return out, wall
         group = f"r{len(self.requests)}"
         tr.request = group
         cpu0 = pyworker_cpu_s(self.jvm)
@@ -202,6 +155,7 @@ class Bench:
             out = fn()
         wall = time.perf_counter() - t0
         tr.request = None
+        self.timeline.append((self.phase, kind, wall))
         self.requests.append({
             "id": group, "kind": kind, "phase": self.phase, "wall_s": wall,
             **self.spark_counters.end(group),
@@ -214,43 +168,114 @@ class Bench:
             self.failures.append(what)
 
     def settle(self) -> None:
-        """Python and JVM garbage collection before timed reads, so none
-        falls in the window right after a write."""
+        """Python and JVM garbage collection before every timed phase, so
+        no timed read falls right after a write and no phase collects the
+        garbage of the one before."""
         gc.collect()
         self.spark._jvm.System.gc()
 
-    # --- inputs -------------------------------------------------------------
+    # --- inputs and expected results ----------------------------------------
     def make_inputs(self) -> None:
+        """The seeded corpus and queries, and every expected result the
+        oracle gives: all computed here, before anything is timed."""
+        import numpy as np
         import pandas as pd
 
-        from inputs import Expected, make_queries, write_corpus
+        from inputs import (TOP_K, Expected, conv_name, make_queries,
+                            write_corpus)
+        from research_engine_spark.oracle import BM25Oracle
 
+        t0 = time.perf_counter()
         self.parts = write_corpus(self.spark, self.args.seed, self.scale,
                                   self.n, os.path.join(self.work, "input"))
-        self.frames = [pd.read_parquet(p) for p in self.parts]
-        self.base_turns = len(self.frames[0])
-        self.queries = make_queries(self.args.seed, self.frames[0],
-                                    self.scale)
+        self.phase_s["corpus"] = time.perf_counter() - t0
+        frames = [pd.read_parquet(p) for p in self.parts]
+        base = frames[0]
+        self.base_turns = len(base)
+        self.queries = q = make_queries(self.args.seed, base, self.scale)
         self.queries_sha = hashlib.sha256(json.dumps(
-            dataclasses.asdict(self.queries), sort_keys=True).encode()
-        ).hexdigest()
-        self.expected = Expected(self.frames[0])
-        self.batch = {f"q{i:04d}": q for i, q in enumerate(self.queries.batch)}
-        self.agg_expected = sorted(
-            self.expected.role_counts(self.queries.agg_query).items(),
-            key=lambda kv: (-kv[1], kv[0]))
-        self._es_expected: dict[str, list] = {}
-        self.agg_body = {"size": 0,
-                         "query": {"match": {"text": self.queries.agg_query}},
+            dataclasses.asdict(q), sort_keys=True).encode()).hexdigest()
+        self.batch = {f"q{i:04d}": x for i, x in enumerate(q.batch)}
+        self.agg_body = {"size": 0, "query": {"match": {"text": q.agg_query}},
                          "aggs": {"roles": {"terms": {"field": "role"}}}}
+        self.payloads = self._payloads()
+
+        self.expected = ex = Expected(base)
+        for kind, payloads in self.payloads.items():
+            if kind in ("search", "phrase", "bool_should", "fuzzy"):
+                for x in payloads:
+                    ex.get(kind, x)
+        for x in q.batch:
+            ex.get("search", x)
+        self.agg_expected = sorted(ex.role_counts(q.agg_query).items(),
+                                   key=lambda kv: (-kv[1], kv[0]))
+
+        # the lifecycle: tombstone whole conversations, base or appended
+        grown = pd.concat(frames, ignore_index=True)
+        self.appended_turns = len(grown) - self.base_turns
+        rng = np.random.default_rng(np.random.SeedSequence(
+            [self.args.seed, 0xDE1]))
+        n_total = self.scale.n_convs + self.scale.n_append_convs
+        victims = sorted(conv_name(int(i)) for i in rng.choice(
+            n_total, size=self.scale.n_delete_convs, replace=False))
+        self.delete_where = "conv_id IN ({})".format(
+            ", ".join(f"'{v}'" for v in victims))
+        dead = grown["conv_id"].isin(victims)
+        self.n_dead, self.n_live = int(dead.sum()), int((~dead).sum())
+        # until the purge, corpus statistics stay as built: the grown
+        # corpus's scores (appended docs included), deleted docs filtered;
+        # the purge recomputes them exactly, as a fresh oracle over the
+        # live corpus gives them
+        grown_oracle = BM25Oracle(grown)
+        live_oracle = BM25Oracle(grown[~dead].reset_index(drop=True))
+        gone = set(victims)
+        self.probe_after_delete = {x: [
+            row for row in _keyed_df(grown_oracle.search(
+                x, k=TOP_K + self.n_dead)) if row[0] not in gone][:TOP_K]
+            for x in q.probes}
+        self.probe_after_purge = {
+            x: _keyed_df(live_oracle.search(x, k=TOP_K)) for x in q.probes}
+
+    def _payloads(self) -> dict[str, list]:
+        """kind -> the payloads one pass of the read window sends, in the
+        order the kinds interleave."""
+        q, reps = self.queries, BATCH_REPEATS[self.workload]
+        if self.workload == "serve":
+            return {"search": q.match[0::2], "phrase": q.phrases,
+                    "bool_should": q.match[1::2], "fuzzy": q.fuzzy,
+                    "es": q.es_bodies, "batch": [self.batch] * reps}
+        return {"search": q.match[0::3], "agg": [self.agg_body],
+                "batch": [self.batch] * reps}
+
+    def expect_es(self) -> None:
+        """ES bodies are checked against the pinned-distributed tier, where
+        every query runs through Spark: computed after the build, before
+        the set-up passes, all bodies in one es_msearch job."""
+        from research_engine_spark.operators import esdsl
+        from research_engine_spark.operators.scorer import IndexReader
+
+        self.es_expected = {}
+        if "es" not in self.payloads:
+            return
+        pinned = IndexReader(self.spark, self.idx,
+                             driver_local_max_postings=0,
+                             driver_local_max_vocab=0)
+        bodies = {f"b{i}": body for i, body in enumerate(self.payloads["es"])}
+        with _untraced(self.tracer):
+            rows = esdsl.es_msearch(pinned, bodies).collect()
+        for qid, body in bodies.items():
+            hits = sorted(((-float(r["score"]), int(r["doc_id"]))
+                           for r in rows if r["qid"] == qid))
+            self.es_expected[json.dumps(body, sort_keys=True)] = [
+                (d, -s) for s, d in hits]
 
     # --- operations ---------------------------------------------------------
     def _ops(self) -> dict:
-        """kind -> (payloads, run(payload) -> rows, check(payload, rows))."""
+        """kind -> (run(payload) -> rows, check(payload, rows))."""
         from inputs import TOP_K
         from research_engine_spark.operators import esdsl, scorer
 
-        q, ex, e = self.queries, self.expected, self.engine
+        ex, e = self.expected, self.engine
 
         def same(kind):
             return lambda x, rows: _pairs(rows) == ex.get(kind, x)
@@ -266,53 +291,38 @@ class Bench:
             got = [(r["key"], int(r["doc_count"])) for r in rows]
             return got == self.agg_expected
 
+        def es_ok(x, rows):
+            return _pairs(rows) == self.es_expected[
+                json.dumps(x, sort_keys=True)]
+
         if self.workload == "serve":
             return {
-                "search": (q.match, lambda x: e.search(
-                    x, top_k=TOP_K).collect(), same("search")),
-                "phrase": (q.phrases, lambda x: e.phrase_search(
+                "search": (lambda x: e.search(x, top_k=TOP_K).collect(),
+                           same("search")),
+                "phrase": (lambda x: e.phrase_search(
                     x, top_k=TOP_K).collect(), same("phrase")),
-                "bool_should": (q.match, lambda x: e.search(
+                "bool_should": (lambda x: e.search(
                     x, top_k=TOP_K, bool_should=True).collect(),
                     same("bool_should")),
-                "fuzzy": (q.fuzzy, lambda x: e.search(
+                "fuzzy": (lambda x: e.search(
                     x, top_k=TOP_K, fuzzy=True).collect(), same("fuzzy")),
-                "es": (q.es_bodies, lambda x: e.es_search(x).collect(),
-                       lambda x, rows: _pairs(rows) == self.es_expected(x)),
-                "batch": ([self.batch], lambda x: e.batch_search(
+                "es": (lambda x: e.es_search(x).collect(), es_ok),
+                "batch": (lambda x: e.batch_search(
                     x, top_k=TOP_K).collect(), batch_ok),
             }
         r = self.scan_reader
         return {
-            "search": (q.match, lambda x: scorer.search(
+            "search": (lambda x: scorer.search(
                 r, x, k=TOP_K, with_text=False).collect(), same("search")),
-            "agg": ([self.agg_body], lambda x: esdsl.es_aggregations(
-                r, x).collect(), agg_ok),
-            "batch": ([self.batch], lambda x: scorer.search_many(
+            "agg": (lambda x: esdsl.es_aggregations(r, x).collect(), agg_ok),
+            "batch": (lambda x: scorer.search_many(
                 r, x, k=TOP_K).collect(), batch_ok),
         }
 
-    def es_expected(self, body: dict) -> list:
-        """ES bodies are checked against the pinned-distributed tier, where
-        every query runs through Spark: computed untimed, once per body."""
-        from research_engine_spark.operators import esdsl
-        from research_engine_spark.operators.scorer import IndexReader
-
-        key = json.dumps(body, sort_keys=True)
-        if key not in self._es_expected:
-            pinned = IndexReader(self.spark, self.idx,
-                                 driver_local_max_postings=0,
-                                 driver_local_max_vocab=0)
-            with _untraced(self.tracer):
-                self._es_expected[key] = _pairs(
-                    esdsl.es_search(pinned, body).collect())
-        return self._es_expected[key]
-
     def run_op(self, kind: str, payload, lat: list, batch: list) -> int:
         """One request of the mix, timed and checked; returns result rows."""
-        payloads, run, ok = self.ops[kind]
+        run, ok = self.ops[kind]
         rows, wall = self.call(kind, lambda: run(payload))
-        self.timeline.append((self.phase, kind, wall))
         if kind == "batch":
             batch.append((len(payload), wall))
         else:
@@ -320,17 +330,12 @@ class Bench:
         self.check(f"{kind}: {payload!r}", ok(payload, rows))
         return len(rows)
 
-    def cycles(self):
-        """The closed loop's request sequence, one cycle of the workload's
-        mix at a time, each kind walking through its own seeded payloads."""
-        pos = {k: 0 for k in self.ops}
-        while True:
-            cycle = []
-            for kind in CYCLES[self.workload]:
-                payloads = self.ops[kind][0]
-                cycle.append((kind, payloads[pos[kind] % len(payloads)]))
-                pos[kind] += 1
-            yield cycle
+    def request_list(self) -> list[tuple[str, object]]:
+        """One pass of the read window: every payload of every kind once,
+        the kinds interleaved round-robin, the same list on every run."""
+        lists = [[(kind, x) for x in xs] for kind, xs in self.payloads.items()]
+        return [lst[i] for i in range(max(map(len, lists)))
+                for lst in lists if i < len(lst)]
 
     # --- phases -------------------------------------------------------------
     def build(self) -> None:
@@ -341,6 +346,7 @@ class Bench:
 
         self.engine = ResearchEngine(self.spark, self.idx)
         tx = self.spark.read.parquet(self.parts[0])
+        self.settle()
         stats, wall = self.call("build", lambda: self.engine.build(
             tx, n_buckets=self.n, n_partitions=self.n, with_positions=True))
         self.check("build n_docs", stats["n_docs"] == self.base_turns)
@@ -355,7 +361,7 @@ class Bench:
         from research_engine_spark.operators.scorer import IndexReader
 
         passes = []
-        first = CYCLES[self.workload][0]
+        first = next(iter(self.payloads))
         self.settle()  # the timed first answers follow the build
         for _ in range(SETUP_PASSES):
             t0 = time.perf_counter()
@@ -367,94 +373,77 @@ class Bench:
             else:
                 self.engine.reader  # noqa: B018 - opens the reader
             self.ops = self._ops()
-            self.run_op(first, self.ops[first][0][0], [], [])
+            self.run_op(first, self.payloads[first][0], [], [])
             passes.append(time.perf_counter() - t0)
         self.m["setup_s"] = self.session_start_s + statistics.median(passes)
         self.phase_s["setup_passes"] = passes
-        for kind in dict.fromkeys(CYCLES[self.workload][1:]):
+        for kind, payloads in self.payloads.items():
             if kind != first:
-                self.run_op(kind, self.ops[kind][0][0], [], [])
+                self.run_op(kind, payloads[0], [], [])
 
-    def read_window(self, seconds: float | None, cycles: int | None = None):
-        """The closed loop: one client, next request after the previous
-        one returns, whole cycles of the mix. Untraced, cycles start until
-        ``seconds`` have passed; traced, a fixed number of cycles runs so
-        that counts repeat exactly."""
+    def read_window(self, passes: int):
+        """The closed loop: one client, the next request after the previous
+        one returns, ``passes`` times over the fixed request list."""
         self.settle()
         self.phase = "read"
         lat: list[float] = []
         batch: list[tuple[int, float]] = []
         hits = 0
-        t_end = time.perf_counter() + (seconds or 0)
-        for i, cycle in enumerate(self.cycles()):
-            if (i >= cycles) if cycles else time.perf_counter() >= t_end:
-                break
-            for kind, payload in cycle:
+        for _ in range(passes):
+            for kind, payload in self.request_list():
                 hits += self.run_op(kind, payload, lat, batch)
         self.phase = "lifecycle"
         return lat, batch, hits
 
     def lifecycle(self) -> None:
-        """Append a micro-batch, delete_by_query, then one compaction that
-        force-merges the segments and purges the tombstones, and gc - on
-        the served index, with probes checked after the delete and after
-        the compaction. The probes are checked, not timed."""
-        import numpy as np
-        import pandas as pd
-
-        from inputs import TOP_K, Expected, conv_name
+        """Append the micro-batches, delete_by_query, then one compaction
+        that force-merges the segments and purges the tombstones, and gc -
+        on the served index. The probes are timed after the delete (settled,
+        PROBE_REPS passes) and checked after the delete and after the
+        purge."""
+        from inputs import TOP_K
 
         e = self.engine
-        grown = pd.concat(self.frames, ignore_index=True)
-        _, wall = self.call("append", lambda: e.append(
-            self.spark.read.parquet(self.parts[1]), n_partitions=self.n))
-        self.m["append_turns_per_s"] = (len(grown) - self.base_turns) / wall
-        self.layer["indexer.append_s"] = wall
-        probes = self.queries.probes
+        self.settle()
+        walls = [self.call("append", lambda p=p: e.append(
+            self.spark.read.parquet(p), n_partitions=self.n))[1]
+            for p in self.parts[1:]]
+        self.m["append_turns_per_s"] = self.appended_turns / sum(walls)
+        self.layer["indexer.append_s"] = statistics.median(walls)
 
-        def probe(label, want):
-            """Run every probe; ``want(query)`` gives the expected rows."""
-            for x in probes:
-                rows, _ = self.call("probe", lambda: e.search(
-                    x, top_k=TOP_K).collect())
-                self.check(f"probe {label}: {x!r}", _keyed(rows) == want(x))
-
-        ex_grown = Expected(grown)
-        rng = np.random.default_rng(np.random.SeedSequence(
-            [self.args.seed, 0xDE1]))
-        n_total = self.scale.n_convs + self.scale.n_append_convs
-        victims = sorted(conv_name(int(i)) for i in rng.choice(
-            n_total, size=self.scale.n_delete_convs, replace=False))
-        where = "conv_id IN ({})".format(", ".join(f"'{v}'" for v in victims))
-        n_del, wall = self.call("delete", lambda: e.delete_by_query(where))
+        n_del, wall = self.call("delete", lambda: e.delete_by_query(
+            self.delete_where))
         self.layer["deletes.delete_ms"] = wall * 1e3
         self.layer["deletes.tombstones"] = n_del
-        dead = grown["conv_id"].isin(victims)
-        self.check("delete_by_query count", n_del == int(dead.sum()))
+        self.check("delete_by_query count", n_del == self.n_dead)
         self.check("live doc count after delete", self.call(
-            "count", e.es_count)[0] == len(grown) - int(dead.sum()))
-        # until the purge, corpus statistics stay as built: the grown
-        # corpus's scores (appended docs included), deleted docs filtered
-        gone = set(victims)
-        probe("after delete", lambda x: [
-            row for row in _keyed_df(ex_grown.oracle.search(
-                x, k=TOP_K + int(dead.sum())))
-            if row[0] not in gone][:TOP_K])
+            "count", e.es_count)[0] == self.n_live)
+
+        def probe(label, want) -> list[float]:
+            """One pass over the probes, checked; returns the walls."""
+            walls = []
+            for x in self.queries.probes:
+                rows, wall = self.call("probe", lambda: e.search(
+                    x, top_k=TOP_K).collect())
+                self.check(f"probe {label}: {x!r}", _keyed(rows) == want[x])
+                walls.append(wall)
+            return walls
+
+        self.settle()
+        self.layer["deletes.probe_ms"] = statistics.median(
+            w for _ in range(PROBE_REPS)
+            for w in probe("after delete", self.probe_after_delete)) * 1e3
 
         self.layer["storage.segments_before_compact"] = len(
             e.reader.stats["snapshots"])
+        self.settle()
         _, wall = self.call("compact", lambda: e.compact(n_partitions=self.n))
         self.m["compact_s"] = wall
         self.layer["indexer.compact_s"] = wall
         self.call("gc", lambda: e.gc())
-        live = grown[~dead].reset_index(drop=True)
-        ex_live = Expected(live)
         self.check("live doc count after purge",
-                   self.call("count", e.es_count)[0] == len(live))
-        # the purge recomputes statistics exactly: a fresh oracle over the
-        # live corpus gives the expected scores
-        probe("after compaction", lambda x: _keyed_df(ex_live.oracle.search(
-            x, k=TOP_K)))
+                   self.call("count", e.es_count)[0] == self.n_live)
+        probe("after compaction", self.probe_after_purge)
 
         tables: dict[str, int] = {}
         index_bytes, files = _dir_bytes(self.idx, tables)
@@ -476,18 +465,22 @@ class Bench:
             install_wrappers(self.tracer)
         t1 = time.perf_counter()
         self.build()
+        te = time.perf_counter()
+        self.expect_es()
+        self.phase_s["expect_es"] = time.perf_counter() - te
         tb = time.perf_counter()
         self.setup()
         t2 = time.perf_counter()
         if self.tracer is None:
-            lat, batch, _ = self.read_window(self.args.seconds)
+            lat, batch, _ = self.read_window(
+                max(1, round(self.args.seconds / PASS_S)))
         else:
             lat, batch = self.traced_read_window()
         t3 = time.perf_counter()
         self.phase_s.update(inputs=t1 - t0, build=tb - t1, setup=t2 - tb,
                             read=t3 - t2)
         self.m["query_p50_ms"] = _quantile(lat, 0.50) * 1e3
-        self.query_p95_ms = _quantile(lat, 0.95) * 1e3
+        self.m["query_p95_ms"] = _quantile(lat, 0.95) * 1e3
         self.m["batch_qps"] = sum(n for n, _ in batch) / sum(
             w for _, w in batch)
         self.n_latency_samples = len(lat)
@@ -501,14 +494,13 @@ class Bench:
         """Untraced, traced, untraced passes over the same fixed requests:
         per-layer numbers come from the traced pass, and its wall against
         the mean of the other two is the tracing overhead."""
-        cycles = TRACE_CYCLES[self.workload]
         walls = []
         for on in (False, True, False):
             self.tracer.on = on
             first = len(self.requests)
             before = Counter(self.tracer.counters)
             t0 = time.perf_counter()
-            lat, batch, hits = self.read_window(None, cycles)
+            lat, batch, hits = self.read_window(1)
             walls.append(time.perf_counter() - t0)
             if on:
                 traced = (lat, batch)
@@ -679,13 +671,15 @@ def report(args, bench: Bench, weather: dict) -> int:
     """Print the human-readable report and the result line; write the
     full report file. Exit status 1 if any output was wrong."""
     failed = len(bench.failures)
-    metrics = {k: {"value": v, "unit": E2E_UNITS[k]}
-               for k, v in bench.m.items()}
+    e2e_units, layer_units = metric_units()
+    metrics = {k: {"value": bench.m[k], "unit": unit}
+               for k, unit in e2e_units.items()}
     print(f"# {args.workload} seed={args.seed} trace={args.trace} "
           f"weather={json.dumps(weather)}")
     for name, mv in metrics.items():
         print(f"{name:30s} {mv['value']:14.4f} {mv['unit']}")
-    print(f"{'query_p95_ms':30s} {bench.query_p95_ms:14.4f} ms (not gated)")
+    for name, unit in REPORTED.items():
+        print(f"{name:30s} {bench.m[name]:14.4f} {unit} (not gated)")
     print(f"{'failed_frac':30s} {failed / bench.attempted:14.4f} ratio")
     print(f"{'latency_samples':30s} {bench.n_latency_samples:14d} count")
     print("# phase walls (s): " + json.dumps(
@@ -695,7 +689,7 @@ def report(args, bench: Bench, weather: dict) -> int:
     out = {"workload": args.workload, "seed": args.seed,
            "queries_sha": bench.queries_sha,
            "trace": args.trace, "weather": weather, "end_to_end": metrics,
-           "query_p95_ms": bench.query_p95_ms,
+           "reported": {k: bench.m[k] for k in REPORTED},
            "per_layer": bench.layer, "phase_s": bench.phase_s,
            "timeline": bench.timeline, "failures": bench.failures,
            "attempted": bench.attempted}
@@ -713,7 +707,7 @@ def report(args, bench: Bench, weather: dict) -> int:
                    spans=[[s[0], s[1] - T_START, s[2] - T_START, s[3], s[4]]
                           for s in bench.tracer.spans])
         metrics = {k: {"value": bench.layer[k], "unit": unit}
-                   for k, (unit, _better) in LAYER_METRICS.items()}
+                   for k, unit in layer_units.items()}
     out_dir = os.path.join(ROOT, ".perfbench_out")
     os.makedirs(out_dir, exist_ok=True)
     with open(os.path.join(out_dir, f"{args.workload}-seed{args.seed}"
@@ -722,6 +716,7 @@ def report(args, bench: Bench, weather: dict) -> int:
     print(json.dumps({"correct": failed == 0, "attempted": bench.attempted,
                       "failed": failed, "metrics": metrics}))
     return 0 if failed == 0 else 1
+
 
 if __name__ == "__main__":
     sys.exit(main())
