@@ -11,7 +11,9 @@ single-process BM25 reference, which the engine must match bit for bit
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
 from collections import Counter
 from dataclasses import dataclass
 
@@ -27,50 +29,88 @@ _WORD_RE = re.compile(r"[a-z][a-z0-9]*")
 
 @dataclass(frozen=True)
 class Scale:
-    """Corpus and batch sizes. ``n_convs`` conversations are indexed;
-    ``n_append_convs`` more arrive later, split evenly into
-    ``n_append_batches`` append micro-batches."""
+    """Corpus and batch sizes. ``n_convs`` conversations are generated and
+    cut, in (conv_id, turn_idx) order, into exactly ``n_base_turns`` indexed
+    turns followed by ``n_append_batches`` append micro-batches of exactly
+    ``append_turns`` turns; the rest is dropped. Fixed turn counts keep the
+    work of a build and of an append the same on every seed, so the
+    throughputs do not move with the seed's conversation lengths."""
 
     n_convs: int
-    n_append_convs: int
+    n_base_turns: int
     n_append_batches: int
+    append_turns: int
     batch_size: int  # queries per search_many batch
-    n_delete_convs: int  # conversations tombstoned by delete_by_query
+    n_delete_turns: int  # turns tombstoned by delete_by_query
 
 
 SCALES = {
-    "full": Scale(n_convs=800, n_append_convs=90, n_append_batches=1,
-                  batch_size=16, n_delete_convs=20),
+    # 1,100 conversations give 7,550 turns on average (sd about 180), so
+    # the 5,500 taken are more than 10 sd below what any seed generates
+    "full": Scale(n_convs=1100, n_base_turns=5000, n_append_batches=1,
+                  append_turns=500, batch_size=16, n_delete_turns=120),
     # the self-test's tiny corpus: same code paths, seconds per phase
-    "tiny": Scale(n_convs=150, n_append_convs=40, n_append_batches=2,
-                  batch_size=8, n_delete_convs=5),
+    "tiny": Scale(n_convs=230, n_base_turns=900, n_append_batches=2,
+                  append_turns=120, batch_size=8, n_delete_turns=30),
 }
-
-
-def conv_name(i: int) -> str:
-    """conv_id of conversation ``i`` as corpus.synth_transcripts writes it."""
-    return f"conv_{i:08d}"
 
 
 def write_corpus(spark, seed: int, scale: Scale, n_parts: int,
                  out_dir: str) -> list[str]:
-    """Generate every conversation of the run in one Spark job and write it
-    as parquet, one directory per ingest step: ``part=0`` is the base corpus,
-    ``part=1`` onwards the append micro-batches. Returns the directories."""
-    from pyspark.sql import functions as F
+    """Generate every conversation of the run in one Spark job, then cut it
+    into ``part=0`` (the base corpus) and ``part=1`` onwards (the append
+    micro-batches), each written as ``n_parts`` parquet files. Returns the
+    part directories."""
+    import pyarrow.parquet as pq
 
     from research_engine_spark.corpus import synth_transcripts
 
-    total = scale.n_convs + scale.n_append_convs
-    idx = F.substring("conv_id", 6, 8).cast("int")
-    batch = ((idx - scale.n_convs) * scale.n_append_batches
-             / scale.n_append_convs).cast("int") + 1
-    (synth_transcripts(spark, n_convs=total, seed=seed,
-                       burstiness=BURSTINESS, n_partitions=n_parts)
-     .withColumn("part", F.when(idx < scale.n_convs, 0).otherwise(batch))
-     .write.partitionBy("part").parquet(out_dir))
-    return [f"{out_dir}/part={i}"
-            for i in range(scale.n_append_batches + 1)]
+    staging = f"{out_dir}/generated"
+    synth_transcripts(spark, n_convs=scale.n_convs, seed=seed,
+                      burstiness=BURSTINESS, n_partitions=n_parts
+                      ).write.parquet(staging)
+    table = pq.read_table(staging).sort_by(
+        [("conv_id", "ascending"), ("turn_idx", "ascending")])
+    sizes = [scale.n_base_turns] + [scale.append_turns] * (
+        scale.n_append_batches)
+    if table.num_rows < sum(sizes):
+        raise RuntimeError(f"seed {seed} generated {table.num_rows} turns, "
+                           f"fewer than the {sum(sizes)} the scale takes")
+    parts, start = [], 0
+    for i, size in enumerate(sizes):
+        part = f"{out_dir}/part={i}"
+        os.makedirs(part)
+        for j in range(n_parts):
+            lo = start + size * j // n_parts
+            hi = start + size * (j + 1) // n_parts
+            # microsecond timestamps, as Spark writes and reads them
+            pq.write_table(table.slice(lo, hi - lo),
+                           f"{part}/part-{j:05d}.parquet",
+                           coerce_timestamps="us")
+        parts.append(part)
+        start += size
+    shutil.rmtree(staging)
+    return parts
+
+
+def delete_victims(seed: int, corpus: pd.DataFrame, n_turns: int) -> list[str]:
+    """Seeded whole conversations to tombstone, exactly ``n_turns`` turns
+    in all, so the delete and the purging compaction do the same work on
+    every seed: conversations in seeded order, each taken if it still
+    fits."""
+    rng = np.random.default_rng(np.random.SeedSequence([seed, 0xDE1]))
+    sizes = corpus["conv_id"].value_counts().sort_index()
+    victims, left = [], n_turns
+    for i in rng.permutation(len(sizes)):
+        if left == 0:
+            break
+        if sizes.iloc[i] <= left:
+            victims.append(str(sizes.index[i]))
+            left -= int(sizes.iloc[i])
+    if left:
+        raise RuntimeError(f"seed {seed}: no conversations sum to "
+                           f"{n_turns} turns")
+    return sorted(victims)
 
 
 @dataclass

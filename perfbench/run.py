@@ -44,7 +44,7 @@ WORKLOADS = ("serve", "scan")
 BATCH_REPEATS = {"serve": 6, "scan": 2}
 PASS_S = 8  # nominal length of one pass on a 4-vCPU host
 SETUP_PASSES = 3  # timed reader open + first answer, median taken
-PROBE_REPS = 2  # timed probe passes after the delete, median taken
+PROBE_REPS = 1  # timed probe passes after the delete; median probe wall
 # measured and printed beside the end-to-end metrics, but not gated: a run
 # holds 28 (serve) or 7 (scan) single requests, so p95 is near the maximum
 REPORTED = {"query_p95_ms": "ms"}
@@ -178,10 +178,9 @@ class Bench:
     def make_inputs(self) -> None:
         """The seeded corpus and queries, and every expected result the
         oracle gives: all computed here, before anything is timed."""
-        import numpy as np
         import pandas as pd
 
-        from inputs import (TOP_K, Expected, conv_name, make_queries,
+        from inputs import (TOP_K, Expected, delete_victims, make_queries,
                             write_corpus)
         from research_engine_spark.oracle import BM25Oracle
 
@@ -212,12 +211,8 @@ class Bench:
 
         # the lifecycle: tombstone whole conversations, base or appended
         grown = pd.concat(frames, ignore_index=True)
-        self.appended_turns = len(grown) - self.base_turns
-        rng = np.random.default_rng(np.random.SeedSequence(
-            [self.args.seed, 0xDE1]))
-        n_total = self.scale.n_convs + self.scale.n_append_convs
-        victims = sorted(conv_name(int(i)) for i in rng.choice(
-            n_total, size=self.scale.n_delete_convs, replace=False))
+        victims = delete_victims(self.args.seed, grown,
+                                 self.scale.n_delete_turns)
         self.delete_where = "conv_id IN ({})".format(
             ", ".join(f"'{v}'" for v in victims))
         dead = grown["conv_id"].isin(victims)
@@ -404,11 +399,15 @@ class Bench:
         from inputs import TOP_K
 
         e = self.engine
-        self.settle()
-        walls = [self.call("append", lambda p=p: e.append(
-            self.spark.read.parquet(p), n_partitions=self.n))[1]
-            for p in self.parts[1:]]
-        self.m["append_turns_per_s"] = self.appended_turns / sum(walls)
+        walls = []
+        for p in self.parts[1:]:
+            self.settle()
+            walls.append(self.call("append", lambda p=p: e.append(
+                self.spark.read.parquet(p), n_partitions=self.n))[1])
+        # every micro-batch holds the same number of turns, so the
+        # throughput does not move with the seed's conversation lengths
+        self.m["append_turns_per_s"] = (self.scale.append_turns
+                                        * len(walls) / sum(walls))
         self.layer["indexer.append_s"] = statistics.median(walls)
 
         n_del, wall = self.call("delete", lambda: e.delete_by_query(
