@@ -162,9 +162,8 @@ class ResearchEngine:
 
         r = self.reader
         stats = dict(r.stats)
-        term_ds = pads.dataset(
-            _os.path.join(self.index_dir, "term_stats"),
-            format="parquet", partitioning="hive")
+        term_ds = pads.dataset(r._path("term_stats"), format="parquet",
+                               partitioning="hive")
         disk = 0
         for root, _dirs, files in _os.walk(self.index_dir):
             disk += sum(_os.path.getsize(_os.path.join(root, f))
@@ -266,14 +265,8 @@ class ResearchEngine:
         the reference's ``fuzziness: AUTO`` edit-distance expansion
         (es_search_final.py:21)."""
         if bool_should:
-            hits = bool_should_search(self.reader, query, k=top_k, k1=k1, b=b)
-            docs = self.reader.docs.select(
-                "doc_id", "conv_id", "turn_idx", "text")
-            from pyspark.sql import functions as F
-
-            hits = (docs.join(F.broadcast(hits), "doc_id")
-                    .select("doc_id", "score", "conv_id", "turn_idx", "text")
-                    .orderBy(F.desc("score"), F.asc("doc_id")))
+            hits = bool_should_search(self.reader, query, k=top_k, k1=k1,
+                                      b=b, with_text=True)
         else:
             hits = search(self.reader, query, k=top_k, k1=k1, b=b,
                           prune=prune, with_text=True, fuzzy=fuzzy)

@@ -149,8 +149,9 @@ from .scorer import (
     _fuzzy_term_meta,
     _phrase_prefix_driver_local,
     _phrase_scores_driver_local,
+    _hits_df,
     _term_meta,
-    _topk_pd_to_df,
+    _topk_pd,
     phrase_prefix_scores,
     phrase_scores,
     search,
@@ -298,21 +299,17 @@ def _doc_text_arrow(reader: IndexReader, doc_id: int) -> str:
     fenced docs table — zero Spark jobs; the more_like_this like-by-_id
     fetch). Raises on a missing or deleted id."""
     import pyarrow.compute as pc
-    import pyarrow.dataset as pads
 
     doc_id = int(doc_id)
     if reader.has_deletes and _is_deleted_arrow(reader, doc_id):
         raise ESQueryError(f"more_like_this like _id {doc_id} is deleted")
-    ds = pads.dataset(reader._path("docs"), format="parquet")
+    ds = reader.docs_arrow()
     if "text" not in ds.schema.names:
         raise ESQueryError(
             "more_like_this by _id needs a 'text' docs column; index has "
             f"{sorted(ds.schema.names)}")
-    flt = pc.field("doc_id") == doc_id
-    nxt = reader.stats.get("next_doc_id")
-    if reader._committed is not None and nxt is not None:
-        flt = flt & (pc.field("doc_id") < int(nxt))
-    t = ds.to_table(columns=["text"], filter=flt)
+    t = ds.to_table(columns=["text"],
+                    filter=reader._docs_fence(pc.field("doc_id") == doc_id))
     if t.num_rows == 0:
         raise ESQueryError(f"more_like_this like _id {doc_id} not found")
     return str(t["text"][0].as_py())
@@ -323,15 +320,12 @@ def _ids_present_arrow(reader: IndexReader, values: list[int]) -> np.ndarray:
     driver-side pyarrow probe, O(matching row groups) per the footer
     range stats (values is a user-provided list, never corpus-sized)."""
     import pyarrow.compute as pc
-    import pyarrow.dataset as pads
 
-    ds = pads.dataset(reader._path("docs"), format="parquet")
-    flt = pc.field("doc_id").isin([int(v) for v in values])
-    nxt = reader.stats.get("next_doc_id")
-    if reader._committed is not None and nxt is not None:
-        flt = flt & (pc.field("doc_id") < int(nxt))
-    ids = np.unique(ds.to_table(columns=["doc_id"], filter=flt)["doc_id"]
-                    .to_numpy(zero_copy_only=False).astype(np.int64))
+    flt = reader._docs_fence(
+        pc.field("doc_id").isin([int(v) for v in values]))
+    col = reader.docs_arrow().to_table(columns=["doc_id"],
+                                       filter=flt)["doc_id"]
+    ids = np.unique(col.to_numpy(zero_copy_only=False).astype(np.int64))
     if reader.has_deletes and ids.size:
         ids = np.array([i for i in ids.tolist()
                         if not _is_deleted_arrow(reader, int(i))],
@@ -2407,7 +2401,8 @@ def _eval_body(ctx: _Ctx, body: dict, label: str = "body") -> DataFrame:
                     kind="mergesort")
                 cur = pd.concat([win, rest], ignore_index=True)
             page = cur.iloc[frm:frm + k]
-            return _topk_pd_to_df(ctx.spark, page[["doc_id", "score"]], k)
+            return _hits_df(ctx.spark,
+                            _topk_pd(page[["doc_id", "score"]], k))
         # distributed: window = TakeOrderedAndProject; the rescore
         # clause frame is its own match set (never corpus-sized),
         # joined to the <= window_size-row window
@@ -2508,7 +2503,8 @@ def _eval_body(ctx: _Ctx, body: dict, label: str = "body") -> DataFrame:
         ordered = local.sort_values(
             ["score", "doc_id"], ascending=[False, True],
             kind="mergesort")[frm:frm + k]
-        return _topk_pd_to_df(ctx.spark, ordered[["doc_id", "score"]], k)
+        return _hits_df(ctx.spark,
+                        _topk_pd(ordered[["doc_id", "score"]], k))
     scored = _clause_df(ctx, body["query"])
     if ms is not None:
         scored = scored.where(F.col("score") >= F.lit(ms))

@@ -228,6 +228,11 @@ class IndexReader:
         # (salt, block_id, max_tf, min_dl) frames; bounded by the same
         # BLOCK_META_BUDGET that gates reading them at all)
         self._block_meta_cache: dict[str, pd.DataFrame] = {}
+        # forward-table pyarrow dataset + its footer's per-row-group
+        # doc_id ranges (the driver-side text fetch, _with_text). Cleared
+        # by refresh(): an append adds docs files.
+        self._docs_ds = None
+        self._docs_rgs = None
         # tombstone awareness (operators/deletes.py): a cheap parquet
         # footer count at construction/refresh; >0 switches every search
         # path to anti-join its candidates against the tombstone set
@@ -265,6 +270,46 @@ class IndexReader:
 
         return pads.field("snapshot_id").isin(self._committed)
 
+    def _buckets_arrow(self, table: str, terms: list[str],
+                       columns: list[str], flt) -> pd.DataFrame:
+        """``columns`` of the rows passing ``flt`` and the segment fence
+        in the bucket partitions of ``table`` (postings or term_stats)
+        that hold ``terms`` — a driver-side pyarrow read with parquet
+        row-group stat skipping, no Spark job."""
+        import pyarrow.dataset as pads
+
+        seg = self._seg_expr()
+        if seg is not None:
+            flt = flt & seg
+        frames = []
+        for bkt in sorted(set(self.bucket_of(terms).values())):
+            p = os.path.join(self._path(table), f"bucket={bkt}")
+            if os.path.exists(p):
+                frames.append(pads.dataset(p, format="parquet").to_table(
+                    columns=columns, filter=flt).to_pandas())
+        if not frames:
+            return pd.DataFrame(columns=columns)
+        return pd.concat(frames, ignore_index=True)
+
+    def docs_arrow(self):
+        """The pinned generation's forward docs table as a pyarrow dataset
+        (file listing memoised per reader; refresh() re-lists)."""
+        if self._docs_ds is None:
+            import pyarrow.dataset as pads
+
+            self._docs_ds = pads.dataset(self._path("docs"), format="parquet")
+        return self._docs_ds
+
+    def _docs_fence(self, flt):
+        """``flt`` AND the committed docs fence doc_id < next_doc_id — the
+        driver-side twin of the filter _tbl puts on the docs scan."""
+        nxt = self.stats.get("next_doc_id")
+        if self._committed is not None and nxt is not None:
+            import pyarrow.dataset as pads
+
+            flt = flt & (pads.field("doc_id") < int(nxt))
+        return flt
+
     def cache_postings(self, include_docs: bool = False,
                        eager: bool = True) -> "IndexReader":
         """Pin the postings table in executor storage for hot interactive
@@ -289,8 +334,9 @@ class IndexReader:
         are unaffected — they never touch the Spark scan.
 
         include_docs=True additionally pins the forward table + doc_stats
-        (the with_text join side — that join is otherwise a full forward
-        scan per query). eager=True materializes now (one count each) so
+        (the with_text join side on the distributed tiers, which scans
+        the forward table's text columns per query; the driver-local
+        tiers read their k docs rows with pyarrow instead). eager=True materializes now (one count each) so
         the first timed query doesn't pay the fill. Undone by uncache();
         refresh() also unpins (a mutated index invalidates cached blocks).
         """
@@ -392,25 +438,12 @@ class IndexReader:
         terms = list(dict.fromkeys(terms))
         missing = [t for t in terms if t not in self._term_cache]
         if missing:
-            buckets = sorted(set(self.bucket_of(missing).values()))
-            flt = pads.field("term").isin(missing)
-            seg = self._seg_expr()
-            if seg is not None:
-                flt = flt & seg
-            frames = []
-            for bkt in buckets:
-                p = os.path.join(self._path("term_stats"), f"bucket={bkt}")
-                if not os.path.exists(p):
-                    continue
-                ds = pads.dataset(p, format="parquet")
-                tbl = ds.to_table(
-                    columns=["term", "df", "cf", "max_tf", "min_dl"],
-                    filter=flt,
-                )
-                frames.append(tbl.to_pandas())
+            allts = self._buckets_arrow(
+                "term_stats", missing,
+                ["term", "df", "cf", "max_tf", "min_dl"],
+                pads.field("term").isin(missing))
             found: dict[str, tuple] = {}
-            if frames:
-                allts = pd.concat(frames, ignore_index=True)
+            if len(allts):
                 agg = (allts.groupby("term", as_index=False)
                        .agg(df=("df", "sum"), cf=("cf", "sum"),
                             max_tf=("max_tf", "max"),
@@ -675,6 +708,11 @@ def _sky_part_np(sky_tfs, sky_dls, avgdl: float, k1: float,
     return out
 
 
+_BLOCK_META_COLS = ["term", "salt", "block_id", "first_doc_id",
+                    "last_doc_id", "posting_count", "sky_tfs", "sky_dls"]
+_PAYLOAD_COLS = ["term", "doc_gaps", "tfs", "dls"]
+
+
 def _block_meta_arrow(reader: IndexReader,
                       terms: list[str]) -> pd.DataFrame | None:
     """Per-block metadata (term, salt, block_id, max_tf, min_dl) for the
@@ -694,34 +732,14 @@ def _block_meta_arrow(reader: IndexReader,
         have = sum(len(cache[t]) for t in terms if t in cache)
         if est + have > BLOCK_META_BUDGET:
             return None
-        buckets = sorted(set(reader.bucket_of(missing).values()))
-        cols = ["term", "salt", "block_id", "first_doc_id", "last_doc_id",
-                "posting_count", "sky_tfs", "sky_dls"]
-        flt = pads.field("term").isin(missing)
-        seg = reader._seg_expr()
-        if seg is not None:
-            flt = flt & seg
-        frames = []
-        for bkt in buckets:
-            p = os.path.join(reader._path("postings"), f"bucket={bkt}")
-            if not os.path.exists(p):
-                continue
-            ds = pads.dataset(p, format="parquet")
-            tbl = ds.to_table(
-                columns=cols,
-                filter=flt,
-            )
-            frames.append(tbl.to_pandas())
-        allb = (pd.concat(frames, ignore_index=True) if frames
-                else pd.DataFrame(columns=cols))
+        allb = reader._buckets_arrow(
+            "postings", missing, _BLOCK_META_COLS,
+            pads.field("term").isin(missing))
         for t in missing:
             cache[t] = allb[allb["term"] == t].reset_index(drop=True)
     parts = [cache[t] for t in terms if not cache[t].empty]
     if not parts:
-        return pd.DataFrame(columns=["term", "salt", "block_id",
-                                     "first_doc_id", "last_doc_id",
-                                     "posting_count", "sky_tfs",
-                                     "sky_dls"])
+        return pd.DataFrame(columns=_BLOCK_META_COLS)
     return pd.concat(parts, ignore_index=True)
 
 
@@ -735,26 +753,11 @@ def _fetch_blocks_arrow(reader: IndexReader,
 
     import pyarrow.dataset as pads
 
-    terms = sorted({t for t, _, _ in keys})
-    buckets = sorted(set(reader.bucket_of(terms).values()))
     expr = functools.reduce(operator.or_, [
         (pads.field("term") == t) & (pads.field("salt") == int(s))
         & (pads.field("block_id") == int(bk)) for t, s, bk in keys])
-    seg = reader._seg_expr()
-    if seg is not None:
-        expr = expr & seg
-    frames = []
-    for bkt in buckets:
-        p = os.path.join(reader._path("postings"), f"bucket={bkt}")
-        if not os.path.exists(p):
-            continue
-        ds = pads.dataset(p, format="parquet")
-        tbl = ds.to_table(columns=["term", "doc_gaps", "tfs", "dls"],
-                          filter=expr)
-        frames.append(tbl.to_pandas())
-    if not frames:
-        return pd.DataFrame(columns=["term", "doc_gaps", "tfs", "dls"])
-    return pd.concat(frames, ignore_index=True)
+    return reader._buckets_arrow(
+        "postings", sorted({t for t, _, _ in keys}), _PAYLOAD_COLS, expr)
 
 
 def _deleted_ids_arrow(reader: IndexReader) -> np.ndarray:
@@ -796,23 +799,8 @@ def _fetch_term_blocks_arrow(reader: IndexReader,
     files so non-matching row groups are skipped)."""
     import pyarrow.dataset as pads
 
-    buckets = sorted(set(reader.bucket_of(terms).values()))
-    flt = pads.field("term").isin(terms)
-    seg = reader._seg_expr()
-    if seg is not None:
-        flt = flt & seg
-    frames = []
-    for bkt in buckets:
-        p = os.path.join(reader._path("postings"), f"bucket={bkt}")
-        if not os.path.exists(p):
-            continue
-        ds = pads.dataset(p, format="parquet")
-        tbl = ds.to_table(columns=["term", "doc_gaps", "tfs", "dls"],
-                          filter=flt)
-        frames.append(tbl.to_pandas())
-    if not frames:
-        return pd.DataFrame(columns=["term", "doc_gaps", "tfs", "dls"])
-    return pd.concat(frames, ignore_index=True)
+    return reader._buckets_arrow("postings", terms, _PAYLOAD_COLS,
+                                 pads.field("term").isin(terms))
 
 
 def _driver_local_topk_pd(reader: IndexReader, meta: pd.DataFrame,
@@ -940,41 +928,126 @@ def _driver_local_topk_pd(reader: IndexReader, meta: pd.DataFrame,
     return out
 
 
-def _values_df(spark: SparkSession, rows_sql: list[str],
-               names: str) -> DataFrame:
-    """Local-relation result handoff: a VALUES literal parses to a
-    LocalRelation, so collect() is executeCollect — NO Spark job
-    (createDataFrame would parallelize the rows into an RDD and cost
-    one). repr(float) round-trips the exact double bits through the SQL
-    parser (shortest-repr IEEE754 round-trip; asserted in tests via
-    bit-identity)."""
-    vals = ", ".join(rows_sql)
-    return spark.sql(f"SELECT * FROM VALUES {vals} AS t({names})")
+def _hits_table(topk_pd: pd.DataFrame):
+    """pandas ([qid,] doc_id, score) hits as a pyarrow Table of
+    ([qid string,] doc_id int64, score float64)."""
+    import pyarrow as pa
+
+    cols = {"doc_id": topk_pd["doc_id"].to_numpy(np.int64),
+            "score": topk_pd["score"].to_numpy(np.float64)}
+    if "qid" in topk_pd.columns:
+        cols = {"qid": pa.array(topk_pd["qid"].astype(str).to_numpy(),
+                                pa.string()), **cols}
+    return pa.table(cols)
+
+
+def _hits_df(spark: SparkSession, topk_pd: pd.DataFrame) -> DataFrame:
+    """Local-relation result handoff of ordered pandas ([qid,] doc_id,
+    score) hits. createDataFrame of an Arrow table below
+    spark.sql.execution.arrow.localRelationThreshold is a LocalRelation,
+    so collect() runs NO Spark job, empty or not, and the doubles cross
+    bit-exact. A Python list (or an empty pandas frame) would be
+    parallelized into an RDD and cost one job."""
+    return spark.createDataFrame(_hits_table(topk_pd))
+
+
+# Driver-side text fetch bound (bytes): _with_text reads the docs row
+# groups whose footer doc_id [min, max] can hold a top-k id, so its cost
+# is their total (uncompressed) size, not k. The build writes docs in
+# input order, so docIDs are range-packed per file only when the input is
+# (conv_id, turn_idx)-ordered; otherwise one footer range can span the
+# corpus and the probe would be a driver-side full scan. pyarrow reads a
+# 56.6 MB snappy row group of synthetic turns (4 columns, 15-id filter)
+# in 90-130 ms on a 4-vCPU host, so 32 MiB costs ~60 ms: under the
+# ~100 ms floor of the Spark broadcast join it replaces (4 jobs per text
+# request on that host), with a transient driver allocation of tens of
+# MB. Beyond it the join runs, on the executors.
+DRIVER_TEXT_MAX_BYTES = 32 << 20
+
+_TEXT_COLS = ["doc_id", "conv_id", "turn_idx", "text"]
+
+
+def _docs_row_groups(reader: IndexReader) -> tuple:
+    """(fragments, fragment index, row-group id, doc_id min, doc_id max,
+    bytes) of every docs row group, from the parquet footers; memoised on
+    the reader with its docs dataset."""
+    if reader._docs_rgs is None:
+        frags = list(reader.docs_arrow().get_fragments())
+        rows = []
+        for i, frag in enumerate(frags):
+            md = frag.metadata
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                st = next(rg.column(j).statistics
+                          for j in range(rg.num_columns)
+                          if rg.column(j).path_in_schema == "doc_id")
+                known = st is not None and st.has_min_max
+                rows.append((i, g, st.min if known else -(1 << 63),
+                             st.max if known else (1 << 63) - 1,
+                             rg.total_byte_size))
+        cols = np.array(rows, dtype=np.int64).reshape(-1, 5).T
+        reader._docs_rgs = (frags, *cols)
+    return reader._docs_rgs
+
+
+def _docs_text_arrow(reader: IndexReader, ids: np.ndarray):
+    """(doc_id, conv_id, turn_idx, text) of ``ids`` as a pyarrow Table,
+    read from only the docs row groups whose doc_id range can hold one,
+    under the committed fence. None when those row groups exceed
+    DRIVER_TEXT_MAX_BYTES (the caller joins in Spark instead)."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    frags, fi, ri, lo, hi, nbytes = _docs_row_groups(reader)
+    u = np.unique(ids)
+    hit = np.searchsorted(u, hi, "right") > np.searchsorted(u, lo)
+    if int(nbytes[hit].sum()) > DRIVER_TEXT_MAX_BYTES:
+        return None
+    schema = reader.docs_arrow().schema
+    flt = reader._docs_fence(pads.field("doc_id").isin(u.tolist()))
+    parts = [frags[f].subset(row_group_ids=ri[hit & (fi == f)].tolist())
+             .to_table(schema=schema, columns=_TEXT_COLS, filter=flt)
+             for f in np.unique(fi[hit])]
+    return (pa.concat_tables(parts) if parts
+            else schema.empty_table().select(_TEXT_COLS))
+
+
+def _with_text(reader: IndexReader, topk) -> DataFrame:
+    """Top-k hits ``([qid,] doc_id, score)`` -> the result with text,
+    ``([qid,] doc_id, score, conv_id, turn_idx, text)`` in ([qid,] score
+    desc, doc_id asc) order.
+
+    A pandas top-k (the driver-local tiers, rows already in result
+    order) fetches its k docs rows with pyarrow and hands the result to
+    Spark as an Arrow LocalRelation: zero Spark jobs. A Spark DataFrame
+    top-k (the distributed tiers), or one whose docs row groups exceed
+    DRIVER_TEXT_MAX_BYTES, broadcast-joins the k rows against the
+    forward table instead."""
+    keys = [c for c in topk.columns if c == "qid"]
+    if isinstance(topk, pd.DataFrame):
+        d = topk["doc_id"].to_numpy(np.int64)
+        docs = _docs_text_arrow(reader, d)
+        if docs is not None:
+            at = pd.Index(docs["doc_id"].to_numpy()).get_indexer(d)
+            found = at >= 0  # inner-join semantics, like the Spark join
+            rows = docs.take(at[found])
+            out = _hits_table(topk[found])
+            for c in ("conv_id", "turn_idx", "text"):
+                out = out.append_column(c, rows[c])
+            return reader.spark.createDataFrame(out)
+        topk = _hits_df(reader.spark, topk)
+    return (reader.docs.select(*_TEXT_COLS).join(F.broadcast(topk), "doc_id")
+            .select(*keys, "doc_id", "score", "conv_id", "turn_idx", "text")
+            .orderBy(*keys, F.desc("score"), F.asc("doc_id")))
 
 
 def _local_result(reader: IndexReader, topk_pd: pd.DataFrame,
                   with_text: bool) -> DataFrame:
-    """Driver-computed top-k rows -> result DataFrame (a VALUES
-    LocalRelation: zero jobs without text; one k-row broadcast join
-    against the forward table with)."""
-    spark = reader.spark
-    schema = "doc_id bigint, score double"
-    if topk_pd.empty:
-        if with_text:
-            return spark.createDataFrame(
-                [], schema + ", conv_id string, turn_idx int, text string")
-        return spark.createDataFrame([], schema)
-    topk = _values_df(spark, [
-        f"(CAST({int(r.doc_id)} AS BIGINT),"
-        f" CAST({float(r.score)!r} AS DOUBLE))"
-        for r in topk_pd.itertuples(index=False)],
-        "doc_id, score")
-    if not with_text:
-        return topk
-    docs_tbl = reader.docs.select("doc_id", "conv_id", "turn_idx", "text")
-    return (docs_tbl.join(F.broadcast(topk), "doc_id")
-            .select("doc_id", "score", "conv_id", "turn_idx", "text")
-            .orderBy(F.desc("score"), F.asc("doc_id")))
+    """Driver-computed top-k rows -> result DataFrame: zero Spark jobs
+    with or without text."""
+    if with_text:
+        return _with_text(reader, topk_pd[["doc_id", "score"]])
+    return _hits_df(reader.spark, topk_pd)
 
 
 def _search_driver_local(reader: IndexReader, meta: pd.DataFrame,
@@ -1011,24 +1084,9 @@ def _fetch_blocks_grouped_arrow(reader: IndexReader,
                      & (pads.field("salt") == int(s))
                      & pads.field("block_id").isin(
                          [int(x) for x in grp["block_id"]]))
-    expr = functools.reduce(operator.or_, parts)
-    seg = reader._seg_expr()
-    if seg is not None:
-        expr = expr & seg
-    buckets = sorted(set(reader.bucket_of(
-        sel["term"].unique().tolist()).values()))
-    frames = []
-    for bkt in buckets:
-        p = os.path.join(reader._path("postings"), f"bucket={bkt}")
-        if not os.path.exists(p):
-            continue
-        ds = pads.dataset(p, format="parquet")
-        frames.append(ds.to_table(
-            columns=["term", "doc_gaps", "tfs", "dls"],
-            filter=expr).to_pandas())
-    if not frames:
-        return pd.DataFrame(columns=["term", "doc_gaps", "tfs", "dls"])
-    return pd.concat(frames, ignore_index=True)
+    return reader._buckets_arrow(
+        "postings", sel["term"].unique().tolist(), _PAYLOAD_COLS,
+        functools.reduce(operator.or_, parts))
 
 
 def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
@@ -1081,7 +1139,7 @@ def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
                 np.partition(tb, tb.size - k)[tb.size - k]))
     keys = _best_block_keys(bmeta, n_blocks_theta, avgdl, k1, b)
     rows = (_fetch_blocks_arrow(reader, keys) if keys
-            else pd.DataFrame(columns=["term", "doc_gaps", "tfs", "dls"]))
+            else pd.DataFrame(columns=_PAYLOAD_COLS))
     theta = max(theta, _theta_from_rows(rows, meta, avgdl, k, k1, b))
     if not np.isfinite(theta):
         return None
@@ -1649,7 +1707,7 @@ def search(
             # lower bounds.
             keys = _best_block_keys(bmeta, n_blocks_theta, avgdl, k1, b)
             rows = _fetch_blocks_arrow(reader, keys) if keys else \
-                pd.DataFrame(columns=["term", "doc_gaps", "tfs", "dls"])
+                pd.DataFrame(columns=_PAYLOAD_COLS)
             theta = max(theta_meta, _theta_from_rows(
                 rows, meta, avgdl, k, k1, b))
             # doc-range-aligned skip bounds (block-level BMW): the other
@@ -1744,14 +1802,7 @@ def search(
                         .select("doc_id", F.col("partial").alias("score"))
                         .orderBy(F.desc("score"), F.asc("doc_id"))
                         .limit(int(k)))
-                if not with_text:
-                    return topk
-                docs = reader.docs.select(
-                    "doc_id", "conv_id", "turn_idx", "text")
-                return (docs.join(F.broadcast(topk), "doc_id")
-                        .select("doc_id", "score", "conv_id", "turn_idx",
-                                "text")
-                        .orderBy(F.desc("score"), F.asc("doc_id")))
+                return _with_text(reader, topk) if with_text else topk
             # persisted: BOTH the θ'' collect and the candidate filter
             # consume approx — without it each action re-runs the decode
             # gub ledger: a FULLY-decoded term (every block of it kept)
@@ -1825,15 +1876,8 @@ def search(
                 topk = spark.createDataFrame(
                     topk_rows, "doc_id bigint, score double")
 
-    if not with_text:
-        return topk
-    docs = reader.docs.select("doc_id", "conv_id", "turn_idx", "text")
-    # J2: k-row hits broadcast against the forward docs table.
-    return (
-        docs.join(F.broadcast(topk), "doc_id")
-        .select("doc_id", "score", "conv_id", "turn_idx", "text")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    # J2: k-row hits broadcast against the forward docs table
+    return _with_text(reader, topk) if with_text else topk
 
 
 # ---------------------------------------------------------------------------
@@ -1956,29 +2000,10 @@ def search_many(
             <= reader.driver_local_max_postings):
         topk_pd = _driver_local_topk_pd(reader, allmeta, k, k1, b)
         if topk_pd is not None:
-            if topk_pd.empty:
-                return spark.createDataFrame([], out_cols)
-            if len(topk_pd) <= 2048 and not with_text:
-                # rows are already in (qid, score desc, doc_id) order —
-                # a VALUES LocalRelation preserves it and collect() is
-                # executeCollect: zero Spark jobs for the whole batch
-                return _values_df(spark, [
-                    "('{}', CAST({} AS BIGINT), CAST({!r} AS DOUBLE))"
-                    .format(str(r.qid).replace("'", "''"),
-                            int(r.doc_id), float(r.score))
-                    for r in topk_pd.itertuples(index=False)],
-                    "qid, doc_id, score")
-            # huge batches / text fetch: one tiny local-rows job (beats
-            # a megabyte SQL string through the parser)
-            res = spark.createDataFrame(
-                topk_pd, "qid string, doc_id bigint, score double")
-            if with_text:
-                docs = reader.docs.select(
-                    "doc_id", "conv_id", "turn_idx", "text")
-                res = docs.join(F.broadcast(res), "doc_id").select(
-                    "qid", "doc_id", "score", "conv_id", "turn_idx",
-                    "text")
-            return res.orderBy("qid", F.desc("score"), F.asc("doc_id"))
+            # rows are already in (qid, score desc, doc_id asc) order and
+            # the Arrow LocalRelation keeps it: zero Spark jobs per batch
+            return (_with_text(reader, topk_pd) if with_text
+                    else _hits_df(spark, topk_pd))
 
     buckets = sorted({int(v) for v in reader.bucket_of(terms).values()})
     avgdl = reader.stats["avgdl"]
@@ -2026,9 +2051,7 @@ def search_many(
         .filter(F.col("rn2") <= int(k)).drop("rn2")
     )
     if with_text:
-        docs = reader.docs.select("doc_id", "conv_id", "turn_idx", "text")
-        topk = docs.join(F.broadcast(topk), "doc_id").select(
-            "qid", "doc_id", "score", "conv_id", "turn_idx", "text")
+        return _with_text(reader, topk)
     return topk.orderBy("qid", F.desc("score"), F.asc("doc_id"))
 
 
@@ -2127,23 +2150,8 @@ def _positions_local(reader: IndexReader, terms: list[str]):
 
     import pyarrow.dataset as pads
 
-    buckets = sorted(set(reader.bucket_of(terms).values()))
-    flt = pads.field("term").isin(terms)
-    seg = reader._seg_expr()
-    if seg is not None:
-        flt = flt & seg
-    frames = []
-    for bkt in buckets:
-        p = os.path.join(reader._path("postings"), f"bucket={bkt}")
-        if not os.path.exists(p):
-            continue
-        ds = pads.dataset(p, format="parquet")
-        frames.append(ds.to_table(
-            columns=["term", "doc_gaps", "tfs", "dls", "poss"],
-            filter=flt).to_pandas())
-    rows = (pd.concat(frames, ignore_index=True) if frames
-            else pd.DataFrame(
-                columns=["term", "doc_gaps", "tfs", "dls", "poss"]))
+    rows = reader._buckets_arrow("postings", terms, _PAYLOAD_COLS + ["poss"],
+                                 pads.field("term").isin(terms))
     if not len(rows):
         return {}, np.empty(0, np.int64), np.empty(0, np.int64)
     # batch decode (r6, guide §4.2): gaps/tfs/dls in one numpy pass, the
@@ -2479,19 +2487,12 @@ def phrase_prefix_scores(reader: IndexReader, phrase: str,
         match, schema="doc_id bigint, score double"))
 
 
-def _topk_pd_to_df(spark: SparkSession, pdf: pd.DataFrame,
-                   k: int) -> DataFrame:
-    """(score desc, doc_id asc) top-k of a pandas (doc_id, score) set as
-    a job-free VALUES LocalRelation (createDataFrame for the empty
-    case)."""
-    if pdf.empty:
-        return spark.createDataFrame([], "doc_id bigint, score double")
-    d = pdf["doc_id"].to_numpy(np.int64)
-    s = pdf["score"].to_numpy(np.float64)
-    top = np.lexsort((d, -s))[:int(k)]
-    return _values_df(spark, [
-        f"(CAST({int(d[i])} AS BIGINT), CAST({float(s[i])!r} AS DOUBLE))"
-        for i in top], "doc_id, score")
+def _topk_pd(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
+    """(score desc, doc_id asc) top-k rows of a pandas (doc_id, score)
+    set."""
+    top = np.lexsort((pdf["doc_id"].to_numpy(np.int64),
+                      -pdf["score"].to_numpy(np.float64)))[:int(k)]
+    return pdf.iloc[top]
 
 
 def phrase_search(reader: IndexReader, phrase: str, k: int = 10,
@@ -2499,33 +2500,30 @@ def phrase_search(reader: IndexReader, phrase: str, k: int = 10,
                   with_text: bool = False) -> DataFrame:
     """Top-k exact-phrase query (R3). Budget-sized phrases (Σ df of the
     phrase terms within reader.driver_local_max_postings) run entirely
-    driver-side — zero Spark jobs, bit-identical (test-guarded)."""
+    driver-side — zero Spark jobs with or without text, bit-identical
+    (test-guarded)."""
     local = _phrase_scores_driver_local(reader, phrase, k1, b)
     if local is not None:
-        topk = _topk_pd_to_df(reader.spark, local, k)
-    else:
-        scored = phrase_scores(reader, phrase, k1, b)
-        topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
-    if not with_text:
-        return topk
-    docs = reader.docs.select("doc_id", "conv_id", "turn_idx", "text")
-    return (docs.join(F.broadcast(topk), "doc_id")
-            .select("doc_id", "score", "conv_id", "turn_idx", "text")
-            .orderBy(F.desc("score"), F.asc("doc_id")))
+        return _local_result(reader, _topk_pd(local, k), with_text)
+    scored = phrase_scores(reader, phrase, k1, b)
+    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
+    return _with_text(reader, topk) if with_text else topk
 
 
 def bool_should_search(reader: IndexReader, query: str, k: int = 10,
                        phrase_boost: float = 2.0,
                        k1: float | None = None,
-                       b: float | None = None) -> DataFrame:
+                       b: float | None = None,
+                       with_text: bool = False) -> DataFrame:
     """R4: the reference's bool/should query shape (es_search_final.py:
     13-34): a match clause over all query terms PLUS a phrase clause with
     boost 2.0, minimum_should_match=1 — score = term_score +
     phrase_boost * phrase_score, docs matching either clause qualify.
     When BOTH clauses fit the driver-local budget the whole query runs
-    driver-side (zero Spark jobs), with the same coalesce-and-combine
-    float expression as the distributed full-outer join."""
-    spark = reader.spark
+    driver-side (zero Spark jobs, with or without text), with the same
+    coalesce-and-combine float expression as the distributed full-outer
+    join. with_text=True adds (conv_id, turn_idx, text) like
+    phrase_search."""
     k1r = reader.stats["k1"] if k1 is None else k1
     br = reader.stats["b"] if b is None else b
     local = None
@@ -2551,7 +2549,7 @@ def bool_should_search(reader: IndexReader, query: str, k: int = 10,
             combined = pd.DataFrame({
                 "doc_id": allids.to_numpy(np.int64),
                 "score": ts + float(phrase_boost) * ps})
-            return _topk_pd_to_df(spark, combined, k)
+            return _local_result(reader, _topk_pd(combined, k), with_text)
     terms_scored = search(reader, query, k=k, k1=k1, b=b, with_text=False,
                           _all_matches=True)
     ph_scored = phrase_scores(reader, query, k1, b)
@@ -2566,7 +2564,8 @@ def bool_should_search(reader: IndexReader, query: str, k: int = 10,
              * F.coalesce(F.col("pscore"), F.lit(0.0))).alias("score"),
         )
     )
-    return combined.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
+    topk = combined.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
+    return _with_text(reader, topk) if with_text else topk
 
 
 # ---------------------------------------------------------------------------
@@ -2582,25 +2581,11 @@ def _fetch_doc_blocks_arrow(reader: IndexReader, terms: list[str],
     blocks."""
     import pyarrow.dataset as pads
 
-    buckets = sorted(set(reader.bucket_of(terms).values()))
-    flt = (pads.field("term").isin(terms)
-           & (pads.field("first_doc_id") <= int(doc_id))
-           & (pads.field("last_doc_id") >= int(doc_id)))
-    seg = reader._seg_expr()
-    if seg is not None:
-        flt = flt & seg
-    frames = []
-    for bkt in buckets:
-        p = os.path.join(reader._path("postings"), f"bucket={bkt}")
-        if not os.path.exists(p):
-            continue
-        ds = pads.dataset(p, format="parquet")
-        tbl = ds.to_table(columns=["term", "doc_gaps", "tfs", "dls"],
-                          filter=flt)
-        frames.append(tbl.to_pandas())
-    if not frames:
-        return pd.DataFrame(columns=["term", "doc_gaps", "tfs", "dls"])
-    return pd.concat(frames, ignore_index=True)
+    return reader._buckets_arrow(
+        "postings", terms, _PAYLOAD_COLS,
+        pads.field("term").isin(terms)
+        & (pads.field("first_doc_id") <= int(doc_id))
+        & (pads.field("last_doc_id") >= int(doc_id)))
 
 
 def explain(reader: IndexReader, query: str, doc_id: int,

@@ -108,3 +108,18 @@ def test_termvectors(engine):
     assert rebuilt == toks
     with pytest.raises(Exception):
         engine.termvectors(10**12)
+
+
+def test_index_stats_after_compaction(spark, tmp_path):
+    """index_stats() reads the pinned generation's term_stats: after
+    compact() + gc() the flat table is gone."""
+    import pyarrow.dataset as pads
+
+    eng = ResearchEngine(spark, str(tmp_path / "idx"))
+    eng.build(synth_transcripts(spark, n_convs=20, seed=3), n_buckets=4)
+    eng.append(synth_transcripts(spark, n_convs=4, seed=77))
+    eng.compact()
+    eng.gc(keep=1)
+    want = pads.dataset(eng.reader._path("term_stats"), format="parquet",
+                        partitioning="hive").count_rows()
+    assert eng.index_stats()["n_terms_rows"] == want

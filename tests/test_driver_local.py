@@ -499,3 +499,134 @@ def test_blockmax_maxscore_essential_lists(spark, tmp_path):
     assert st["n_keep"] < st["n_blocks"], st
     assert list(loc["doc_id"]) == list(dist["doc_id"])
     assert np.allclose(loc["score"], dist["score"], rtol=0, atol=0)
+
+
+# ---------------------------------------------------------------------------
+# driver-side text fetch (_with_text): the driver-local tiers read their k
+# docs rows with pyarrow — the same rows, score bits included, as the
+# budget-0 reader's Spark join, and zero Spark jobs
+# ---------------------------------------------------------------------------
+
+import itertools  # noqa: E402
+import os  # noqa: E402
+
+from research_engine_spark.operators.scorer import (  # noqa: E402
+    phrase_search,
+    search_many,
+)
+
+TEXT_SCHEMA = ("struct<doc_id:bigint,score:double,conv_id:string,"
+               "turn_idx:int,text:string>")
+_probe_ids = itertools.count()
+
+
+def _rows_and_jobs(spark, make_df):
+    """(collected rows as tuples, Spark jobs launched) for one call."""
+    sc = spark.sparkContext
+    group = f"text_probe_{next(_probe_ids)}"
+    sc.setJobGroup(group, "probe")
+    try:
+        rows = [tuple(r) for r in make_df().collect()]
+    finally:
+        sc.setJobGroup(None, None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_TEXT_CALLS = {
+    "search": lambda r: search(r, "neural networks", k=10),
+    "fuzzy": lambda r: search(r, "neurel netwerk", k=10, fuzzy=True),
+    "search_many": lambda r: search_many(
+        r, {"a": "neural networks", "b": "machine learning"}, k=5,
+        with_text=True),
+}
+
+
+@pytest.mark.parametrize("call", sorted(_TEXT_CALLS))
+def test_text_paths_identical_zero_jobs(local_reader, reader, spark, call):
+    run = _TEXT_CALLS[call]
+    run(local_reader).collect()  # warm the term dictionary + docs memo
+    loc, jobs = _rows_and_jobs(spark, lambda: run(local_reader))
+    assert jobs == 0, f"{call} with text launched {jobs} Spark jobs"
+    dist, _ = _rows_and_jobs(spark, lambda: run(reader))
+    assert loc and loc == dist
+
+
+@pytest.mark.parametrize("call", ["phrase", "bool_should"])
+def test_positional_text_paths_identical_zero_jobs(pos_pair, spark, call):
+    from research_engine_spark.api import ResearchEngine
+
+    def run(r):
+        if call == "phrase":
+            return phrase_search(r, "neural networks", k=10, with_text=True)
+        eng = ResearchEngine(spark, r.index_dir)
+        eng._reader = r  # the facade over this pair's reader
+        return eng.search("neural networks", top_k=10, bool_should=True)
+
+    loc_r, dist_r = pos_pair
+    run(loc_r).collect()
+    loc, jobs = _rows_and_jobs(spark, lambda: run(loc_r))
+    assert jobs == 0, f"{call} with text launched {jobs} Spark jobs"
+    dist, _ = _rows_and_jobs(spark, lambda: run(dist_r))
+    assert loc and loc == dist
+
+
+def test_text_empty_result_keeps_schema(pos_pair, spark):
+    loc_r, _ = pos_pair
+    df = phrase_search(loc_r, "nonexistentterm networks", k=10,
+                       with_text=True)
+    assert df.schema.simpleString() == TEXT_SCHEMA
+    rows, jobs = _rows_and_jobs(spark, lambda: df)
+    assert rows == [] and jobs == 0
+
+
+def test_text_fetch_gate_fallback(local_reader, spark, monkeypatch):
+    """Over DRIVER_TEXT_MAX_BYTES the helper joins in Spark instead —
+    same rows."""
+    from research_engine_spark.operators import scorer
+
+    want, _ = _rows_and_jobs(
+        spark, lambda: search(local_reader, "neural networks", k=10))
+    monkeypatch.setattr(scorer, "DRIVER_TEXT_MAX_BYTES", 0)
+    got, jobs = _rows_and_jobs(
+        spark, lambda: search(local_reader, "neural networks", k=10))
+    assert jobs > 0  # the broadcast join ran
+    assert got == want
+
+
+def test_text_fetch_lifecycle(spark, tmp_path):
+    """The docs memo under tombstones, an append + refresh() (new docs
+    files) and a compaction (the reader re-pins docs@N)."""
+    from research_engine_spark.operators.deletes import delete_ids
+    from research_engine_spark.operators.generations import gc_generations
+    from research_engine_spark.operators.indexer import (append_segment,
+                                                          compact_index)
+
+    d = str(tmp_path / "idx")
+    build_index(synth_transcripts(spark, n_convs=40, seed=5), d,
+                n_buckets=4)
+    r = IndexReader(spark, d)
+
+    def check(query):
+        loc, jobs = _rows_and_jobs(spark, lambda: search(r, query, k=10))
+        dist = search(IndexReader(spark, d, driver_local_max_postings=0),
+                      query, k=10, prune=False).collect()
+        assert jobs == 0, f"{query!r} launched {jobs} Spark jobs"
+        assert loc and loc == [tuple(x) for x in dist]
+        return loc
+
+    victim = check("neural networks")[0][0]
+    delete_ids(d, [victim])
+    r.refresh()
+    assert victim not in {row[0] for row in check("neural networks")}
+    extra = (synth_transcripts(spark, n_convs=3, seed=99)
+             .withColumn("conv_id", F.concat(F.lit("new_"), "conv_id"))
+             .withColumn("text", F.concat("text", F.lit(" zebraquux"))))
+    append_segment(extra, d)
+    r.refresh()
+    assert all("zebraquux" in row[4] for row in check("zebraquux"))
+    compact_index(spark, d)
+    gc_generations(d, keep=1)
+    r.refresh()
+    assert r._path("docs") != os.path.join(d, "docs")
+    check("neural networks")
+    check("zebraquux")
