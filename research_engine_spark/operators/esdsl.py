@@ -149,9 +149,8 @@ from .scorer import (
     _fuzzy_term_meta,
     _phrase_prefix_driver_local,
     _phrase_scores_driver_local,
-    _hits_df,
     _term_meta,
-    _topk_pd,
+    _topk_df,
     phrase_prefix_scores,
     phrase_scores,
     search,
@@ -2401,8 +2400,7 @@ def _eval_body(ctx: _Ctx, body: dict, label: str = "body") -> DataFrame:
                     kind="mergesort")
                 cur = pd.concat([win, rest], ignore_index=True)
             page = cur.iloc[frm:frm + k]
-            return _hits_df(ctx.spark,
-                            _topk_pd(page[["doc_id", "score"]], k))
+            return _topk_df(ctx.spark, page, k)
         # distributed: window = TakeOrderedAndProject; the rescore
         # clause frame is its own match set (never corpus-sized),
         # joined to the <= window_size-row window
@@ -2503,8 +2501,7 @@ def _eval_body(ctx: _Ctx, body: dict, label: str = "body") -> DataFrame:
         ordered = local.sort_values(
             ["score", "doc_id"], ascending=[False, True],
             kind="mergesort")[frm:frm + k]
-        return _hits_df(ctx.spark,
-                        _topk_pd(ordered[["doc_id", "score"]], k))
+        return _topk_df(ctx.spark, ordered, k)
     scored = _clause_df(ctx, body["query"])
     if ms is not None:
         scored = scored.where(F.col("score") >= F.lit(ms))

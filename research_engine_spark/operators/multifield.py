@@ -135,9 +135,9 @@ def search_multifield(
     """
     local = _search_multifield_driver_local(mf, query, tie_breaker, k1, b)
     if local is not None:
-        from .scorer import _hits_df, _topk_pd
+        from .scorer import _topk_df
 
-        return _hits_df(mf.spark, _topk_pd(local, k))
+        return _topk_df(mf.spark, local, k)
     parts = []
     for fid, (field, reader) in enumerate(mf.readers.items()):
         boost = float(mf.boosts[field])

@@ -1045,8 +1045,9 @@ def _local_result(reader: IndexReader, topk_pd: pd.DataFrame,
                   with_text: bool) -> DataFrame:
     """Driver-computed top-k rows -> result DataFrame: zero Spark jobs
     with or without text."""
+    topk_pd = topk_pd[["doc_id", "score"]]
     if with_text:
-        return _with_text(reader, topk_pd[["doc_id", "score"]])
+        return _with_text(reader, topk_pd)
     return _hits_df(reader.spark, topk_pd)
 
 
@@ -2493,6 +2494,12 @@ def _topk_pd(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
     top = np.lexsort((pdf["doc_id"].to_numpy(np.int64),
                       -pdf["score"].to_numpy(np.float64)))[:int(k)]
     return pdf.iloc[top]
+
+
+def _topk_df(spark: SparkSession, pdf: pd.DataFrame, k: int) -> DataFrame:
+    """(score desc, doc_id asc) top-k of a pandas (doc_id, score) set as
+    a job-free Arrow LocalRelation (doc_id, score)."""
+    return _hits_df(spark, _topk_pd(pdf[["doc_id", "score"]], k))
 
 
 def phrase_search(reader: IndexReader, phrase: str, k: int = 10,

@@ -402,11 +402,13 @@ def _pair(spark, d, q, k, budget):
     """(serving frame + stats, distributed frame) for one query."""
     r_local = IndexReader(spark, d, driver_local_max_postings=budget)
     st: dict = {}
-    loc = _pdf(search(r_local, q, k=k, with_text=False, prune_stats=st))
+    loc = search(r_local, q, k=k, with_text=False, prune_stats=st)
     r_dist = IndexReader(spark, d, driver_local_max_postings=0,
                          driver_local_max_vocab=0)
-    dist = _pdf(search(r_dist, q, k=k, with_text=False, prune=False))
-    return loc, st, dist
+    dist = search(r_dist, q, k=k, with_text=False, prune=False)
+    # the same columns in the same positions on every tier
+    assert loc.schema.simpleString() == dist.schema.simpleString()
+    return _pdf(loc), st, _pdf(dist)
 
 
 def test_blockmax_single_term_bit_identical(spark, blockmax_setup):
@@ -504,7 +506,8 @@ def test_blockmax_maxscore_essential_lists(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # driver-side text fetch (_with_text): the driver-local tiers read their k
 # docs rows with pyarrow — the same rows, score bits included, as the
-# budget-0 reader's Spark join, and zero Spark jobs
+# budget-0 reader's Spark join, and zero Spark jobs; without text they
+# return the distributed tier's columns
 # ---------------------------------------------------------------------------
 
 import itertools  # noqa: E402
@@ -532,42 +535,58 @@ def _rows_and_jobs(spark, make_df):
     return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-_TEXT_CALLS = {
-    "search": lambda r: search(r, "neural networks", k=10),
-    "fuzzy": lambda r: search(r, "neurel netwerk", k=10, fuzzy=True),
-    "search_many": lambda r: search_many(
+_CALLS = {
+    "search": lambda r, t: search(r, "neural networks", k=10, with_text=t),
+    "fuzzy": lambda r, t: search(r, "neurel netwerk", k=10, fuzzy=True,
+                                 with_text=t),
+    "search_many": lambda r, t: search_many(
         r, {"a": "neural networks", "b": "machine learning"}, k=5,
-        with_text=True),
+        with_text=t),
 }
+_WITH_TEXT = pytest.mark.parametrize("with_text", [True, False],
+                                     ids=["text", "no_text"])
 
 
-@pytest.mark.parametrize("call", sorted(_TEXT_CALLS))
-def test_text_paths_identical_zero_jobs(local_reader, reader, spark, call):
-    run = _TEXT_CALLS[call]
-    run(local_reader).collect()  # warm the term dictionary + docs memo
-    loc, jobs = _rows_and_jobs(spark, lambda: run(local_reader))
-    assert jobs == 0, f"{call} with text launched {jobs} Spark jobs"
-    dist, _ = _rows_and_jobs(spark, lambda: run(reader))
+def _assert_identical_zero_jobs(spark, run, loc_r, dist_r, call):
+    """Same column names and types in the same positions (row[0] is the
+    doc_id, or the qid for search_many), the same row tuples with the
+    score bits, and zero Spark jobs on the driver-local tier."""
+    assert (run(loc_r).schema.simpleString()
+            == run(dist_r).schema.simpleString())
+    run(loc_r).collect()  # warm the term dictionary + docs memo
+    loc, jobs = _rows_and_jobs(spark, lambda: run(loc_r))
+    assert jobs == 0, f"{call} launched {jobs} Spark jobs"
+    dist, _ = _rows_and_jobs(spark, lambda: run(dist_r))
     assert loc and loc == dist
 
 
+@_WITH_TEXT
+@pytest.mark.parametrize("call", sorted(_CALLS))
+def test_result_paths_identical_zero_jobs(local_reader, reader, spark, call,
+                                          with_text):
+    _assert_identical_zero_jobs(
+        spark, lambda r: _CALLS[call](r, with_text), local_reader, reader,
+        call)
+
+
+@_WITH_TEXT
 @pytest.mark.parametrize("call", ["phrase", "bool_should"])
-def test_positional_text_paths_identical_zero_jobs(pos_pair, spark, call):
+def test_positional_result_paths_identical_zero_jobs(pos_pair, spark, call,
+                                                     with_text):
     from research_engine_spark.api import ResearchEngine
+    from research_engine_spark.operators.scorer import bool_should_search
 
     def run(r):
         if call == "phrase":
-            return phrase_search(r, "neural networks", k=10, with_text=True)
+            return phrase_search(r, "neural networks", k=10,
+                                 with_text=with_text)
+        if not with_text:
+            return bool_should_search(r, "neural networks", k=10)
         eng = ResearchEngine(spark, r.index_dir)
         eng._reader = r  # the facade over this pair's reader
         return eng.search("neural networks", top_k=10, bool_should=True)
 
-    loc_r, dist_r = pos_pair
-    run(loc_r).collect()
-    loc, jobs = _rows_and_jobs(spark, lambda: run(loc_r))
-    assert jobs == 0, f"{call} with text launched {jobs} Spark jobs"
-    dist, _ = _rows_and_jobs(spark, lambda: run(dist_r))
-    assert loc and loc == dist
+    _assert_identical_zero_jobs(spark, run, *pos_pair, call)
 
 
 def test_text_empty_result_keeps_schema(pos_pair, spark):
