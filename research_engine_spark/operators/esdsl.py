@@ -139,12 +139,13 @@ from .multifield import MultiFieldReader
 from .scorer import (
     DRIVER_LOCAL_MAX_DELETES,
     PARTIAL_SCHEMA,
+    _NO_HITS,
     IndexReader,
     _decode_partials_factory,
     _deleted_ids_arrow,
-    _driver_local_topk_pd,
     _is_deleted_arrow,
     _fetch_term_blocks_arrow,
+    _fold_meta_pd,
     _all_match_scores,
     _fuzzy_term_meta,
     _phrase_prefix_driver_local,
@@ -585,22 +586,6 @@ def _script_score_parts(body):
 # driver-local (pandas) evaluation — None means "over budget, go Spark"
 # ---------------------------------------------------------------------------
 
-def _fold_meta_pd(reader: IndexReader, meta, k1: float, b: float):
-    """Budget gate + numpy score fold over a clause table — the ONE
-    serving-tier decision point shared by match and term leaves (same
-    Σ df budget, same deterministic fold; None = go distributed)."""
-    if meta.empty:
-        return _EMPTY_PD.copy()
-    if int(meta["df"].sum()) > reader.driver_local_max_postings:
-        return None
-    full = _driver_local_topk_pd(
-        reader, meta.assign(qid="q", qtf=meta["qtf"].astype(np.float64)),
-        k=None, k1=k1, b=b)
-    if full is None:
-        return None
-    return full[["doc_id", "score"]]
-
-
 def _match_pd(ctx: _Ctx, reader: IndexReader, spec: dict):
     from ..functions.analyzer import analyze_query
 
@@ -609,7 +594,7 @@ def _match_pd(ctx: _Ctx, reader: IndexReader, spec: dict):
     qterms = analyze_query(
         spec["query"], mode=reader.stats.get("analyzer", "english_folded"))
     if not qterms:
-        return _EMPTY_PD.copy()
+        return _NO_HITS.copy()
     if _fuzzy_flag(spec):
         if reader.vocab_arrow() is None:
             return None  # vocabulary over budget: expansion needs a job
@@ -618,10 +603,6 @@ def _match_pd(ctx: _Ctx, reader: IndexReader, spec: dict):
     else:
         meta = _term_meta(reader, qterms, k1, b)
     return _fold_meta_pd(reader, meta, k1, b)
-
-
-_EMPTY_PD = pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                          "score": pd.Series(dtype=np.float64)})
 
 
 def _term_pd(ctx: _Ctx, reader: IndexReader, spec: dict):
@@ -642,7 +623,7 @@ def _const_docs_pd(reader: IndexReader, terms: list[str], df_sum: int,
     constant_score multi-term rewrite). Same Σ df posting budget and
     tombstone mask as the scored paths; None = go distributed."""
     if not terms:
-        return _EMPTY_PD.copy()
+        return _NO_HITS.copy()
     if df_sum > reader.driver_local_max_postings:
         return None
     deleted = None
@@ -678,7 +659,7 @@ def _expand_pattern_pd(ctx: _Ctx, kind: str, body: dict):
         mask = vocab["term"].str.fullmatch(_wildcard_regex(value))
     matched = vocab[mask.fillna(False).astype(bool)]
     if matched.empty:
-        return _EMPTY_PD.copy()
+        return _NO_HITS.copy()
     return _const_docs_pd(reader, matched["term"].tolist(),
                           int(matched["df"].sum()),
                           float(spec.get("boost", 1.0)))
@@ -694,7 +675,7 @@ def _scale_pd(pdf, boost: float):
 
 def _combine_fields_pd(frames: list, mtype: str, tie_breaker: float):
     if not frames:
-        return _EMPTY_PD.copy()
+        return _NO_HITS.copy()
     allf = pd.concat(frames, ignore_index=True)
     g = allf.groupby("doc_id", sort=True)["score"]
     if mtype == "most_fields":
@@ -1075,7 +1056,7 @@ def _clause_pd(ctx: _Ctx, clause: dict):
         reader = ctx.reader(field)
         ts = reader.term_stats_arrow(values)
         if ts.empty:
-            return _EMPTY_PD.copy()
+            return _NO_HITS.copy()
         return _const_docs_pd(reader, ts["term"].tolist(),
                               int(ts["df"].sum()), boost)
     if kind in ("prefix", "wildcard", "regexp"):
@@ -1106,7 +1087,7 @@ def _clause_pd(ctx: _Ctx, clause: dict):
         rows = [(i, _PINNED_BASE - pos * _PINNED_STEP)
                 for pos, i in enumerate(ids) if i in pset]
         pinned = pd.DataFrame(rows, columns=["doc_id", "score"]) \
-            if rows else _EMPTY_PD.copy()
+            if rows else _NO_HITS.copy()
         org = org[~org["doc_id"].isin({i for i, _ in rows})]
         return pd.concat([pinned, org], ignore_index=True)
     if kind == "more_like_this":
@@ -1347,7 +1328,7 @@ def _sloppy_phrase_pd(ctx: _Ctx, reader: IndexReader, spec: dict):
     slop = int(spec.get("slop", 0))
     prep = _sloppy_prep(ctx, reader, spec)
     if prep is None:
-        return _EMPTY_PD.copy()
+        return _NO_HITS.copy()
     t_a, t_b, sum_idf, k1, b, df_sum = prep
     if df_sum > reader.driver_local_max_postings:
         return None
@@ -1357,7 +1338,7 @@ def _sloppy_phrase_pd(ctx: _Ctx, reader: IndexReader, spec: dict):
     uniq = list(dict.fromkeys([t_a, t_b]))
     by_term, dl_docs, dl_vals = _positions_local(reader, uniq)
     if any(t not in by_term for t in uniq):
-        return _EMPTY_PD.copy()
+        return _NO_HITS.copy()
     _, keys_a = by_term[t_a]
     _, keys_b = by_term[t_b]
     acc: dict[int, float] = {}
@@ -1371,7 +1352,7 @@ def _sloppy_phrase_pd(ctx: _Ctx, reader: IndexReader, spec: dict):
         for doc, n in zip(u.tolist(), c.tolist()):
             acc[doc] = acc.get(doc, 0.0) + n * w
     if not acc:
-        return _EMPTY_PD.copy()
+        return _NO_HITS.copy()
     match_docs = np.fromiter(acc.keys(), dtype=np.int64, count=len(acc))
     wtf = np.fromiter(acc.values(), dtype=np.float64, count=len(acc))
     dls = dl_vals[np.searchsorted(dl_docs, match_docs)].astype(

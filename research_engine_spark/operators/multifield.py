@@ -65,14 +65,14 @@ def _search_multifield_driver_local(mf: MultiFieldReader, query: str,
     """Zero-Spark-job best_fields twin: every field's FULL match set is
     at most Σ df rows, so when EVERY field fits its reader's
     driver_local_max_postings budget the per-field sets come from
-    _driver_local_topk_pd(k=None) and the max + tie_breaker*rest
-    combination runs in pandas. Returns the combined (doc_id, score)
-    pandas frame, or None when any field is over budget / tombstones too
-    large (caller falls back to the distributed union+agg)."""
+    _fold_meta_pd and the max + tie_breaker*rest combination runs in
+    pandas. Returns the combined (doc_id, score) pandas frame, or None
+    when any field is over budget / tombstones too large (caller falls
+    back to the distributed union+agg)."""
     import numpy as np
     import pandas as pd
 
-    from .scorer import _driver_local_topk_pd, _term_meta
+    from .scorer import _NO_HITS, _fold_meta_pd, _term_meta
     from ..functions.analyzer import analyze_query
 
     frames = []
@@ -83,15 +83,9 @@ def _search_multifield_driver_local(mf: MultiFieldReader, query: str,
             query, mode=reader.stats.get("analyzer", "english_folded"))
         if not qterms:
             continue
-        meta = _term_meta(reader, qterms, k1f, bf)
-        if meta.empty:
-            continue  # no query term in this field's vocab: contributes 0
-        if int(meta["df"].sum()) > reader.driver_local_max_postings:
-            return None
-        full = _driver_local_topk_pd(
-            reader, meta.assign(qid="q",
-                                qtf=meta["qtf"].astype(np.float64)),
-            k=None, k1=k1f, b=bf)
+        # no query term in this field's vocab: an empty set, contributes 0
+        full = _fold_meta_pd(reader, _term_meta(reader, qterms, k1f, bf),
+                             k1f, bf)
         if full is None:
             return None
         frames.append(pd.DataFrame({
@@ -99,8 +93,7 @@ def _search_multifield_driver_local(mf: MultiFieldReader, query: str,
             "fscore": full["score"].to_numpy(np.float64)
             * float(mf.boosts[field])}))
     if not frames:
-        return pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                             "score": pd.Series(dtype=np.float64)})
+        return _NO_HITS.copy()
     allf = pd.concat(frames, ignore_index=True)
     g = allf.groupby("doc_id", sort=True)["fscore"]
     mx, sm = g.max(), g.sum()

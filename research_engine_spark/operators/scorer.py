@@ -24,9 +24,12 @@ and returns the top-k heap. Here the lifecycle is (SURVEY.md §3):
               approx ≤ true. True top-k ⊆ C. Exactly rescore ONLY C
               (blocks range-skipped via [first_doc_id, last_doc_id] vs C's
               id range, decode filtered to C) -> exact scores.
-   The skip predicates are plain column comparisons on block metadata —
-   evaluated JVM-side before any decode, eligible for parquet row-group
-   stat skipping.
+   θ, the MaxScore essential lists, the doc-range-aligned skip bounds
+   and the fully-decoded slack are ONE _BlockPlan per query, computed
+   driver-side from block metadata (_block_plan) and executed by either
+   the driver-local blockmax tier or the distributed pruned tiers; above
+   BLOCK_META_BUDGET the skip predicates are plain column comparisons on
+   block metadata, evaluated JVM-side before any decode.
 4. surviving blocks decode + score inside vectorized pandas UDFs (numpy
    varbyte decode, float64 BM25)
 5. per-doc deterministic summation (term-sorted fold order — bit-identical
@@ -928,6 +931,27 @@ def _driver_local_topk_pd(reader: IndexReader, meta: pd.DataFrame,
     return out
 
 
+_NO_HITS = pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
+                         "score": pd.Series(dtype=np.float64)})
+
+
+def _fold_meta_pd(reader: IndexReader, meta: pd.DataFrame, k1: float,
+                  b: float) -> pd.DataFrame | None:
+    """Driver-local FULL match set (doc_id, score) of one clause table:
+    the Σ df budget gate, then the numpy fold of _driver_local_topk_pd
+    (k=None) — the one serving-tier decision for callers that combine
+    whole match sets (bool_should, multi-field, ES-DSL leaves). None
+    means go distributed."""
+    if meta.empty:
+        return _NO_HITS.copy()
+    if int(meta["df"].sum()) > reader.driver_local_max_postings:
+        return None
+    full = _driver_local_topk_pd(
+        reader, meta.assign(qid="q", qtf=meta["qtf"].astype(np.float64)),
+        k=None, k1=k1, b=b)
+    return None if full is None else full[["doc_id", "score"]]
+
+
 def _hits_table(topk_pd: pd.DataFrame):
     """pandas ([qid,] doc_id, score) hits as a pyarrow Table of
     ([qid string,] doc_id int64, score float64)."""
@@ -1090,9 +1114,93 @@ def _fetch_blocks_grouped_arrow(reader: IndexReader,
         functools.reduce(operator.or_, parts))
 
 
+@dataclass
+class _BlockPlan:
+    """One query's exact block-max prune (lifecycle step 3, phase A),
+    computed once from driver-side block metadata and shared by the
+    driver-local blockmax tier and the distributed pruned tiers."""
+    bmeta: pd.DataFrame        # per-block metadata of the query terms
+    weight: dict[str, float]   # qtf * idf per term
+    gub_by: dict[str, float]   # global upper bound per term
+    theta: float               # lower bound on the true k-th score
+    keep_mask: np.ndarray      # phase-A survivors, aligned with bmeta
+    fully: set[str]            # essential terms with every block kept
+    slack_gub: float           # Σ gub over the terms not fully decoded
+
+
+def _block_plan(reader: IndexReader, meta: pd.DataFrame, k: int,
+                k1: float, b: float) -> _BlockPlan | None:
+    """θ, MaxScore essential lists, aligned skip bounds and the fully-
+    decoded slack for one clause table, from pyarrow block metadata plus
+    ONE best-blocks payload fetch — zero Spark jobs. None when the query
+    terms' block metadata exceeds BLOCK_META_BUDGET (the caller runs the
+    Spark-metadata gate)."""
+    bmeta = _block_meta_arrow(reader, meta["term"].tolist())
+    if bmeta is None:
+        return None
+    avgdl = float(reader.stats["avgdl"])
+    k = int(k)
+    weight = {t: float(q) * float(i) for t, q, i in
+              zip(meta["term"], meta["qtf"], meta["idf"])}
+    gub_by = dict(zip(meta["term"], meta["gub"].astype(float)))
+    block_ub = bmeta["term"].map(weight).to_numpy(np.float64) * _sky_part_np(
+        bmeta["sky_tfs"].tolist(), bmeta["sky_dls"].tolist(), avgdl, k1, b)
+    # θ_meta, decode-free: within ONE term, distinct blocks hold distinct
+    # docs, and the skyline block max is ACHIEVED by a posting — so a term
+    # with ≥ k blocks proves k distinct docs scoring ≥ its k-th highest
+    # weighted block max. Valid lower bound on the true k-th best score;
+    # catches the bursty-tail postings a best-blocks decode sample misses.
+    theta = float("-inf")
+    terms_arr = bmeta["term"].to_numpy()
+    for t in gub_by:
+        tb = block_ub[terms_arr == t]
+        if tb.size >= k:
+            theta = max(theta, float(
+                np.partition(tb, tb.size - k)[tb.size - k]))
+    # θ_decode: exact partial sums over the few highest-bound blocks'
+    # actual postings. Complements θ_meta on BOTH query shapes: several
+    # top docs can share one block (θ_meta sees only each block's single
+    # max), and on multi-term queries a doc's partials sum across terms.
+    # θ = max of the two valid lower bounds.
+    keys = _best_block_keys(bmeta, max(2, k // 128 + 2), avgdl, k1, b)
+    rows = (_fetch_blocks_arrow(reader, keys) if keys
+            else pd.DataFrame(columns=_PAYLOAD_COLS))
+    theta = max(theta, _theta_from_rows(rows, meta, avgdl, k, k1, b))
+    # MaxScore essential-list partition (VERDICT r5 #1): with terms
+    # sorted by gub ascending, the maximal prefix whose cumulative gub
+    # stays strictly below θ is NON-ESSENTIAL — a doc containing ONLY
+    # those terms scores ≤ Σ gub < θ ≤ s_k, so phase A never decodes
+    # their postings; they re-enter exactly in the phase-B rescore of
+    # candidates. Any doc scoring ≥ θ appears in a kept ESSENTIAL block:
+    # the doc-range-aligned skip bound (block-level BMW) bounds every
+    # other term's partial by its best OVERLAPPING block, not its global
+    # max — which is also what lets a rare∧common query prune the common
+    # term where the rare term is absent. This is what lets the
+    # common-term conjunction shape ("what is X", stopword + content
+    # terms) prune at all: Σ df is corpus-scale but the ESSENTIAL Σ df is
+    # the content terms'.
+    essential = _maxscore_essential(gub_by, theta)
+    keep_mask = ((_aligned_skip_bounds(bmeta, block_ub, list(gub_by))
+                  >= theta) & bmeta["term"].isin(set(essential)).to_numpy())
+    # essential terms whose EVERY block is kept are fully decoded in
+    # phase A: a doc they don't contribute to provably lacks them (one
+    # posting per (term, doc)), so their missing-term bound is 0, not
+    # gub. A candidate's upper bound is approx + the slack of the NOT
+    # fully decoded terms it lacks — the MaxScore tightening that keeps
+    # the candidate set small where the loose global-gub bound made every
+    # phase-A doc a candidate on homogeneous corpora.
+    kept_per_term = bmeta.loc[keep_mask, "term"].value_counts()
+    tot_per_term = bmeta["term"].value_counts()
+    fully = {t for t in essential
+             if int(kept_per_term.get(t, 0)) == int(tot_per_term.get(t, 0))}
+    slack_gub = float(sum(g for t, g in gub_by.items() if t not in fully))
+    return _BlockPlan(bmeta, weight, gub_by, theta, keep_mask, fully,
+                      slack_gub)
+
+
 def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
-                                  k: int, k1: float, b: float,
-                                  with_text: bool,
+                                  plan: _BlockPlan | None, k: int,
+                                  k1: float, b: float, with_text: bool,
                                   prune_stats: dict | None
                                   ) -> DataFrame | None:
     """Block-max-gated driver-local serving (VERDICT r4 #3): zero-Spark-
@@ -1101,82 +1209,33 @@ def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
     10^12 turns, where Σ df scales with the corpus while the decode the
     skyline prune leaves behind scales with k and the score distribution.
 
-    Same two-phase exact block-max math as the distributed pruned path
-    (θ from block metadata + best-block decode, doc-range-aligned skip
-    bounds, θ''-filtered candidates, exact rescore), executed entirely
-    driver-side with pyarrow block fetches. The gate is DECODE COST, not
-    Σ df: proceed only when the kept blocks' Σ posting_count (phase A)
-    and the candidate-overlapping blocks' Σ posting_count (phase B) each
-    fit reader.driver_local_max_postings. Exactness: candidates ⊇ every
-    doc whose true score can reach the true k-th (same bound argument as
-    the distributed two-phase), and the rescore fold is byte-identical
-    to _driver_local_topk_pd's — results are bit-identical to both the
-    flat serving path and the distributed paths (pytest-guarded with
-    zero-job probes). Returns None (caller goes distributed) on any
-    over-budget stage, tombstones (prune math unsafe pre-purge, the
-    Lucene posture), or missing block metadata."""
-    if reader.has_deletes:
+    Executes the query's _BlockPlan driver-side — the same plan the
+    distributed pruned path consumes — with pyarrow block fetches:
+    phase A decodes the kept blocks, the θ''-filtered candidates are
+    rescored exactly. The gate is DECODE COST, not Σ df: proceed only
+    when the kept blocks' Σ posting_count (phase A) and the
+    candidate-overlapping blocks' Σ posting_count (phase B) each fit
+    reader.driver_local_max_postings. Exactness: candidates ⊇ every doc
+    whose true score can reach the true k-th (same bound argument as the
+    distributed two-phase), and the rescore fold is byte-identical to
+    _driver_local_topk_pd's — results are bit-identical to both the flat
+    serving path and the distributed paths (pytest-guarded with zero-job
+    probes). Returns None (caller goes distributed) on any over-budget
+    stage, no plan (block metadata over budget) or no finite θ. The
+    caller builds no plan under tombstones (prune math unsafe pre-purge,
+    the Lucene posture) or for a term carrying several clauses."""
+    if plan is None or not np.isfinite(plan.theta):
         return None
     avgdl = float(reader.stats["avgdl"])
     budget = int(reader.driver_local_max_postings)
-    bmeta = _block_meta_arrow(reader, meta["term"].tolist())
-    if bmeta is None or bmeta.empty:
-        return None
     k = int(k)
-    weight = {t: float(q) * float(i) for t, q, i in
-              zip(meta["term"], meta["qtf"], meta["idf"])}
-    gub_by = dict(zip(meta["term"], meta["gub"].astype(float)))
-    wts = bmeta["term"].map(weight).to_numpy(np.float64)
-    block_ub_np = wts * _sky_part_np(
-        bmeta["sky_tfs"].tolist(), bmeta["sky_dls"].tolist(), avgdl, k1, b)
-    # θ: same two lower bounds as the distributed driver gate
-    n_blocks_theta = max(2, k // 128 + 2)
-    theta = float("-inf")
-    terms_arr = bmeta["term"].to_numpy()
-    for t in gub_by:
-        tb = block_ub_np[terms_arr == t]
-        if tb.size >= k:
-            theta = max(theta, float(
-                np.partition(tb, tb.size - k)[tb.size - k]))
-    keys = _best_block_keys(bmeta, n_blocks_theta, avgdl, k1, b)
-    rows = (_fetch_blocks_arrow(reader, keys) if keys
-            else pd.DataFrame(columns=_PAYLOAD_COLS))
-    theta = max(theta, _theta_from_rows(rows, meta, avgdl, k, k1, b))
-    if not np.isfinite(theta):
-        return None
-    # MaxScore essential-list partition (VERDICT r5 next-round #1): with
-    # terms sorted by gub ascending, the maximal prefix whose cumulative
-    # gub stays strictly below θ is NON-ESSENTIAL — a doc containing
-    # ONLY those terms scores ≤ Σ gub < θ ≤ s_k, so phase A never
-    # decodes their postings; they re-enter exactly in the phase-B
-    # rescore of candidates. Any doc scoring ≥ θ therefore appears in a
-    # kept ESSENTIAL block (every term partial is bounded by its own
-    # block ub ≤ the aligned overlap max at any of the doc's essential
-    # blocks — the aligned-bound argument restricted to E), so the
-    # candidate superset stays exact. This is what lets the common-term
-    # conjunction shape ("what is X", stopword + content terms) serve
-    # driver-locally: Σ df is corpus-scale but the ESSENTIAL Σ df is the
-    # content terms'.
-    essential = _maxscore_essential(gub_by, theta)
-    ess_set = set(essential)
-    keep_mask = (_aligned_skip_bounds(bmeta, block_ub_np, list(gub_by))
-                 >= theta) & bmeta["term"].isin(ess_set).to_numpy()
-    kept = bmeta.loc[keep_mask]
+    bmeta, theta = plan.bmeta, plan.theta
+    kept = bmeta.loc[plan.keep_mask]
     kept_cost = int(kept["posting_count"].sum()) if len(kept) else 0
     if kept_cost == 0 or kept_cost > budget:
         if prune_stats is not None and kept_cost:
             prune_stats.update(blockmax_kept_postings=kept_cost)
         return None
-    # essential terms whose EVERY block is kept are fully decoded in
-    # phase A: a doc they don't contribute to provably lacks them (one
-    # posting per (term, doc)), so their missing-term bound is 0, not
-    # gub — the candidate filter below tightens accordingly (the loose
-    # global-gub bound made every phase-A doc a candidate on
-    # homogeneous corpora)
-    kept_per_term = kept["term"].value_counts()
-    tot_per_term = bmeta["term"].value_counts()
-    fully = {t for t in essential
-             if int(kept_per_term.get(t, 0)) == int(tot_per_term[t])}
     meta_q = meta.assign(qid="q", qtf=meta["qtf"].astype(np.float64))
     kept_rows = _fetch_blocks_grouped_arrow(reader, kept)
     if len(meta) == 1:
@@ -1194,18 +1253,17 @@ def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
         return _local_result(reader, topk_pd, with_text)
     # phase A approx: per-doc partial sums + contributing-term gub over
     # the kept blocks (plain float sums — only BOUNDS, the exact fold
-    # happens in the rescore); batch-decoded in one numpy pass
+    # happens in the rescore); batch-decoded in one numpy pass. A
+    # fully-decoded term's gub is 0 in the contribution ledger (its
+    # absence is definitive; see _block_plan)
     docs, a_tfs, a_dls, a_counts = decode_blocks_flat(
         kept_rows["doc_gaps"].tolist(), kept_rows["tfs"].tolist(),
         kept_rows["dls"].tolist())
     kept_terms = kept_rows["term"].tolist()
-    w_blk = np.fromiter((weight[t] for t in kept_terms),
+    w_blk = np.fromiter((plan.weight[t] for t in kept_terms),
                         dtype=np.float64, count=len(kept_rows))
-    # gub of FULLY-decoded terms is 0 in the contribution ledger: their
-    # absence is definitive, so only not-fully-decoded terms add slack
-    # to a doc's upper bound (C below)
     g_blk = np.fromiter(
-        ((0.0 if t in fully else gub_by[t]) for t in kept_terms),
+        ((0.0 if t in plan.fully else plan.gub_by[t]) for t in kept_terms),
         dtype=np.float64, count=len(kept_rows))
     parts = np.repeat(w_blk, a_counts) * bm25_tf_part(
         a_tfs, a_dls, avgdl, k1, b)
@@ -1216,25 +1274,16 @@ def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
     uniq_d = d_s[starts]
     approx = np.add.reduceat(p_s, starts)
     contrib_gub = np.add.reduceat(g_s, starts)
-    # slack C = Σ gub over the NOT-fully-decoded terms only: a
-    # fully-decoded term's contribution is exact for every phase-A doc
-    # (present -> exact partial, absent -> provably 0), so it never
-    # widens a doc's upper bound — the MaxScore tightening that keeps
-    # the candidate set small on homogeneous corpora
-    slack_gub = float(sum(g for t, g in gub_by.items() if t not in fully))
     # θ'' = max(θ, k-th approx); approx ≤ true score, still a valid bound
     if approx.size >= k:
         theta2 = max(theta, float(
             np.partition(approx, approx.size - k)[approx.size - k]))
     else:
         theta2 = theta
-    cand_mask = approx + (slack_gub - contrib_gub) >= theta2
+    cand_mask = approx + (plan.slack_gub - contrib_gub) >= theta2
     cand_ids = np.sort(uniq_d[cand_mask])
     if cand_ids.size == 0:
-        return _local_result(
-            reader, pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                                  "score": pd.Series(dtype=np.float64)}),
-            with_text)
+        return _local_result(reader, _NO_HITS, with_text)
     # phase B: every block whose doc range contains a candidate (the
     # candidate's FULL term set lives in those blocks)
     firsts = bmeta["first_doc_id"].to_numpy(np.int64)
@@ -1417,9 +1466,7 @@ def _theta_spark_meta(reader: IndexReader, meta: pd.DataFrame, k: int,
     keys = [(r["term"], int(r["salt"]), int(r["block_id"]))
             for r in key_rows]
     rows = _fetch_blocks_arrow(reader, keys)
-    return _theta_from_rows(
-        (r._asdict() for r in rows.itertuples(index=False)),
-        meta, avgdl, k, k1, b)
+    return _theta_from_rows(rows, meta, avgdl, k, k1, b)
 
 
 def _decode_partials_factory(avgdl: float, k1: float, b: float,
@@ -1552,8 +1599,9 @@ def search(
     _all_matches: bool = False,
     prune_stats: dict | None = None,
 ) -> DataFrame:
-    """Top-k BM25. Returns (doc_id, score, conv_id, turn_idx[, text])
-    ordered by (score desc, doc_id asc). Queries whose terms' total
+    """Top-k BM25. Returns (doc_id, score[, conv_id, turn_idx, text])
+    ordered by (score desc, doc_id asc); the text columns come with
+    with_text=True, the default. Queries whose terms' total
     posting count fits reader.driver_local_max_postings take the
     zero-Spark-job driver-local path (pyarrow block fetch + numpy
     scoring, bit-identical — see DRIVER_TOPK_MAX_POSTINGS); the
@@ -1580,23 +1628,15 @@ def search(
     qterms = analyze_query(
         query, mode=reader.stats.get("analyzer", "english_folded"))
 
-    def empty() -> DataFrame:
-        # built lazily: a py4j createDataFrame costs ~0.1s of driver
-        # time, a measurable share of warm single-query latency when
-        # constructed eagerly on EVERY call
-        return spark.createDataFrame(
-            [], "doc_id bigint, score double, conv_id string, turn_idx int"
-            + (", text string" if with_text else ""))
-
     if not qterms:
-        return empty()
+        return _local_result(reader, _NO_HITS, with_text)
     if fuzzy:
         prune = False
         meta = _fuzzy_term_meta(reader, qterms, k1, b, max_expansions)
     else:
         meta = _term_meta(reader, qterms, k1, b)
     if meta.empty:
-        return empty()
+        return _local_result(reader, _NO_HITS, with_text)
     meta = meta.assign(qtf=meta["qtf"].astype(np.float64))
     avgdl = reader.stats["avgdl"]
     total_gub = float(meta["gub"].sum())
@@ -1611,8 +1651,12 @@ def search(
     # path as fallback while Σ df still fits. _all_matches stays
     # distributed (its result is corpus-sized input to multifield, not
     # k rows).
+    # The block-max tier and the distributed gate below share ONE
+    # _BlockPlan: built here when the blockmax tier runs, else by the
+    # gate.
     df_sum = int(meta["df"].sum())
     budget = int(reader.driver_local_max_postings)
+    plan, planned = None, False
     if not _all_matches and budget > 0:
         if df_sum <= budget // 4:
             local = _search_driver_local(reader, meta, k, k1, b,
@@ -1620,9 +1664,12 @@ def search(
             if local is not None:
                 return local
         else:
-            if not reader.has_deletes:
+            # the plan's bounds weigh one clause per term: a fuzzy
+            # expansion collision (two clauses on one term) skips it
+            if not reader.has_deletes and meta["term"].is_unique:
+                plan, planned = _block_plan(reader, meta, k, k1, b), True
                 local = _search_driver_local_blockmax(
-                    reader, meta, k, k1, b, with_text, prune_stats)
+                    reader, meta, plan, k, k1, b, with_text, prune_stats)
                 if local is not None:
                     return local
             if df_sum <= budget:
@@ -1669,80 +1716,25 @@ def search(
     if not prune:
         topk = plain_topk()
     else:
-        n_blocks_theta = max(2, (int(k) // 128) + 2)
         # θ + gate are DRIVER-SIDE whenever the query terms' block
         # metadata fits the budget (r2 VERDICT #1: the old gate paid two
-        # Spark jobs to decide "don't prune" every time). The metadata
-        # read is pyarrow over the already-bucket-pruned postings dirs —
-        # the same access pattern as the term dictionary lookup — and the
-        # θ payload fetch touches n_blocks·|terms| KB-sized blocks. Cost
-        # when the gate says fall back: ZERO extra Spark jobs.
-        bmeta = _block_meta_arrow(reader, meta["term"].tolist())
+        # Spark jobs to decide "don't prune" every time): the plan reads
+        # block metadata with pyarrow over the already-bucket-pruned
+        # postings dirs and fetches n_blocks·|terms| KB-sized θ blocks.
+        # Cost when the gate says fall back: ZERO extra Spark jobs.
+        if not planned:
+            plan = _block_plan(reader, meta, k, k1, b)
         cutoff: dict[str, float]
-        if bmeta is not None:
-            weight = {t: float(q) * float(i) for t, q, i in
-                      zip(meta["term"], meta["qtf"], meta["idf"])}
-            gub_by = dict(zip(meta["term"], meta["gub"].astype(float)))
-            wts = bmeta["term"].map(weight).to_numpy(np.float64)
-            block_ub_np = wts * _sky_part_np(
-                bmeta["sky_tfs"].tolist(), bmeta["sky_dls"].tolist(),
-                avgdl, k1, b)
-            # θ_meta, decode-free: within ONE term, distinct blocks hold
-            # distinct docs, and the skyline block max is ACHIEVED by a
-            # posting — so a term with ≥ k blocks proves k distinct docs
-            # scoring ≥ its k-th highest weighted block max. Valid lower
-            # bound on the true k-th best score; catches the bursty-tail
-            # postings a best-blocks decode sample misses.
-            theta_meta = float("-inf")
-            terms_arr = bmeta["term"].to_numpy()
-            for t in gub_by:
-                tb = block_ub_np[terms_arr == t]
-                if tb.size >= k:
-                    theta_meta = max(theta_meta, float(
-                        np.partition(tb, tb.size - k)[tb.size - k]))
-            # θ_decode: exact partial sums over the few highest-bound
-            # blocks' actual postings. Complements θ_meta on BOTH query
-            # shapes: several top docs can share one block (θ_meta sees
-            # only each block's single max), and on multi-term queries a
-            # doc's partials sum across terms. θ = max of the two valid
-            # lower bounds.
-            keys = _best_block_keys(bmeta, n_blocks_theta, avgdl, k1, b)
-            rows = _fetch_blocks_arrow(reader, keys) if keys else \
-                pd.DataFrame(columns=_PAYLOAD_COLS)
-            theta = max(theta_meta, _theta_from_rows(
-                rows, meta, avgdl, k, k1, b))
-            # doc-range-aligned skip bounds (block-level BMW): the other
-            # terms' contribution is bounded by their best OVERLAPPING
-            # block, not their global max — what lets a rare∧common
-            # query prune the common term where the rare term is absent
-            skip_bounds = _aligned_skip_bounds(
-                bmeta, block_ub_np, list(gub_by))
-            # MaxScore essential-list restriction (VERDICT r5 #1, same
-            # argument as the serving tier): phase A only decodes
-            # ESSENTIAL terms' surviving blocks — a doc with only
-            # non-essential terms scores ≤ their Σ gub < θ, and any doc
-            # scoring ≥ θ appears in a kept essential block (its every
-            # term partial is bounded by the aligned overlap max there).
-            # Non-essential terms re-enter exactly in the phase-B
-            # rescore. This is what flips the common-term conjunction
-            # from fallback_plain (n_keep == n_blocks) to a real prune.
-            essential = _maxscore_essential(gub_by, theta)
-            ess_set = set(essential)
-            keep_mask = ((skip_bounds >= theta)
-                         & bmeta["term"].isin(ess_set).to_numpy())
-            n_blocks_total = int(len(bmeta))
-            n_keep = int(keep_mask.sum())
-            kept_per_term = bmeta.loc[keep_mask, "term"].value_counts()
-            tot_per_term = bmeta["term"].value_counts()
-            fully = {t for t in essential
-                     if int(kept_per_term.get(t, 0))
-                     == int(tot_per_term[t])}
+        if plan is not None:
+            theta, fully, slack_gub = plan.theta, plan.fully, plan.slack_gub
+            n_blocks_total = int(len(plan.bmeta))
+            n_keep = int(plan.keep_mask.sum())
             gate = "driver"
         else:
             # extreme-scale fallback: metadata-only Spark jobs (never a
             # payload shuffle) for θ and the keep count
             theta = _theta_spark_meta(reader, meta, k, k1, b,
-                                      n_blocks_theta)
+                                      max(2, (int(k) // 128) + 2))
             cutoff = {t: theta - (total_gub - g)
                       for t, g in zip(meta["term"], meta["gub"])}
             cutoff_meta = spark.createDataFrame(
@@ -1757,7 +1749,7 @@ def search(
             )
             n_blocks_total = int(cnt["n"] or 0)
             n_keep = int(cnt["keep"] or 0)
-            fully = set()
+            fully, slack_gub = set(), float(sum(meta["gub"]))
             gate = "spark"
         if prune_stats is not None:
             prune_stats.update(theta=theta, n_blocks=n_blocks_total,
@@ -1773,8 +1765,8 @@ def search(
                 # survivors known exactly (aligned bounds) — broadcast
                 # their (term, salt, block_id) keys; ≤ 0.7·n_blocks tiny
                 # rows by the gate condition
-                surv = bmeta.loc[keep_mask,
-                                 ["term", "salt", "block_id"]]
+                surv = plan.bmeta.loc[plan.keep_mask,
+                                      ["term", "salt", "block_id"]]
                 surv_df = spark.createDataFrame(
                     surv.drop_duplicates(),
                     "term string, salt int, block_id int")
@@ -1805,22 +1797,14 @@ def search(
                         .limit(int(k)))
                 return _with_text(reader, topk) if with_text else topk
             # persisted: BOTH the θ'' collect and the candidate filter
-            # consume approx — without it each action re-runs the decode
-            # gub ledger: a FULLY-decoded term (every block of it kept)
-            # contributes exactly to every phase-A doc — present means
-            # exact partial, absent means provably 0 — so its gub rides
-            # as 0 and only not-fully-decoded terms' gubs (slack_gub)
-            # widen a doc's upper bound. Tightens the candidate set the
-            # loose global-gub bound made corpus-sized on homogeneous
-            # corpora.
+            # consume approx — without it each action re-runs the decode.
+            # A fully-decoded term's gub rides as 0 in the contribution
+            # ledger (its absence is definitive; see _block_plan).
             pay = list(payload_cols)
             if fully:
                 pay[pay.index("gub")] = F.when(
                     F.col("term").isin(sorted(fully)), F.lit(0.0)
                 ).otherwise(F.col("gub")).alias("gub")
-            slack_gub = float(sum(g for t, g in zip(meta["term"],
-                                                    meta["gub"])
-                                  if t not in fully))
             approx = _sum_deterministic(
                 pruned.select(*pay).mapInPandas(
                     _decode_partials_factory(avgdl, k1, b),
@@ -1846,36 +1830,32 @@ def search(
                 prune_stats.update(path="two_phase",
                                    n_candidates=int(cand_ids.size))
             if cand_ids.size == 0:
-                topk = spark.createDataFrame(
-                    [], "doc_id bigint, score double")
-            else:
-                lo, hi = int(cand_ids[0]), int(cand_ids[-1])
-                keep_bc = spark.sparkContext.broadcast(cand_ids)
-                rescored = (
-                    matching.filter(
-                        (F.col("last_doc_id") >= F.lit(lo))
-                        & (F.col("first_doc_id") <= F.lit(hi))
-                    )
-                    .select(*payload_cols)
-                    .mapInPandas(
-                        _decode_partials_factory(avgdl, k1, b,
-                                                 keep_bc=keep_bc),
-                        schema=PARTIAL_SCHEMA)
+                return _local_result(reader, _NO_HITS, with_text)
+            lo, hi = int(cand_ids[0]), int(cand_ids[-1])
+            keep_bc = spark.sparkContext.broadcast(cand_ids)
+            rescored = (
+                matching.filter(
+                    (F.col("last_doc_id") >= F.lit(lo))
+                    & (F.col("first_doc_id") <= F.lit(hi))
                 )
-                # materialize the ≤ k result rows NOW so the candidate
-                # broadcast can be released immediately (ADVICE r2: each
-                # pruned query otherwise leaked one candidate-id broadcast
-                # for the SparkSession lifetime)
-                topk_rows = (_sum_deterministic(rescored,
-                                                n_clauses=len(meta))
-                             .select("doc_id", "score")
-                             .orderBy(F.desc("score"), F.asc("doc_id"))
-                             .limit(int(k))
-                             .collect())
-                keep_bc.unpersist()
-                keep_bc.destroy()
-                topk = spark.createDataFrame(
-                    topk_rows, "doc_id bigint, score double")
+                .select(*payload_cols)
+                .mapInPandas(
+                    _decode_partials_factory(avgdl, k1, b, keep_bc=keep_bc),
+                    schema=PARTIAL_SCHEMA)
+            )
+            # materialize the ≤ k result rows NOW so the candidate
+            # broadcast can be released immediately (ADVICE r2: each
+            # pruned query otherwise leaked one candidate-id broadcast
+            # for the SparkSession lifetime)
+            topk_rows = (_sum_deterministic(rescored, n_clauses=len(meta))
+                         .select("doc_id", "score")
+                         .orderBy(F.desc("score"), F.asc("doc_id"))
+                         .limit(int(k))
+                         .collect())
+            keep_bc.unpersist()
+            keep_bc.destroy()
+            topk = spark.createDataFrame(
+                topk_rows, "doc_id bigint, score double")
 
     # J2: k-row hits broadcast against the forward docs table
     return _with_text(reader, topk) if with_text else topk
@@ -1964,16 +1944,10 @@ def search_many(
     _amode = reader.stats.get("analyzer", "english_folded")
     all_qterms = {qid: analyze_query(q, mode=_amode)
                   for qid, q in queries.items()}
-    out_cols = "qid string, doc_id bigint, score double"
-    if with_text:
-        out_cols += ", conv_id string, turn_idx int, text string"
     if fuzzy:
         allmeta = _fuzzy_term_meta_many(
             reader, {q: t for q, t in all_qterms.items() if t},
             k1, b, max_expansions)
-        if allmeta.empty:
-            return spark.createDataFrame([], out_cols)
-        allmeta = allmeta.assign(qtf=allmeta["qtf"].astype(np.float64))
     else:
         union_terms = sorted(
             {t for qts in all_qterms.values() for t, _ in qts})
@@ -1984,28 +1958,29 @@ def search_many(
             if not qterms:
                 continue
             meta = _term_meta(reader, qterms, k1, b)
-            if meta.empty:
-                continue
-            metas.append(meta.assign(
-                qid=qid, qtf=meta["qtf"].astype(np.float64)))
-        if not metas:
-            return spark.createDataFrame([], out_cols)
-        allmeta = pd.concat(metas, ignore_index=True)
-    terms = sorted(set(allmeta["term"]))
+            if not meta.empty:
+                metas.append(meta.assign(qid=qid))
+        allmeta = pd.concat(metas, ignore_index=True) if metas else None
 
     # driver-local short-circuit for budget-sized batches: decode volume
     # is the term UNION (a term's blocks decode once however many batch
     # queries share it — same amortization as the distributed batch
-    # path), so the gate is Σ df over DISTINCT terms.
-    if (int(allmeta.drop_duplicates("term")["df"].sum())
-            <= reader.driver_local_max_postings):
-        topk_pd = _driver_local_topk_pd(reader, allmeta, k, k1, b)
-        if topk_pd is not None:
-            # rows are already in (qid, score desc, doc_id asc) order and
-            # the Arrow LocalRelation keeps it: zero Spark jobs per batch
-            return (_with_text(reader, topk_pd) if with_text
-                    else _hits_df(spark, topk_pd))
+    # path), so the gate is Σ df over DISTINCT terms. A batch with no
+    # indexed query term answers here too.
+    if allmeta is None or allmeta.empty:
+        topk_pd = _NO_HITS.assign(qid=pd.Series(dtype=object))
+    else:
+        allmeta = allmeta.assign(qtf=allmeta["qtf"].astype(np.float64))
+        topk_pd = (_driver_local_topk_pd(reader, allmeta, k, k1, b)
+                   if int(allmeta.drop_duplicates("term")["df"].sum())
+                   <= reader.driver_local_max_postings else None)
+    if topk_pd is not None:
+        # rows are already in (qid, score desc, doc_id asc) order and the
+        # Arrow LocalRelation keeps it: zero Spark jobs per batch
+        return (_with_text(reader, topk_pd) if with_text
+                else _hits_df(spark, topk_pd))
 
+    terms = sorted(set(allmeta["term"]))
     buckets = sorted({int(v) for v in reader.bucket_of(terms).values()})
     avgdl = reader.stats["avgdl"]
 
@@ -2537,14 +2512,8 @@ def bool_should_search(reader: IndexReader, query: str, k: int = 10,
     qterms = analyze_query(
         query, mode=reader.stats.get("analyzer", "english_folded"))
     if qterms:
-        meta = _term_meta(reader, qterms, k1r, br)
-        if (not meta.empty
-                and int(meta["df"].sum())
-                <= reader.driver_local_max_postings):
-            local = _driver_local_topk_pd(
-                reader, meta.assign(
-                    qid="q", qtf=meta["qtf"].astype(np.float64)),
-                k=None, k1=k1r, b=br)  # None -> full match set
+        local = _fold_meta_pd(reader, _term_meta(reader, qterms, k1r, br),
+                              k1r, br)
     if local is not None:
         pl = _phrase_scores_driver_local(reader, query, k1, b)
         if pl is not None:

@@ -372,7 +372,10 @@ from pyspark.sql import functions as F  # noqa: E402
 from research_engine_spark.corpus import synth_transcripts  # noqa: E402
 from research_engine_spark.functions.analyzer import analyze_query  # noqa: E402
 from research_engine_spark.operators.indexer import build_index  # noqa: E402
-from research_engine_spark.operators.scorer import _term_meta  # noqa: E402
+from research_engine_spark.operators.scorer import (  # noqa: E402
+    _fuzzy_term_meta,
+    _term_meta,
+)
 
 
 @pytest.fixture(scope="module")
@@ -456,6 +459,28 @@ def test_blockmax_zero_spark_jobs(spark, blockmax_setup):
         sc.setJobGroup(None, None)
 
 
+def test_blockmax_skips_fuzzy_clause_collisions(spark, blockmax_setup):
+    """Two fuzzy clauses on one index term ("th\u0435" with a Cyrillic
+    e expands to "the") sum two partials per posting; the block plan
+    weighs one clause per term, so its bounds would skip blocks holding
+    top-k docs. Such a query keeps the flat tier's exact answer."""
+    d = blockmax_setup
+    q = "the th\u0435 networks network"
+    r = IndexReader(spark, d)
+    meta = _fuzzy_term_meta(r, analyze_query(q), 1.2, 0.75, 50)
+    assert not meta["term"].is_unique
+    sdf = int(meta["df"].sum())
+    r_local = IndexReader(spark, d, driver_local_max_postings=sdf)
+    st: dict = {}
+    loc = search(r_local, q, k=10, fuzzy=True, with_text=False,
+                 prune_stats=st).collect()
+    r_dist = IndexReader(spark, d, driver_local_max_postings=0,
+                         driver_local_max_vocab=0)
+    dist = search(r_dist, q, k=10, fuzzy=True, with_text=False).collect()
+    assert [tuple(x) for x in loc] == [tuple(x) for x in dist], st
+    assert st.get("path") == "driver_local", st
+
+
 def test_blockmax_respects_tombstones_and_budget(spark, blockmax_setup,
                                                  tmp_path):
     import shutil
@@ -477,6 +502,35 @@ def test_blockmax_respects_tombstones_and_budget(spark, blockmax_setup,
     out = _pdf(search(r, "the", k=5, with_text=False, prune_stats=st2))
     assert st2.get("path") != "driver_local_blockmax"
     assert 0 not in set(out["doc_id"])
+
+
+@pytest.mark.parametrize("q", ["the", "the and of"])
+def test_blockmax_fall_through_plans_once(spark, blockmax_setup, monkeypatch,
+                                          q):
+    """A query the blockmax tier declines (kept blocks over a budget
+    below one block) falls through to the distributed gate, which reuses
+    the tier's block plan: one block-metadata read and one θ-block fetch
+    per query."""
+    from research_engine_spark.operators import scorer
+
+    calls = {"meta": 0, "theta": 0}
+
+    def counted(name, fn):
+        def wrapper(*args):
+            calls[name] += 1
+            return fn(*args)
+        return wrapper
+
+    monkeypatch.setattr(scorer, "_block_meta_arrow",
+                        counted("meta", scorer._block_meta_arrow))
+    monkeypatch.setattr(scorer, "_fetch_blocks_arrow",
+                        counted("theta", scorer._fetch_blocks_arrow))
+    loc, st, dist = _pair(spark, blockmax_setup, q, 5, budget=100)
+    assert st["blockmax_kept_postings"] > 100, st  # the tier ran, declined
+    assert st["gate"] == "driver", st
+    assert calls == {"meta": 1, "theta": 1}, (calls, st)
+    assert list(loc["doc_id"]) == list(dist["doc_id"])
+    assert np.allclose(loc["score"], dist["score"], rtol=0, atol=0)
 
 
 def test_blockmax_maxscore_essential_lists(spark, tmp_path):
@@ -589,13 +643,32 @@ def test_positional_result_paths_identical_zero_jobs(pos_pair, spark, call,
     _assert_identical_zero_jobs(spark, run, *pos_pair, call)
 
 
-def test_text_empty_result_keeps_schema(pos_pair, spark):
+_EMPTY_CALLS = {
+    "phrase": lambda r, q, t: phrase_search(r, q, k=10, with_text=t),
+    "search": lambda r, q, t: search(r, q, k=10, with_text=t),
+    "search_many": lambda r, q, t: search_many(r, {"a": q, "b": q}, k=10,
+                                               with_text=t),
+}
+
+
+@_WITH_TEXT
+@pytest.mark.parametrize("call", sorted(_EMPTY_CALLS))
+def test_text_empty_result_keeps_schema(pos_pair, spark, call, with_text):
+    """A no-match answer has the columns of a match on the same reader
+    and launches no Spark job."""
     loc_r, _ = pos_pair
-    df = phrase_search(loc_r, "nonexistentterm networks", k=10,
-                       with_text=True)
-    assert df.schema.simpleString() == TEXT_SCHEMA
-    rows, jobs = _rows_and_jobs(spark, lambda: df)
-    assert rows == [] and jobs == 0
+    run = _EMPTY_CALLS[call]
+    want = run(loc_r, "neural networks", with_text).schema.simpleString()
+    if call == "search" and with_text:
+        assert want == TEXT_SCHEMA
+    no_match = ["nonexistentterm zzzzqqq", ""]
+    if call == "phrase":
+        no_match.append("nonexistentterm networks")  # one term absent
+    for q in no_match:
+        df = run(loc_r, q, with_text)
+        assert df.schema.simpleString() == want, q
+        rows, jobs = _rows_and_jobs(spark, lambda: df)
+        assert rows == [] and jobs == 0, (q, jobs)
 
 
 def test_text_fetch_gate_fallback(local_reader, spark, monkeypatch):

@@ -193,6 +193,26 @@ def test_prune_two_phase_multi_term(spark, tmp_path):
     assert np.allclose(pruned["score"], plain["score"], rtol=0, atol=0)
 
 
+@pytest.mark.parametrize("query", ["machine learning",
+                                   "neural networks for language"])
+def test_spark_metadata_gate_identical(spark, index_dir, monkeypatch, query):
+    """Block metadata over BLOCK_META_BUDGET: θ comes from the
+    Spark-metadata gate (one metadata-only job + a pyarrow fetch of the
+    best blocks) and the rows stay bit-identical to the plain scan. A
+    fresh reader keeps the per-term block-metadata cache empty, so the
+    budget check really runs."""
+    from research_engine_spark.operators import scorer
+
+    monkeypatch.setattr(scorer, "BLOCK_META_BUDGET", 0)
+    reader = scorer.IndexReader(spark, index_dir, driver_local_max_postings=0)
+    stats: dict = {}
+    pruned = search(reader, query, k=10, prune=True, with_text=False,
+                    prune_stats=stats).collect()
+    assert stats["gate"] == "spark", stats
+    plain = search(reader, query, k=10, prune=False, with_text=False)
+    assert [tuple(r) for r in pruned] == [tuple(r) for r in plain.collect()]
+
+
 def test_prune_gate_falls_back_on_uniform_corpus(reader):
     """On the uniform synthetic corpus, common-term query blocks are
     indistinguishable (every block's ub ≈ the global term ub), so the
