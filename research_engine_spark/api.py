@@ -357,9 +357,10 @@ class ResearchEngine:
 
     def batch_search(self, queries: dict[str, str] | list[str],
                      top_k: int = DEFAULT_TOP_K, **kwargs) -> DataFrame:
-        """Top-k for MANY queries in one Spark job (query logs, RAG eval
-        sets): blocks decode once for the whole batch, per-query ranking
-        is distributed. Scores bit-identical to .search per query."""
+        """Top-k for MANY queries at once (query logs, RAG eval sets):
+        blocks decode once for the whole batch and one fold ranks every
+        query, in two Spark jobs (none within the driver-local budget).
+        Scores bit-identical to .search per query."""
         return search_many(self.reader, queries, k=top_k, **kwargs)
 
     def retrieve_context(self, query: str, top_k: int = CHAT_TOP_K,

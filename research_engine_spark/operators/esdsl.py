@@ -148,6 +148,7 @@ from .scorer import (
     _fold_meta_pd,
     _all_match_scores,
     _fuzzy_term_meta,
+    _hits_df,
     _phrase_prefix_driver_local,
     _phrase_scores_driver_local,
     _term_meta,
@@ -1235,7 +1236,7 @@ def _term_df(ctx: _Ctx, reader: IndexReader, value: str) -> DataFrame:
     b = reader.stats["b"] if ctx.b is None else ctx.b
     meta = _term_meta(reader, [(value, 1)], k1, b)
     if meta.empty:
-        return ctx.spark.createDataFrame([], "doc_id bigint, score double")
+        return _hits_df(ctx.spark, _NO_HITS)
     meta = meta.assign(qtf=meta["qtf"].astype(np.float64))
     buckets = sorted({int(v) for v in
                       reader.bucket_of([value]).values()})
@@ -1424,10 +1425,9 @@ def _sloppy_phrase_df(ctx: _Ctx, reader: IndexReader,
 
     slop = int(spec.get("slop", 0))
     spark = ctx.spark
-    empty = spark.createDataFrame([], "doc_id bigint, score double")
     prep = _sloppy_prep(ctx, reader, spec)
     if prep is None:
-        return empty
+        return _hits_df(spark, _NO_HITS)
     t_a, t_b, sum_idf, k1, b, _df_sum = prep
     uniq = list(dict.fromkeys([t_a, t_b]))
     buckets = sorted(set(reader.bucket_of(uniq).values()))
@@ -1600,7 +1600,7 @@ def _multi_match_parts(ctx: _Ctx, body: dict):
 def _combine_fields_df(ctx: _Ctx, parts: list[DataFrame], mtype: str,
                        tie_breaker: float) -> DataFrame:
     if not parts:
-        return ctx.spark.createDataFrame([], "doc_id bigint, score double")
+        return _hits_df(ctx.spark, _NO_HITS)
     unioned = reduce(DataFrame.unionByName, parts)
     if mtype == "most_fields":
         agg = F.sum("score").alias("score")

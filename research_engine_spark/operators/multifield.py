@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .indexer import build_index
-from .scorer import IndexReader, search
+from .scorer import _NO_HITS, IndexReader, _hits_df, search
 
 
 def build_multifield_index(
@@ -72,7 +72,7 @@ def _search_multifield_driver_local(mf: MultiFieldReader, query: str,
     import numpy as np
     import pandas as pd
 
-    from .scorer import _NO_HITS, _fold_meta_pd, _term_meta
+    from .scorer import _fold_meta_pd, _term_meta
     from ..functions.analyzer import analyze_query
 
     frames = []
@@ -140,7 +140,7 @@ def search_multifield(
             "doc_id", (F.col("score") * F.lit(boost)).alias("fscore"),
             F.lit(fid).alias("_fid")))
     if not parts:
-        return mf.spark.createDataFrame([], "doc_id bigint, score double")
+        return _hits_df(mf.spark, _NO_HITS)
     unioned = reduce(DataFrame.unionByName, parts)
     piv = unioned.groupBy("doc_id").agg(
         *[F.sum(F.when(F.col("_fid") == i, F.col("fscore")))

@@ -806,6 +806,94 @@ def _fetch_term_blocks_arrow(reader: IndexReader,
                                  pads.field("term").isin(terms))
 
 
+def _clause_index(meta: pd.DataFrame, terms: list[str],
+                  qids: list) -> tuple[np.ndarray, ...]:
+    """The clause table of one batch, keyed by term rank: (first clause
+    of each term, clause count of each term, clause qid rank, clause
+    weight qtf*idf), clauses grouped by term. A term can carry SEVERAL
+    clauses: the same term across batch queries, or two fuzzy query
+    terms of one query expanding to the same index term."""
+    t_rank = {t: r for r, t in enumerate(terms)}
+    q_rank = {q: r for r, q in enumerate(qids)}
+    c_t = np.fromiter((t_rank[t] for t in meta["term"]), dtype=np.int64,
+                      count=len(meta))
+    by_t = np.argsort(c_t, kind="stable")
+    n_c = np.bincount(c_t, minlength=len(terms))
+    c_q = np.fromiter((q_rank[q] for q in meta["qid"]), dtype=np.int64,
+                      count=len(meta))
+    c_w = (meta["qtf"].to_numpy(np.float64)
+           * meta["idf"].to_numpy(np.float64))
+    return np.cumsum(n_c) - n_c, n_c, c_q[by_t], c_w[by_t]
+
+
+def _block_tf_parts(rows: pd.DataFrame, t_rank: dict[str, int],
+                    avgdl: float, k1: float, b: float
+                    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_id, term rank, tf_part) per posting of payload blocks (term,
+    doc_gaps, tfs, dls): ONE numpy pass over every block (guide §4.2;
+    decode_blocks_flat contract). tf_part is query-independent, so a
+    block decodes once however many clauses share its term."""
+    doc_ids, tfs, dls, counts = decode_blocks_flat(
+        rows["doc_gaps"].tolist(), rows["tfs"].tolist(),
+        rows["dls"].tolist())
+    blk_t = np.fromiter((t_rank[t] for t in rows["term"]), dtype=np.int64,
+                        count=len(rows))
+    return (doc_ids, np.repeat(blk_t, counts),
+            bm25_tf_part(tfs, dls, avgdl, k1, b))
+
+
+def _clause_partials(doc_ids: np.ndarray, post_t: np.ndarray,
+                     tf_part: np.ndarray, clauses: tuple
+                     ) -> tuple[np.ndarray, ...]:
+    """(qid rank, doc_id, term rank, partial) with one row per (posting,
+    clause on its term), partial = (qtf*idf) * tf_part: the same float64
+    product the Spark paths compute."""
+    first, n_c, c_q, c_w = clauses
+    rep = n_c[post_t]
+    src = np.repeat(np.arange(post_t.size), rep)
+    ci = (np.repeat(first[post_t], rep) + np.arange(src.size)
+          - np.repeat(np.cumsum(rep) - rep, rep))
+    return c_q[ci], doc_ids[src], post_t[src], c_w[ci] * tf_part[src]
+
+
+def _topk_by_q(q: np.ndarray, d: np.ndarray, s: np.ndarray,
+               k: int | None) -> tuple[np.ndarray, ...]:
+    """Rows in (q, score desc, doc_id asc) order, the first k per q
+    (k=None: all)."""
+    order = np.lexsort((d, -s, q))
+    if k is not None and order.size:
+        q_o = q[order]
+        new_q = np.r_[True, q_o[1:] != q_o[:-1]]
+        q_start = np.maximum.accumulate(
+            np.where(new_q, np.arange(q_o.size), 0))
+        order = order[np.arange(q_o.size) - q_start < int(k)]
+    return q[order], d[order], s[order]
+
+
+def _fold_topk(q: np.ndarray, d: np.ndarray, t: np.ndarray,
+               p: np.ndarray, k: int | None) -> tuple[np.ndarray, ...]:
+    """Per-(qid, doc) score by a strict left fold of its partials in
+    (term, partial) order — the exact order _sum_deterministic's
+    array_sort + aggregate uses (struct sort: term asc, then partial asc
+    for duplicate clause terms) — then the per-qid top-k. Returns (qid
+    rank, doc_id, score) in (qid, score desc, doc_id asc) order. The one
+    fold of both batch tiers: the driver-local one runs it over every
+    partial, the distributed one per shuffle partition (a doc's partials
+    all land in one) and then _topk_by_q over the partitions' top-k."""
+    if d.size == 0:
+        return q, d, p
+    order = np.lexsort((p, t, d, q))
+    q_s, d_s, p_s = q[order], d[order], p[order]
+    new_grp = (d_s[1:] != d_s[:-1]) | (q_s[1:] != q_s[:-1])
+    starts = np.flatnonzero(np.r_[True, new_grp])
+    lens = np.diff(np.r_[starts, d_s.size])
+    scores = np.zeros(starts.size, dtype=np.float64)
+    for j in range(int(lens.max())):
+        sel = lens > j
+        scores[sel] = scores[sel] + p_s[starts[sel] + j]
+    return _topk_by_q(q_s[starts], d_s[starts], scores, k)
+
+
 def _driver_local_topk_pd(reader: IndexReader, meta: pd.DataFrame,
                           k: int | None, k1: float,
                           b: float, rows: pd.DataFrame | None = None,
@@ -815,12 +903,12 @@ def _driver_local_topk_pd(reader: IndexReader, meta: pd.DataFrame,
     pyarrow-fetched blocks for one or many queries.
 
     meta: one row per (qid, term) clause with qtf/idf (the same clause
-    table the distributed paths broadcast). Returns (qid, doc_id, score)
+    table the distributed paths use). Returns (qid, doc_id, score)
     rows, per-qid-(score desc, doc_id asc)-ordered, or None when the
     tombstone set is too large to mask driver-side (caller falls back to
     the distributed anti-join path). Bit-identity contract: same decode,
     same float64 partial expression ((qtf*idf)*tf_part), and the same
-    term-sorted strict left fold as _sum_deterministic.
+    term-sorted strict left fold as _sum_deterministic (_fold_topk).
 
     rows: pre-fetched payload blocks (the block-max serving path passes
     only the blocks it proved relevant); default fetches every block of
@@ -833,101 +921,26 @@ def _driver_local_topk_pd(reader: IndexReader, meta: pd.DataFrame,
         if reader.n_deleted_rows > DRIVER_LOCAL_MAX_DELETES:
             return None
         deleted = _deleted_ids_arrow(reader)
-    avgdl = reader.stats["avgdl"]
     terms = sorted(set(meta["term"]))
+    qids = sorted(set(meta["qid"]))
     if rows is None:
         rows = _fetch_term_blocks_arrow(reader, terms)
-    # per-clause weights: a term can carry SEVERAL clauses (two fuzzy
-    # query terms of one query expanding to the same index term, or the
-    # same term across batch queries) — one partial row per clause,
-    # exactly like the Spark paths' broadcast join against the clause
-    # table.
-    wt: dict[str, list[tuple[str, float, float]]] = {}
-    for qid, t, q, i in zip(meta["qid"], meta["term"], meta["qtf"],
-                            meta["idf"]):
-        wt.setdefault(t, []).append((qid, float(q), float(i)))
-    # batch decode (guide §4.2): ONE numpy pass over every block's
-    # payload instead of a per-block Python loop — bit-identical values
-    # (decode_blocks_flat contract), ~10x less per-block overhead
-    n_blocks = len(rows)
-    doc_ids_f, tfs_f, dls_f, counts = decode_blocks_flat(
-        rows["doc_gaps"].tolist(), rows["tfs"].tolist(),
-        rows["dls"].tolist())
-    tf_part_f = bm25_tf_part(tfs_f, dls_f, avgdl, k1, b)
-    t_rank = {t: r for r, t in enumerate(terms)}
-    q_rank = {q: r for r, q in enumerate(sorted(set(meta["qid"])))}
-    blk_terms = rows["term"].tolist()
-    blk_rank = np.fromiter((t_rank[t] for t in blk_terms),
-                           dtype=np.int64, count=n_blocks)
-    post_rank = np.repeat(blk_rank, counts)
-    empty = pd.DataFrame({"qid": pd.Series(dtype=object),
-                          "doc_id": pd.Series(dtype=np.int64),
-                          "score": pd.Series(dtype=np.float64)})
-    empty.attrs["n_blocks"] = n_blocks
-    if doc_ids_f.size == 0:
-        return empty
-    if len(q_rank) == 1 and all(len(v) == 1 for v in wt.values()):
-        # fast path (the overwhelmingly common single-query shape): one
-        # clause per term — per-posting partial = (qtf*idf) * tf_part
-        # with the identical scalar product and elementwise multiply
-        w_blk = np.fromiter(
-            ((wt[t][0][1] * wt[t][0][2]) for t in blk_terms),
-            dtype=np.float64, count=n_blocks)
-        docs = doc_ids_f
-        parts = np.repeat(w_blk, counts) * tf_part_f
-        t_idx = post_rank
-        q_idx = np.zeros(docs.size, dtype=np.int64)
-    else:
-        d_l, p_l, t_l, q_l = [], [], [], []
-        for t, clauses in wt.items():
-            sel = np.flatnonzero(post_rank == t_rank[t])
-            if sel.size == 0:
-                continue
-            for qid, qtf, idf in clauses:
-                d_l.append(doc_ids_f[sel])
-                p_l.append(qtf * idf * tf_part_f[sel])
-                t_l.append(np.full(sel.size, t_rank[t], dtype=np.int64))
-                q_l.append(np.full(sel.size, q_rank[qid], dtype=np.int64))
-        docs = np.concatenate(d_l)
-        parts = np.concatenate(p_l)
-        t_idx = np.concatenate(t_l)
-        q_idx = np.concatenate(q_l)
+    docs, post_t, tf_part = _block_tf_parts(
+        rows, {t: r for r, t in enumerate(terms)}, reader.stats["avgdl"],
+        k1, b)
+    # keep_ids and tombstones drop whole docs: filter postings before
+    # the clause expansion
+    keep = np.ones(docs.size, dtype=bool)
     if keep_ids is not None:
-        keep = np.isin(docs, keep_ids)
-        q_idx, docs, t_idx, parts = (q_idx[keep], docs[keep],
-                                     t_idx[keep], parts[keep])
+        keep &= np.isin(docs, keep_ids)
     if deleted is not None and deleted.size:
-        keep = ~np.isin(docs, deleted)
-        q_idx, docs, t_idx, parts = (q_idx[keep], docs[keep],
-                                     t_idx[keep], parts[keep])
-    if docs.size == 0:
-        return empty
-    # strict left fold in (term, partial) order per (qid, doc) — the
-    # exact order _sum_deterministic's array_sort + aggregate uses
-    # (struct sort: term asc, then partial asc for duplicate clause
-    # terms)
-    order = np.lexsort((parts, t_idx, docs, q_idx))
-    q_s, d_s, p_s = q_idx[order], docs[order], parts[order]
-    new_grp = (d_s[1:] != d_s[:-1]) | (q_s[1:] != q_s[:-1])
-    starts = np.flatnonzero(np.r_[True, new_grp])
-    lens = np.diff(np.r_[starts, d_s.size])
-    uniq_d, uniq_q = d_s[starts], q_s[starts]
-    scores = np.zeros(uniq_d.size, dtype=np.float64)
-    for j in range(int(lens.max())):
-        sel = lens > j
-        scores[sel] = scores[sel] + p_s[starts[sel] + j]
-    inv_q = {r: q for q, r in q_rank.items()}
-    frames = []
-    for qc in np.unique(uniq_q):
-        m = uniq_q == qc
-        dq, sq = uniq_d[m], scores[m]
-        top = np.lexsort((dq, -sq))
-        if k is not None:
-            top = top[:int(k)]
-        frames.append(pd.DataFrame({
-            "qid": inv_q[int(qc)], "doc_id": dq[top], "score": sq[top]}))
-    out = pd.concat(frames, ignore_index=True)
-    out.attrs["n_blocks"] = n_blocks
+        keep &= ~np.isin(docs, deleted)
+    q, d, s = _fold_topk(*_clause_partials(
+        docs[keep], post_t[keep], tf_part[keep],
+        _clause_index(meta, terms, qids)), k)
+    out = pd.DataFrame({"qid": np.asarray(qids, dtype=object)[q],
+                        "doc_id": d, "score": s})
+    out.attrs["n_blocks"] = len(rows)
     return out
 
 
@@ -1679,12 +1692,6 @@ def search(
                     return local
 
     matching = _clause_matching(reader, meta)
-    # EXACT block upper bound recomputed at query time from the stored
-    # (tf, dl) skyline: valid for any (k1, b) AND robust to incremental
-    # appends (which change N/avgdl). A pure column expression —
-    # JVM-side, evaluated before any decode.
-    block_ub = F.col("qtf") * F.col("idf") * _sky_part_expr(k1, b, avgdl)
-
     payload_cols = ["term", "qtf", "idf", "gub", "doc_gaps", "tfs", "dls"]
 
     if _all_matches:
@@ -1732,7 +1739,15 @@ def search(
             gate = "driver"
         else:
             # extreme-scale fallback: metadata-only Spark jobs (never a
-            # payload shuffle) for θ and the keep count
+            # payload shuffle) for θ and the keep count. EXACT block
+            # upper bound recomputed at query time from the stored (tf,
+            # dl) skyline: valid for any (k1, b) AND robust to
+            # incremental appends (which change N/avgdl). A pure column
+            # expression — JVM-side, evaluated before any decode; built
+            # on this branch only, the one that reads it (its py4j
+            # construction is not free).
+            block_ub = (F.col("qtf") * F.col("idf")
+                        * _sky_part_expr(k1, b, avgdl))
             theta = _theta_spark_meta(reader, meta, k, k1, b,
                                       max(2, (int(k) // 128) + 2))
             cutoff = {t: theta - (total_gub - g)
@@ -1862,33 +1877,47 @@ def search(
 
 
 # ---------------------------------------------------------------------------
-# Batch multi-query search: many top-k's in ONE Spark job
+# Batch multi-query search: many top-k's in one fold
 # ---------------------------------------------------------------------------
 
 
-def _decode_tf_parts_factory(avgdl: float, k1: float, b: float):
-    """mapInPandas block decoder -> (doc_id, term, tf_part) rows.
-
-    tf_part = tf / (tf + k1*(1-b+b*dl/avgdl)) is query-INDEPENDENT: a
-    block shared by any number of batch queries decodes exactly once, and
-    per-query weights (qtf*idf) are applied JVM-side after a broadcast
-    join. This is what makes batch retrieval on Spark amortize: decode
-    volume is O(postings of the term UNION), not O(Σ per-query postings).
-    """
+def _decode_clauses_factory(avgdl: float, k1: float, b: float,
+                            terms: list[str], clauses: tuple):
+    """mapInPandas block decoder -> (q, doc_id, t, partial) rows, one per
+    (posting, clause on its term): the batch's small clause table rides
+    in the closure, so no weights join follows the decode."""
+    t_rank = {t: r for r, t in enumerate(terms)}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            doc_ids, tfs, dls, counts = decode_blocks_flat(
-                pdf["doc_gaps"].tolist(), pdf["tfs"].tolist(),
-                pdf["dls"].tolist())
-            if doc_ids.size:
-                yield pd.DataFrame({
-                    "doc_id": doc_ids,
-                    "term": np.repeat(pdf["term"].to_numpy(), counts),
-                    "tf_part": bm25_tf_part(tfs, dls, avgdl, k1, b),
-                })
+            q, d, t, p = _clause_partials(
+                *_block_tf_parts(pdf, t_rank, avgdl, k1, b), clauses)
+            if d.size:
+                yield pd.DataFrame({"q": q.astype(np.int32), "doc_id": d,
+                                    "t": t.astype(np.int32), "partial": p})
+
+    return run
+
+
+def _fold_topk_factory(k: int):
+    """mapInPandas per shuffle partition -> its per-qid top-k (q, doc_id,
+    score) by _fold_topk. A partition is hashed on doc_id, so it holds
+    every partial of its docs and folds them exactly; its top-k rows
+    contain the global top-k rows of its docs."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parts = [pdf for pdf in batches if not pdf.empty]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        q, d, s = _fold_topk(pdf["q"].to_numpy(np.int64),
+                             pdf["doc_id"].to_numpy(np.int64),
+                             pdf["t"].to_numpy(np.int64),
+                             pdf["partial"].to_numpy(np.float64), k)
+        yield pd.DataFrame({"q": q.astype(np.int32), "doc_id": d,
+                            "score": s})
 
     return run
 
@@ -1900,37 +1929,36 @@ def search_many(
     k1: float | None = None,
     b: float | None = None,
     with_text: bool = False,
-    n_sub: int = 32,
     fuzzy: bool = False,
     max_expansions: int = 50,
 ) -> DataFrame:
-    """Top-k BM25 for MANY queries in ONE Spark job (T1 batch variant).
+    """Top-k BM25 for MANY queries at once (T1 batch variant).
 
-    The single-query ``search`` pays one Spark job per query — fine
-    interactively, but a batch retrieval workload (RAG eval sets, query
-    logs, distillation) should amortize the scan: here every matching
-    block decodes once (see _decode_tf_parts_factory), per-query weights
-    join JVM-side, and the per-query top-k is a TWO-stage ranking — local
-    row_number over (qid, doc_id-hash subgroup) keeps ≤ k rows per
-    subgroup, then a final rank over the ≤ n_sub*k survivors per query —
-    so no single task ever holds one query's full matching set (the
-    single-partition-window trap at 10^12 turns).
+    The single-query ``search`` pays Spark's per-job floor per query; a
+    batch retrieval workload (RAG eval sets, query logs, distillation)
+    amortizes it: every matching block decodes once, however many batch
+    queries share its term, and the whole batch folds in one numpy
+    kernel (_fold_topk). Batches whose term-union posting count fits
+    reader.driver_local_max_postings run it driver-side on pyarrow-
+    fetched blocks (zero Spark jobs, see DRIVER_TOPK_MAX_POSTINGS).
+    Larger ones run two Spark jobs: a bucket- and term-pruned postings
+    scan whose decode emits one weighted partial per (posting, clause),
+    then, per doc_id shuffle partition, the same fold and per-query
+    top-k; the driver merges the partitions' top-k rows.
 
     Scores are bit-identical to ``search``: same float64 partials
-    ((qtf*idf)*tf_part, same association order), same term-sorted
-    deterministic fold, same (score desc, doc_id asc) tiebreak.
+    ((qtf*idf)*tf_part), same term-sorted strict left fold, same
+    (score desc, doc_id asc) tiebreak.
 
     queries: {qid: query} or a list (auto qids q0000, q0001, ...).
     fuzzy=True applies the R5 AUTO edit-distance expansion to every
     query with ONE shared vocabulary-candidate job for the whole batch
     (_fuzzy_term_meta_many) — per-query scores stay bit-identical to
     ``search(..., fuzzy=True)``.
-    Batches whose term-union posting count fits
-    reader.driver_local_max_postings take the zero-Spark-job
-    driver-local path (see DRIVER_TOPK_MAX_POSTINGS) — bit-identical,
-    same ordering.
-    Returns (qid, doc_id, score[, conv_id, turn_idx, text]) ordered by
-    (qid, score desc, doc_id asc).
+    Runs eagerly and returns (qid, doc_id, score[, conv_id, turn_idx,
+    text]) ordered by (qid, score desc, doc_id asc) as a local relation:
+    collecting it runs no further Spark job while the text fits
+    DRIVER_TEXT_MAX_BYTES (see _with_text).
     """
     spark = reader.spark
     k1 = reader.stats["k1"] if k1 is None else k1
@@ -1974,61 +2002,35 @@ def search_many(
         topk_pd = (_driver_local_topk_pd(reader, allmeta, k, k1, b)
                    if int(allmeta.drop_duplicates("term")["df"].sum())
                    <= reader.driver_local_max_postings else None)
-    if topk_pd is not None:
-        # rows are already in (qid, score desc, doc_id asc) order and the
-        # Arrow LocalRelation keeps it: zero Spark jobs per batch
-        return (_with_text(reader, topk_pd) if with_text
-                else _hits_df(spark, topk_pd))
-
-    terms = sorted(set(allmeta["term"]))
-    buckets = sorted({int(v) for v in reader.bucket_of(terms).values()})
-    avgdl = reader.stats["avgdl"]
-
-    decoded = (
-        reader.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-        .select("term", "doc_gaps", "tfs", "dls")
-        .mapInPandas(_decode_tf_parts_factory(avgdl, k1, b),
-                     schema="doc_id bigint, term string, tf_part double")
-    )
-    weights = spark.createDataFrame(
-        allmeta[["qid", "term", "qtf", "idf"]],
-        "qid string, term string, qtf double, idf double")
-    partials = (
-        decoded.join(F.broadcast(weights), "term")
-        .select(
-            "qid", "doc_id", "term",
-            (F.col("qtf") * F.col("idf") * F.col("tf_part")).alias("partial"),
-        )
-    )
-    # ≤2 clauses per query -> plain sum is bit-identical (IEEE addition
-    # commutes; see _sum_deterministic) and keeps map-side partial agg
-    if int(allmeta.groupby("qid").size().max()) <= 2:
-        per_doc = partials.groupBy("qid", "doc_id").agg(
-            F.sum("partial").alias("score"))
-    else:
-        per_doc = partials.groupBy("qid", "doc_id").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("term", "partial"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["partial"],
-            ).alias("score"))
-    scored = reader.live_only(per_doc)
-    # two-stage exact top-k: the union of per-subgroup top-k contains the
-    # global top-k, and stage 2 ranks ≤ n_sub*k rows per query
-    sub = F.pmod(F.hash("doc_id"), F.lit(int(n_sub)))
-    w1 = Window.partitionBy("qid", sub).orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    w2 = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    topk = (
-        scored.withColumn("rn1", F.row_number().over(w1))
-        .filter(F.col("rn1") <= int(k)).drop("rn1")
-        .withColumn("rn2", F.row_number().over(w2))
-        .filter(F.col("rn2") <= int(k)).drop("rn2")
-    )
-    if with_text:
-        return _with_text(reader, topk)
-    return topk.orderBy("qid", F.desc("score"), F.asc("doc_id"))
+    if topk_pd is None:
+        # Memory: a fold task holds one doc_id shuffle partition's
+        # partials (Σ clause postings / P on average), and the driver
+        # collects and merges ≤ P·Q·k rows (P partitions, Q queries) —
+        # it never holds the Σ df postings.
+        terms = sorted(set(allmeta["term"]))
+        qids = sorted(set(allmeta["qid"]))
+        buckets = sorted({int(v) for v in reader.bucket_of(terms).values()})
+        partials = (
+            reader.postings.filter(
+                F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+            .select("term", "doc_gaps", "tfs", "dls")
+            .mapInPandas(
+                _decode_clauses_factory(reader.stats["avgdl"], k1, b, terms,
+                                        _clause_index(allmeta, terms, qids)),
+                schema="q int, doc_id bigint, t int, partial double"))
+        tops = (reader.live_only(partials).repartition("doc_id")
+                .mapInPandas(_fold_topk_factory(k),
+                             schema="q int, doc_id bigint, score double")
+                .toPandas())
+        q, d, s = _topk_by_q(tops["q"].to_numpy(np.int64),
+                             tops["doc_id"].to_numpy(np.int64),
+                             tops["score"].to_numpy(np.float64), k)
+        topk_pd = pd.DataFrame({"qid": np.asarray(qids, dtype=object)[q],
+                                "doc_id": d, "score": s})
+    # rows are in (qid, score desc, doc_id asc) order and the Arrow
+    # LocalRelation keeps it
+    return (_with_text(reader, topk_pd) if with_text
+            else _hits_df(spark, topk_pd))
 
 
 # ---------------------------------------------------------------------------
@@ -2208,11 +2210,9 @@ def phrase_scores(reader: IndexReader, phrase: str,
     spark = reader.spark
     ordered_terms, uniq, meta, sum_idf, k1, b = _phrase_prologue(
         reader, phrase, k1, b)
-    empty = spark.createDataFrame([], "doc_id bigint, score double")
-    if not ordered_terms:
-        return empty
-    if len(meta) < len(uniq):
-        return empty  # a phrase term is absent -> no phrase match anywhere
+    if not ordered_terms or len(meta) < len(uniq):
+        # no term, or a phrase term is absent -> no phrase match anywhere
+        return _hits_df(spark, _NO_HITS)
     avgdl = reader.stats["avgdl"]
     n_uniq = len(uniq)
 
@@ -2403,9 +2403,8 @@ def phrase_prefix_scores(reader: IndexReader, phrase: str,
     spark = reader.spark
     ordered_terms, fetch, meta, sum_idf, expansions, k1, b = \
         _phrase_prefix_prologue(reader, phrase, k1, b, max_expansions)
-    empty = spark.createDataFrame([], "doc_id bigint, score double")
     if not ordered_terms:
-        return empty
+        return _hits_df(spark, _NO_HITS)
     avgdl = reader.stats["avgdl"]
     uniq_fixed = sorted(set(ordered_terms[:-1]))
     exp_set = set(expansions)

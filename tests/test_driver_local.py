@@ -722,3 +722,62 @@ def test_text_fetch_lifecycle(spark, tmp_path):
     assert r._path("docs") != os.path.join(d, "docs")
     check("neural networks")
     check("zebraquux")
+
+
+# ---------------------------------------------------------------------------
+# batch tiers: the distributed search_many (decode with the clause weights,
+# one fold per doc_id shuffle partition, driver merge) and the driver-local
+# one run the same numpy kernel; both equal per-query search() row for row
+# ---------------------------------------------------------------------------
+
+_BATCHES = {
+    # queries share terms: one decoded posting feeds several clauses
+    "shared_terms": ({"a": "neural networks", "b": "neural network models",
+                      "c": "machine learning networks",
+                      "d": "the learning of machines"}, {}),
+    # "th\u0435" (Cyrillic e) expands to "the": two clauses on one term
+    "fuzzy_collision": ({"a": "the th\u0435 networks network",
+                         "b": "neurel netwerk"}, {"fuzzy": True}),
+    "with_text": ({"a": "neural networks", "b": "machine learning"},
+                  {"with_text": True}),
+}
+
+
+@pytest.mark.parametrize("batch", sorted(_BATCHES))
+def test_batch_tiers_bit_identical(local_reader, reader, batch):
+    from research_engine_spark.functions.analyzer import analyze_query
+    from research_engine_spark.operators.scorer import _fuzzy_term_meta
+
+    qs, kw = _BATCHES[batch]
+    if batch == "fuzzy_collision":
+        meta = _fuzzy_term_meta(reader, analyze_query(qs["a"]), 1.2, 0.75,
+                                50)
+        assert not meta["term"].is_unique
+    dist = [tuple(r) for r in search_many(reader, qs, k=7, **kw).collect()]
+    loc = [tuple(r) for r in
+           search_many(local_reader, qs, k=7, **kw).collect()]
+    assert dist and dist == loc
+    per_query = [(qid, *r) for qid in sorted(qs) for r in search(
+        reader, qs[qid], k=7, with_text=kw.get("with_text", False),
+        fuzzy=kw.get("fuzzy", False)).collect()]
+    assert dist == per_query
+
+
+def test_no_match_scores_zero_jobs(pos_pair, spark):
+    """A no-match phrase_scores and an ES term leaf on an absent value
+    (both on the distributed tier) answer with an empty (doc_id, score)
+    local relation: no row and no Spark job, building it included."""
+    from research_engine_spark.operators.esdsl import _Ctx, _term_df
+    from research_engine_spark.operators.scorer import phrase_scores
+
+    _, dist_r = pos_pair
+    calls = {
+        "phrase": lambda: phrase_scores(dist_r, "nonexistentterm networks"),
+        "term": lambda: _term_df(_Ctx(dist_r, None, None), dist_r,
+                                 "zzzzqqq"),
+    }
+    for name, make in calls.items():
+        assert (make().schema.simpleString()
+                == "struct<doc_id:bigint,score:double>"), name
+        rows, jobs = _rows_and_jobs(spark, make)
+        assert rows == [] and jobs == 0, (name, jobs)

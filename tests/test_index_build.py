@@ -185,6 +185,42 @@ def test_build_determinism(spark, small_tx):
         shutil.rmtree(d2, ignore_errors=True)
 
 
+def test_build_files_deterministic(spark, small_tx):
+    """Two builds of one corpus write the same rows in the same order to
+    every postings and term_stats bucket file (rows are sorted within
+    the write, not left in shuffle-fetch order). wall_ms is the merge
+    task's measured time and differs by construction."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def bucket_files(d, table):
+        root = IndexReader(spark, d)._path(table)
+        out = {}
+        for bdir in sorted(glob.glob(os.path.join(root, "bucket=*"))):
+            parts = [pq.read_table(f) for f in
+                     sorted(glob.glob(os.path.join(bdir, "*.parquet")))]
+            t = pa.concat_tables(parts)
+            out[os.path.basename(bdir)] = t.drop_columns(
+                [c for c in ("wall_ms",) if c in t.column_names])
+        return out
+
+    d1, d2 = tempfile.mkdtemp(), tempfile.mkdtemp()
+    try:
+        build_index(small_tx, d1, n_buckets=4)
+        build_index(small_tx, d2, n_buckets=4)
+        for table in ("postings", "term_stats"):
+            a, b = bucket_files(d1, table), bucket_files(d2, table)
+            assert len(a) == 4 and list(a) == list(b), table
+            for bucket in a:
+                assert a[bucket].num_rows > 0
+                assert a[bucket].equals(b[bucket]), (table, bucket)
+    finally:
+        shutil.rmtree(d1, ignore_errors=True)
+        shutil.rmtree(d2, ignore_errors=True)
+
+
 def test_corpus_stats_deterministic_across_partitionings(spark, small_tx):
     """corpus_stats.json must be byte-identical across different input
     partitionings: total_tokens is an exact int64 sum over the pairs (the

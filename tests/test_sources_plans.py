@@ -61,7 +61,6 @@ def test_transcript_scan_schema(spark, transcripts_df):
 from research_engine_spark.plans.inspect import (  # noqa: E402
     assert_scan_efficient,
     formatted_plan as _formatted_plan,
-    plan_facts,
 )
 
 
@@ -105,24 +104,42 @@ def test_iceberg_gate(spark):
     assert iceberg_available(spark) is False  # no jar in this image
 
 
-def test_batch_search_plan_shape(reader):
-    """search_many's plan must broadcast the per-query weights, keep the
-    postings scan partition-pruned, and rank through PARTITIONED windows
-    only (never a no-partition global WindowExec)."""
+def test_batch_search_plan_shape(reader, monkeypatch):
+    """The distributed search_many reads a bucket-partition-pruned
+    postings scan and launches at most 2 Spark jobs per batch (the decode
+    with its shuffle write, then the per-partition fold collected to the
+    driver); its result is a local relation, so collecting it runs
+    none."""
     from research_engine_spark.operators.scorer import search_many
-    from research_engine_spark.plans.inspect import (
-        formatted_plan,
-        plan_facts,
-    )
 
-    df = search_many(reader, ["neural networks", "machine learning"], k=5)
-    facts = plan_facts(df)
-    assert facts.broadcast_joins >= 1
-    assert facts.has_partition_filters  # bucket pruning on postings
-    plan = formatted_plan(df)
-    for line in plan.splitlines():
-        if "Window" in line and "windowspecdefinition" in line.lower():
-            assert "qid" in line, f"unpartitioned window:\n{line}"
+    qs = ["neural networks", "machine learning"]
+    search_many(reader, qs, k=5).collect()  # warm the term dictionary
+    spark = reader.spark
+    collected = []
+    cls = type(spark.range(1))
+    to_pandas = cls.toPandas
+
+    def capture(self):
+        collected.append(self)
+        return to_pandas(self)
+
+    monkeypatch.setattr(cls, "toPandas", capture)
+    sc = spark.sparkContext
+    sc.setJobGroup("batch_plan_probe", "probe")
+    try:
+        rows = search_many(reader, qs, k=5).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("batch_plan_probe")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(rows) == 10
+    assert len(jobs) <= 2, f"batch launched {len(jobs)} jobs"
+    assert len(collected) == 1
+    facts = assert_scan_efficient(collected[0],
+                                  require_partition_pruning=True)
+    assert facts.broadcast_joins == 0  # clause weights ride in the decode
+    plan = _formatted_plan(collected[0])
+    assert "In(term, " in plan  # pushed to row groups
+    assert "Window" not in plan
 
 
 def test_single_term_search_has_no_aggregate_shuffle(reader):
