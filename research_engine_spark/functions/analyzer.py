@@ -15,7 +15,6 @@ token occurrences), then map back — per-unique-token Python, not per-row.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -119,12 +118,6 @@ def analyze_series(texts: pd.Series) -> pd.Series:
     return pd.Series([s.tolist() for s in splits], index=texts.index)
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf(texts: pd.Series) -> pd.Series:
-    """Scalar pandas UDF: text -> array<string> of analyzed terms (F1)."""
-    return analyze_series(texts)
-
-
 @F.pandas_udf(T.IntegerType())
 def token_count_udf(texts: pd.Series) -> pd.Series:
     """Per-turn token count = doc length ``dl`` (reference A4:
@@ -174,13 +167,3 @@ def analyze_query(query: str,
     for t in terms:
         counts[t] = counts.get(t, 0) + 1
     return sorted(counts.items())
-
-
-def mapinpandas_tokenize(
-    it: Iterator[pd.DataFrame], text_col: str = "text"
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas-shaped tokenizer for pipelines that want one pass."""
-    for pdf in it:
-        pdf = pdf.copy()
-        pdf["terms"] = analyze_series(pdf[text_col])
-        yield pdf

@@ -37,7 +37,6 @@ split on the sentinel.
 from __future__ import annotations
 
 import json
-import os
 import re
 from collections import Counter, defaultdict
 
@@ -251,10 +250,3 @@ def train_bpe(df: DataFrame, text_col: str = "text", n_merges: int = 1000,
     is the at-scale architecture. Same df + params => same merges."""
     wc = _word_counts(df, text_col, max_vocab_words)
     return BPETokenizer(_train_merges(wc, int(n_merges)))
-
-
-def train_and_save(df: DataFrame, path: str, **kwargs) -> BPETokenizer:
-    tok = train_bpe(df, **kwargs)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tok.save(path)
-    return tok

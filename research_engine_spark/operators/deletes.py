@@ -180,15 +180,6 @@ def deleted_ids_sorted(index_dir: str, path: str | None = None) -> np.ndarray:
     return np.unique(arr.astype(np.int64))
 
 
-def clear_tombstones(index_dir: str) -> None:
-    """Remove the tombstone table (after a purge has applied it)."""
-    import shutil
-
-    d = _tomb_path(index_dir)
-    if os.path.isdir(d):
-        shutil.rmtree(d)
-
-
 def upsert_turns(transcripts: DataFrame, index_dir: str, **append_kwargs):
     """Overwrite-by-key (the ES ``index`` action analog): tombstone any
     existing docs with the incoming rows' (conv_id, turn_idx) keys, then

@@ -33,13 +33,12 @@ from pyspark.sql import functions as F
 
 
 def _offsets_with_meta(
-    transcripts: DataFrame, n_partitions: int | None = None
+    transcripts: DataFrame,
 ) -> tuple[DataFrame, int, bool]:
     """(offsets_df[conv_id, n_turns, conv_offset], n_convs, contiguous) —
     one aggregation + one O(#partitions) collect."""
     spark = transcripts.sparkSession
-    if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     conv_dim = transcripts.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
@@ -89,14 +88,6 @@ def _offsets_with_meta(
         )
     )
     return offsets, n_convs, contiguous
-
-
-def conv_offsets(transcripts: DataFrame,
-                 n_partitions: int | None = None) -> DataFrame:
-    """Per-conversation global offset table: (conv_id, n_turns,
-    conv_offset). conv_offset = turns in all conversations ordered before
-    this one under lexicographic conv_id order."""
-    return _offsets_with_meta(transcripts, n_partitions)[0]
 
 
 def with_doc_ids(transcripts: DataFrame) -> DataFrame:

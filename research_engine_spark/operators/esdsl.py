@@ -143,6 +143,7 @@ from .scorer import (
     IndexReader,
     _decode_partials_factory,
     _deleted_ids_arrow,
+    _empty_df,
     _is_deleted_arrow,
     _fetch_term_blocks_arrow,
     _fold_meta_pd,
@@ -4097,7 +4098,7 @@ def es_suggest(index, body: dict) -> DataFrame:
     out_schema = ("suggest string, token string, candidate string, "
                   "score double, freq long")
     if not wanted:
-        return spark.createDataFrame([], out_schema)
+        return _empty_df(spark, out_schema)
 
     # df of each distinct token (for suggest_mode missing/popular)
     tokens = sorted({t for _, t, *_ in wanted})

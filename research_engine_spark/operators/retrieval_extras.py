@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .fusion import RRF_K, rrf_fuse
-from .scorer import IndexReader, search
+from .scorer import IndexReader, _empty_df, search
 
 
 def multi_query_search(
@@ -52,7 +52,7 @@ def multi_query_search(
             F.desc("score"), F.asc("doc_id"))
         ranked.append(hits.withColumn("rank", F.row_number().over(w)))
     if not ranked:
-        return spark.createDataFrame([], "doc_id bigint, rrf_score double")
+        return _empty_df(spark, "doc_id bigint, rrf_score double")
     return rrf_fuse(ranked, ["doc_id"], k=rrf_k, top_n=k)
 
 

@@ -988,6 +988,17 @@ def _hits_df(spark: SparkSession, topk_pd: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame(_hits_table(topk_pd))
 
 
+def _empty_df(spark: SparkSession, ddl: str) -> DataFrame:
+    """Empty result of a DDL schema (``"doc_id bigint, ps double"``) as an
+    Arrow LocalRelation: 0 Spark jobs, like _hits_df, where
+    ``createDataFrame([], ddl)`` parallelizes an empty list (1 job)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return spark.createDataFrame(
+        to_arrow_schema(StructType.fromDDL(ddl)).empty_table())
+
+
 # Driver-side text fetch bound (bytes): _with_text reads the docs row
 # groups whose footer doc_id [min, max] can hold a top-k id, so its cost
 # is their total (uncompressed) size, not k. The build writes docs in

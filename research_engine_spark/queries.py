@@ -22,6 +22,7 @@ from .functions import gopher as GP
 from .functions import textstats as TS
 from .operators import dedup as DD
 from .operators.fusion import rrf_fuse, with_rank
+from .operators.scorer import _empty_df
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 SQL: dict[str, str] = {}
@@ -1623,7 +1624,7 @@ def _phrase_scores_df(spark, sf_dir, t1: str, t2: str):
            pos.filter(F.col("term").isin([t1, t2])).groupBy("term")
            .agg(F.countDistinct("doc_id").alias("df")).collect()}
     if len(dfs) < 2:
-        return spark.createDataFrame([], "doc_id bigint, ps double")
+        return _empty_df(spark, "doc_id bigint, ps double")
     sum_idf = sum(math.log(1.0 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5))
                   for t in (t1, t2))
     a = pos.filter(F.col("term") == t1).select("doc_id", "p")

@@ -11,6 +11,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Python workers fork from this daemon module (see its docstring), so it
+# must be importable wherever a worker starts, or every Python job fails.
+# get_spark always builds a local master, where the driver's copy of the
+# package is the workers' copy, so its parent directory goes into
+# spark.executorEnv.PYTHONPATH, which Spark merges into the workers'
+# PYTHONPATH; the workers no longer rely on the driver's cwd. On a real
+# cluster (spark-submit), ship the package with spark.submit.pyFiles or an
+# installed wheel so executors can import the daemon when they start;
+# addPyFile alone comes too late.
+_DAEMON_MODULE = "research_engine_spark._daemon"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "research_engine_spark",
@@ -58,6 +70,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", _DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -74,15 +74,3 @@ def read_transcripts(spark: SparkSession, path: str,
     if fmt == "csv":
         return read_csv(spark, path, TRANSCRIPT_STRUCT)
     raise ValueError(f"unsupported format: {fmt}")
-
-
-def first_existing(spark: SparkSession, paths: list[str]) -> str:
-    """U4: candidate-path coalesce (es_index_chunks.py:11-15 prefers
-    chunks_oai.jsonl over chunks.jsonl)."""
-    jvm_fs = spark._jvm.org.apache.hadoop.fs  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    for p in paths:
-        hp = jvm_fs.Path(p)
-        if hp.getFileSystem(conf).exists(hp):
-            return p
-    raise FileNotFoundError(f"none of {paths} exist")

@@ -567,10 +567,15 @@ def test_blockmax_maxscore_essential_lists(spark, tmp_path):
 import itertools  # noqa: E402
 import os  # noqa: E402
 
+from research_engine_spark.operators.esdsl import es_suggest  # noqa: E402
+from research_engine_spark.operators.retrieval_extras import (  # noqa: E402
+    multi_query_search,
+)
 from research_engine_spark.operators.scorer import (  # noqa: E402
     phrase_search,
     search_many,
 )
+from research_engine_spark.queries import _phrase_scores_df  # noqa: E402
 
 TEXT_SCHEMA = ("struct<doc_id:bigint,score:double,conv_id:string,"
                "turn_idx:int,text:string>")
@@ -781,3 +786,42 @@ def test_no_match_scores_zero_jobs(pos_pair, spark):
                 == "struct<doc_id:bigint,score:double>"), name
         rows, jobs = _rows_and_jobs(spark, make)
         assert rows == [] and jobs == 0, (name, jobs)
+
+
+# one call per empty result that is not a (doc_id, score) hit list: the
+# empty answer for text None, a matching one for the _MATCHING_TEXT
+_EMPTY_RESULTS = {
+    "phrase_ps": lambda spark, r, sf, t: _phrase_scores_df(
+        spark, sf, t or "zzzzqqq", "join"),
+    "suggest": lambda spark, r, sf, t: es_suggest(
+        r, {"s": {"text": t or "ab", "term": {"suggest_mode": "always"}}}),
+    "multi_query": lambda spark, r, sf, t: multi_query_search(
+        r, [t] if t else [], k=5),
+}
+_MATCHING_TEXT = {"phrase_ps": "spark", "suggest": "neurel",
+                  "multi_query": "neural networks"}
+
+
+@pytest.fixture(scope="module")
+def documents_dir(spark, tmp_path_factory):
+    """A directory holding the driver contract's documents table."""
+    d = tmp_path_factory.mktemp("sf")
+    spark.createDataFrame(
+        [(1, "a spark join"), (2, "join the spark")],
+        "doc_id bigint, text string",
+    ).write.parquet(str(d / "documents.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize("name", sorted(_EMPTY_RESULTS))
+def test_empty_results_zero_jobs(name, reader, spark, documents_dir):
+    """The empty answers of the phrase-score twin, the term suggester and
+    multi-query RRF are local relations with a matching call's columns:
+    collecting them runs no Spark job."""
+    make = _EMPTY_RESULTS[name]
+    match = make(spark, reader, documents_dir, _MATCHING_TEXT[name])
+    assert match.count() > 0
+    empty = make(spark, reader, documents_dir, None)
+    assert empty.schema.simpleString() == match.schema.simpleString()
+    rows, jobs = _rows_and_jobs(spark, lambda: empty)
+    assert rows == [] and jobs == 0, (name, jobs)
