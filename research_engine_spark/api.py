@@ -251,16 +251,14 @@ class ResearchEngine:
     # --- query surface -----------------------------------------------------
     def search(self, query: str, top_k: int = DEFAULT_TOP_K,
                k1: float | None = None, b: float | None = None,
-               prune: bool = True, bool_should: bool = False,
-               highlight: bool = False, fuzzy: bool = False) -> DataFrame:
-        """BM25 top-k (es_search_final.py search_chunks analog).
-        prune defaults to True: the block-max gate is DRIVER-side
-        (pyarrow block metadata, zero extra Spark jobs on fallback) and
-        the pruned path is proven bit-identical to the plain scan
-        (tests/test_rank_identity.py), so pruning is free when it can't
-        help and strictly decodes fewer blocks when it can
-        (BENCH/prune_crossover_r3.json: single-clause pruned 0.77s vs
-        plain 1.37s on 7M turns). bool_should=True adds the boosted
+               bool_should: bool = False, highlight: bool = False,
+               fuzzy: bool = False) -> DataFrame:
+        """BM25 top-k (es_search_final.py search_chunks analog), with
+        text. Budget-sized queries run on the zero-Spark-job driver-local
+        tiers (flat, or block-max pruned when the kept blocks fit), the
+        rest on the distributed executor; every tier returns
+        bit-identical rows (tests/test_rank_identity.py,
+        tests/test_driver_local.py). bool_should=True adds the boosted
         phrase clause (requires a positional index). fuzzy=True applies
         the reference's ``fuzziness: AUTO`` edit-distance expansion
         (es_search_final.py:21)."""
@@ -269,7 +267,7 @@ class ResearchEngine:
                                       b=b, with_text=True)
         else:
             hits = search(self.reader, query, k=top_k, k1=k1, b=b,
-                          prune=prune, with_text=True, fuzzy=fuzzy)
+                          with_text=True, fuzzy=fuzzy)
         if highlight:
             hits = with_highlights(hits, query)
         return hits

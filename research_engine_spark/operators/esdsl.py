@@ -138,10 +138,8 @@ from .codec import delta_decode, vb_decode
 from .multifield import MultiFieldReader
 from .scorer import (
     DRIVER_LOCAL_MAX_DELETES,
-    PARTIAL_SCHEMA,
     _NO_HITS,
     IndexReader,
-    _decode_partials_factory,
     _deleted_ids_arrow,
     _empty_df,
     _is_deleted_arrow,
@@ -1230,31 +1228,14 @@ def _decode_docids(batches):
 
 def _term_df(ctx: _Ctx, reader: IndexReader, value: str) -> DataFrame:
     """ES term query, distributed: literal index-term lookup (no
-    analysis), BM25-scored. Single term => one posting per doc, so the
-    decoded partial IS the score — no per-doc sum shuffle (same
-    argument as search()'s single-term path)."""
+    analysis), BM25-scored on the distributed executor. One clause, so
+    each decode partition folds on its own — no doc_id shuffle."""
     k1 = reader.stats["k1"] if ctx.k1 is None else ctx.k1
     b = reader.stats["b"] if ctx.b is None else ctx.b
     meta = _term_meta(reader, [(value, 1)], k1, b)
     if meta.empty:
         return _hits_df(ctx.spark, _NO_HITS)
-    meta = meta.assign(qtf=meta["qtf"].astype(np.float64))
-    buckets = sorted({int(v) for v in
-                      reader.bucket_of([value]).values()})
-    info = ctx.spark.createDataFrame(
-        meta[["term", "qtf", "idf", "gub"]],
-        "term string, qtf double, idf double, gub double")
-    matching = (reader.postings
-                .filter(F.col("bucket").isin(buckets)
-                        & (F.col("term") == F.lit(value)))
-                .join(F.broadcast(info), "term"))
-    partials = matching.select(
-        "term", "qtf", "idf", "gub", "doc_gaps", "tfs", "dls"
-    ).mapInPandas(
-        _decode_partials_factory(reader.stats["avgdl"], k1, b),
-        schema=PARTIAL_SCHEMA)
-    return reader.live_only(
-        partials.select("doc_id", F.col("partial").alias("score")))
+    return _all_match_scores(reader, meta, k1, b)
 
 
 def _const_docs_df(reader: IndexReader, term_pred,
@@ -1658,12 +1639,9 @@ def _clause_df(ctx: _Ctx, clause: dict) -> DataFrame:
         meta = _fuzzy_term_meta(reader, [(str(spec["value"]), 1)], k1, b,
                                 int(spec.get("max_expansions", 50)))
         if meta.empty:
-            out = ctx.spark.createDataFrame(
-                [], "doc_id bigint, score double")
+            out = _hits_df(ctx.spark, _NO_HITS)
         else:
-            out = _all_match_scores(
-                reader, meta.assign(qtf=meta["qtf"].astype(np.float64)),
-                k1, b)
+            out = _all_match_scores(reader, meta, k1, b)
         return _scale_df(out, float(spec.get("boost", 1.0)))
     if kind == "dis_max":
         if not isinstance(body, dict) or not body.get("queries"):
@@ -2053,7 +2031,7 @@ def _search_after_parts(body: dict) -> tuple[float, int] | None:
 
     The cursor compares the EXACT float sort value (as ES does): safe
     because every scoring path is now order-deterministic — term partials
-    fold term-sorted (_sum_deterministic), should/field combinations fold
+    fold term-sorted (_fold_topk), should/field combinations fold
     clause-pivoted left-to-right — so a recomputed page reproduces the
     previous page's boundary score bit-for-bit on either evaluation path
     (ADVICE r4). Two requirements remain, as in ES: pass the UNROUNDED
@@ -3735,10 +3713,9 @@ def _significant_terms(reader, docs: DataFrame, args: dict) -> DataFrame:
     mode = reader.stats.get("analyzer", "english_folded")
     fg_total = docs.count()
     if fg_total == 0:
-        spark = docs.sparkSession
-        return spark.createDataFrame(
-            [], "key string, doc_count bigint, bg_count bigint, "
-                "score double")
+        return _empty_df(docs.sparkSession,
+                         "key string, doc_count bigint, bg_count bigint, "
+                         "score double")
 
     def _fg_terms(it):
         import numpy as np

@@ -8,36 +8,32 @@ and returns the top-k heap. Here the lifecycle is (SURVEY.md §3):
 1. query string -> shared analyzer -> [(term, qtf)] (driver-side, tiny)
 2. term metadata lookup on ``term_stats`` with bucket partition pruning
    (the J6 "query-term ⋈ term dictionary" join; O(#query terms) collect)
-3. block-max pruning, EXACT two-phase variant (distributed BMW analog):
-     phase A: skip block B of term t iff ub(B) < θ − Σ_{t'≠t} gub(t')
-              (θ = lower bound on the k-th final score, from exactly
-              scoring a few best blocks of the strongest term). Claim: any
-              doc whose blocks are ALL skipped has score < θ — for
-              t* = argmax_t ub(B_t(d)):
-              score(d) ≤ ub(B_{t*}(d)) + Σ_{t'≠t*} gub(t') < θ.
-              So the true top-k all appear in phase-A output; but their
-              phase-A scores may be partial (some of their blocks skipped).
-     phase B: per-doc upper bound ub_total(d) = approx(d) +
-              Σ_{t not contributing to d} gub(t) ≥ score(d). Candidates
-              C = {d : ub_total(d) ≥ θ''} with θ'' = max(θ, k-th approx
-              score) — still a valid lower bound on s_k because
-              approx ≤ true. True top-k ⊆ C. Exactly rescore ONLY C
-              (blocks range-skipped via [first_doc_id, last_doc_id] vs C's
-              id range, decode filtered to C) -> exact scores.
-   θ, the MaxScore essential lists, the doc-range-aligned skip bounds
-   and the fully-decoded slack are ONE _BlockPlan per query, computed
-   driver-side from block metadata (_block_plan) and executed by either
-   the driver-local blockmax tier or the distributed pruned tiers; above
-   BLOCK_META_BUDGET the skip predicates are plain column comparisons on
-   block metadata, evaluated JVM-side before any decode.
-4. surviving blocks decode + score inside vectorized pandas UDFs (numpy
-   varbyte decode, float64 BM25)
-5. per-doc deterministic summation (term-sorted fold order — bit-identical
-   scores regardless of partitioning) -> TakeOrderedAndProject top-k with
-   (score desc, doc_id asc) tiebreak.
+3. tier choice by Σ df against reader.driver_local_max_postings:
+   - flat driver-local: pyarrow fetch of every block of the query terms,
+     numpy decode + fold, zero Spark jobs;
+   - block-max driver-local (the BMW/MaxScore analog, exact): one
+     _BlockPlan per query from driver-side block metadata (_block_plan:
+     θ = lower bound on the k-th final score, MaxScore essential lists,
+     doc-range-aligned skip bounds, fully-decoded slack). Phase A
+     decodes the kept blocks, phase B rescores exactly the docs whose
+     upper bound reaches θ''. Zero Spark jobs; it declines when a phase
+     exceeds its decode budget or the block metadata exceeds
+     BLOCK_META_BUDGET;
+   - the distributed executor (_distributed_scores) for everything
+     else, and for whole-match-set callers: a bucket/term-pruned
+     postings scan, decoded inside a vectorized pandas UDF (numpy
+     varbyte decode, float64 BM25) into one weighted partial per
+     (posting, clause).
+4. per-doc deterministic summation: every tier folds a doc's partials
+   with the same numpy kernel (_fold_topk), a strict left fold in
+   (term, partial) order, so scores are bit-identical regardless of
+   tier or partitioning; on the executor a doc_id shuffle precedes it
+   when a query has several clauses.
+5. top-k with (score desc, doc_id asc) tiebreak, per partition and then
+   merged on the driver; the result is an Arrow local relation.
 
 Parameterized k1/b (north rule): the block bound is recomputed at query
-time from stored (max_tf, min_dl) — a pure column expression valid for ANY
+time from the block's stored (tf, dl) skyline — valid for ANY
 (k1, b) and never stale under incremental appends (which change N/avgdl),
 since the BM25 term partial is increasing in tf and decreasing in dl. No
 score is stored per block, so corpus stats never ride the pack shuffle.
@@ -52,15 +48,12 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.analyzer import analyze_query
 from .codec import vb_decode, delta_decode, decode_blocks_flat
 from .indexer import bm25_idf, bm25_tf_part
-
-PARTIAL_SCHEMA = "doc_id bigint, term string, partial double, gub double"
-
 
 # Small-query short-circuit (the ES coordinating-node analog): when the
 # query terms' TOTAL posting count (Σ df, known driver-side from the term
@@ -71,8 +64,8 @@ PARTIAL_SCHEMA = "doc_id bigint, term string, partial double, gub double"
 # rare-term/interactive queries stay sub-100ms instead of paying the
 # one-Spark-job-per-query floor the README documents. Exactness: the
 # numpy scorer is the same decode + same bm25_tf_part + the same
-# term-sorted strict left fold as _sum_deterministic — bit-identity vs
-# the distributed path is pytest-guarded on the full reference set.
+# term-sorted strict left fold (_fold_topk) as the distributed executor
+# — bit-identity is pytest-guarded on the full reference set.
 # The constant is a LATENCY ENVELOPE divided by measured decode
 # throughput: r5 set 262_144 against the per-block decode loop
 # (~0.6M postings/s single-thread); the r6 batched decode
@@ -98,17 +91,6 @@ DRIVER_LOCAL_MAX_VOCAB = 2_000_000
 # per posting than the per-block decode loop the r5 budget constant was
 # calibrated against — 4x keeps half that margin in reserve.
 BLOCKMAX_RESCORE_FACTOR = 4
-# Distributed multi-term two-phase prune pays 3 extra driver round-trips
-# (approx materialize, θ'' collect, candidate fetch) over the single-job
-# plain scan; below this Σ df the whole decode costs less than those
-# round-trips (measured: ~1M postings decode distributedly in ~150ms on
-# 32 cores while each extra action round costs ~200-400ms), so the gate
-# chooses the plain scan. Parameterised per reader
-# (prune_spark_min_postings) — a cost-model constant, not a local-mode
-# tuning: it compares decode volume to scheduler latency, both of which
-# exist on any cluster. Single-clause pruning is exempt (one job either
-# way, strictly fewer blocks).
-PRUNE_SPARK_MIN_POSTINGS = 2_000_000
 
 
 def _maxscore_essential(gub_by: dict[str, float], theta: float) -> list:
@@ -137,8 +119,9 @@ class IndexReader:
     Spark DataFrames are memoized (one InMemoryFileIndex per table per
     reader — repeated searches don't re-list files); pure-metadata lookups
     (term dictionary, bucket routing) are driver-side with pyarrow and a
-    Spark-bit-identical Python Murmur3 — a search issues exactly ONE Spark
-    job (the scoring scan) in the unpruned path.
+    Spark-bit-identical Python Murmur3 — a distributed search issues at
+    most two Spark jobs (the scoring scan, and the fold after its doc_id
+    shuffle).
     """
 
     spark: SparkSession
@@ -154,9 +137,6 @@ class IndexReader:
     # exactly as it was at that commit, as long as its files survive the
     # keep_generations window / gc_generations. None = current.
     generation: int | None = None
-    # Σ df floor below which the distributed MULTI-term prune keeps the
-    # single-job plain scan (see PRUNE_SPARK_MIN_POSTINGS)
-    prune_spark_min_postings: int = PRUNE_SPARK_MIN_POSTINGS
 
     def __post_init__(self) -> None:
         # pin ONE generation snapshot for the reader's whole lifetime
@@ -227,8 +207,8 @@ class IndexReader:
         # int64 array of term lengths. Cleared by refresh().
         self._vocab_pd: pd.DataFrame | None | bool = False
         self._vocab_tlen = None
-        # per-term block metadata cache for the prune gate (driver-side
-        # (salt, block_id, max_tf, min_dl) frames; bounded by the same
+        # per-term block metadata cache for the blockmax tier (driver-
+        # side frames of _BLOCK_META_COLS; bounded by the same
         # BLOCK_META_BUDGET that gates reading them at all)
         self._block_meta_cache: dict[str, pd.DataFrame] = {}
         # forward-table pyarrow dataset + its footer's per-row-group
@@ -333,13 +313,14 @@ class IndexReader:
         ~1/3 the raw text size); at 10^12 turns you cache the hot buckets'
         sub-index, not the whole table — pass the reader a bucket-filtered
         postings dir (or rely on MEMORY_AND_DISK spill). Driver-side
-        pyarrow paths (term dictionary, block-meta gate, θ block fetch)
+        pyarrow paths (term dictionary, block metadata, θ block fetch)
         are unaffected — they never touch the Spark scan.
 
         include_docs=True additionally pins the forward table + doc_stats
-        (the with_text join side on the distributed tiers, which scans
-        the forward table's text columns per query; the driver-local
-        tiers read their k docs rows with pyarrow instead). eager=True materializes now (one count each) so
+        (the with_text join side of the distributed phrase and
+        bool_should paths, which scans the forward table's text columns
+        per query; top-k searches read their k docs rows with pyarrow
+        instead). eager=True materializes now (one count each) so
         the first timed query doesn't pay the fill. Undone by uncache();
         refresh() also unpins (a mutated index invalidates cached blocks).
         """
@@ -672,32 +653,20 @@ def _fuzzy_term_meta(reader: IndexReader, qterms: list[tuple[str, int]],
 # small ints + the skyline arrays + the term string (~150 B/row in
 # pandas); 2M rows ≈ 300 MB, far above any realistic query-term block
 # count except corpus-spanning hot terms at extreme scale, where the
-# Spark metadata-job path takes over.
+# blockmax tier declines and the distributed executor runs.
+# _BLOCK_META_COLS, _block_plan and this budget serve the driver-local
+# blockmax tier only.
 BLOCK_META_BUDGET = 2_000_000
-
-
-def _sky_part_expr(k1: float, b: float, avgdl: float):
-    """EXACT block-max tf-part as a JVM column expression: max over the
-    block's stored (tf, dl) Pareto skyline of tf/(tf + k1*(1-b+b*dl/
-    avgdl)). Equals the max over the block's actual postings (the partial
-    is increasing in tf, decreasing in dl, and the skyline dominates
-    every posting), for ANY (k1, b, avgdl) — tight where the old
-    (max_tf, min_dl) cross-pairing was hopelessly optimistic. Evaluated
-    on metadata columns before any decode."""
-    return F.aggregate(
-        F.zip_with(
-            F.col("sky_tfs"), F.col("sky_dls"),
-            lambda t, d: t.cast("double")
-            / (t.cast("double") + F.lit(k1)
-               * (F.lit(1.0 - b) + F.lit(b) * d.cast("double")
-                  / F.lit(avgdl)))),
-        F.lit(0.0), lambda acc, x: F.greatest(acc, x))
 
 
 def _sky_part_np(sky_tfs, sky_dls, avgdl: float, k1: float,
                  b: float) -> np.ndarray:
-    """Vectorized driver-side twin of _sky_part_expr over ragged skyline
-    lists (one row per block)."""
+    """EXACT block-max tf-part per block: the max over the block's
+    stored (tf, dl) Pareto skyline of tf/(tf + k1*(1-b+b*dl/avgdl)),
+    vectorized over ragged skyline lists (one row per block). Equals the
+    max over the block's actual postings (the partial is increasing in
+    tf, decreasing in dl, and the skyline dominates every posting), for
+    ANY (k1, b, avgdl)."""
     n = len(sky_tfs)
     lens = np.fromiter((len(x) for x in sky_tfs), dtype=np.int64, count=n)
     total = int(lens.sum())
@@ -722,7 +691,7 @@ def _block_meta_arrow(reader: IndexReader,
     query terms, read driver-side with pyarrow column pruning from the
     bucket directories — NO Spark job, no payload bytes. Cached per term
     on the reader. Returns None when the estimated block count exceeds
-    BLOCK_META_BUDGET (the caller falls back to the Spark metadata job).
+    BLOCK_META_BUDGET (the blockmax tier then declines).
     """
     import pyarrow.dataset as pads
 
@@ -846,8 +815,8 @@ def _clause_partials(doc_ids: np.ndarray, post_t: np.ndarray,
                      tf_part: np.ndarray, clauses: tuple
                      ) -> tuple[np.ndarray, ...]:
     """(qid rank, doc_id, term rank, partial) with one row per (posting,
-    clause on its term), partial = (qtf*idf) * tf_part: the same float64
-    product the Spark paths compute."""
+    clause on its term), partial = (qtf*idf) * tf_part: the one float64
+    product of every tier, driver-local and distributed."""
     first, n_c, c_q, c_w = clauses
     rep = n_c[post_t]
     src = np.repeat(np.arange(post_t.size), rep)
@@ -873,13 +842,12 @@ def _topk_by_q(q: np.ndarray, d: np.ndarray, s: np.ndarray,
 def _fold_topk(q: np.ndarray, d: np.ndarray, t: np.ndarray,
                p: np.ndarray, k: int | None) -> tuple[np.ndarray, ...]:
     """Per-(qid, doc) score by a strict left fold of its partials in
-    (term, partial) order — the exact order _sum_deterministic's
-    array_sort + aggregate uses (struct sort: term asc, then partial asc
-    for duplicate clause terms) — then the per-qid top-k. Returns (qid
-    rank, doc_id, score) in (qid, score desc, doc_id asc) order. The one
-    fold of both batch tiers: the driver-local one runs it over every
-    partial, the distributed one per shuffle partition (a doc's partials
-    all land in one) and then _topk_by_q over the partitions' top-k."""
+    (term, partial) order (term rank asc, then partial asc for duplicate
+    clause terms), then the per-qid top-k. Returns (qid rank, doc_id,
+    score) in (qid, score desc, doc_id asc) order. The one fold of every
+    BM25 tier: the driver-local ones run it over every partial, the
+    distributed executor per partition (a doc's partials all land in
+    one) and then _topk_by_q over the partitions' top-k."""
     if d.size == 0:
         return q, d, p
     order = np.lexsort((p, t, d, q))
@@ -903,12 +871,12 @@ def _driver_local_topk_pd(reader: IndexReader, meta: pd.DataFrame,
     pyarrow-fetched blocks for one or many queries.
 
     meta: one row per (qid, term) clause with qtf/idf (the same clause
-    table the distributed paths use). Returns (qid, doc_id, score)
+    table the distributed executor uses). Returns (qid, doc_id, score)
     rows, per-qid-(score desc, doc_id asc)-ordered, or None when the
     tombstone set is too large to mask driver-side (caller falls back to
-    the distributed anti-join path). Bit-identity contract: same decode,
-    same float64 partial expression ((qtf*idf)*tf_part), and the same
-    term-sorted strict left fold as _sum_deterministic (_fold_topk).
+    the distributed executor's anti-join). Bit-identity contract: the same
+    decode, float64 partials ((qtf*idf)*tf_part, _clause_partials) and
+    fold (_fold_topk) as the distributed executor.
 
     rows: pre-fetched payload blocks (the block-max serving path passes
     only the blocks it proved relevant); default fetches every block of
@@ -1065,12 +1033,12 @@ def _with_text(reader: IndexReader, topk) -> DataFrame:
     ``([qid,] doc_id, score, conv_id, turn_idx, text)`` in ([qid,] score
     desc, doc_id asc) order.
 
-    A pandas top-k (the driver-local tiers, rows already in result
-    order) fetches its k docs rows with pyarrow and hands the result to
-    Spark as an Arrow LocalRelation: zero Spark jobs. A Spark DataFrame
-    top-k (the distributed tiers), or one whose docs row groups exceed
-    DRIVER_TEXT_MAX_BYTES, broadcast-joins the k rows against the
-    forward table instead."""
+    A pandas top-k (every search/search_many tier, rows already in
+    result order) fetches its k docs rows with pyarrow and hands the
+    result to Spark as an Arrow LocalRelation: zero Spark jobs. A Spark
+    DataFrame top-k (the distributed phrase and bool_should paths), or
+    one whose docs row groups exceed DRIVER_TEXT_MAX_BYTES,
+    broadcast-joins the k rows against the forward table instead."""
     keys = [c for c in topk.columns if c == "qid"]
     if isinstance(topk, pd.DataFrame):
         d = topk["doc_id"].to_numpy(np.int64)
@@ -1141,8 +1109,8 @@ def _fetch_blocks_grouped_arrow(reader: IndexReader,
 @dataclass
 class _BlockPlan:
     """One query's exact block-max prune (lifecycle step 3, phase A),
-    computed once from driver-side block metadata and shared by the
-    driver-local blockmax tier and the distributed pruned tiers."""
+    computed once from driver-side block metadata and executed by the
+    driver-local blockmax tier, its only user."""
     bmeta: pd.DataFrame        # per-block metadata of the query terms
     weight: dict[str, float]   # qtf * idf per term
     gub_by: dict[str, float]   # global upper bound per term
@@ -1157,8 +1125,8 @@ def _block_plan(reader: IndexReader, meta: pd.DataFrame, k: int,
     """θ, MaxScore essential lists, aligned skip bounds and the fully-
     decoded slack for one clause table, from pyarrow block metadata plus
     ONE best-blocks payload fetch — zero Spark jobs. None when the query
-    terms' block metadata exceeds BLOCK_META_BUDGET (the caller runs the
-    Spark-metadata gate)."""
+    terms' block metadata exceeds BLOCK_META_BUDGET (the blockmax tier
+    then declines)."""
     bmeta = _block_meta_arrow(reader, meta["term"].tolist())
     if bmeta is None:
         return None
@@ -1223,9 +1191,8 @@ def _block_plan(reader: IndexReader, meta: pd.DataFrame, k: int,
 
 
 def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
-                                  plan: _BlockPlan | None, k: int,
-                                  k1: float, b: float, with_text: bool,
-                                  prune_stats: dict | None
+                                  k: int, k1: float, b: float,
+                                  with_text: bool, prune_stats: dict | None
                                   ) -> DataFrame | None:
     """Block-max-gated driver-local serving (VERDICT r4 #3): zero-Spark-
     job top-k for queries whose Σ df blows the flat budget but whose
@@ -1233,21 +1200,22 @@ def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
     10^12 turns, where Σ df scales with the corpus while the decode the
     skyline prune leaves behind scales with k and the score distribution.
 
-    Executes the query's _BlockPlan driver-side — the same plan the
-    distributed pruned path consumes — with pyarrow block fetches:
-    phase A decodes the kept blocks, the θ''-filtered candidates are
-    rescored exactly. The gate is DECODE COST, not Σ df: proceed only
-    when the kept blocks' Σ posting_count (phase A) and the
-    candidate-overlapping blocks' Σ posting_count (phase B) each fit
-    reader.driver_local_max_postings. Exactness: candidates ⊇ every doc
-    whose true score can reach the true k-th (same bound argument as the
-    distributed two-phase), and the rescore fold is byte-identical to
-    _driver_local_topk_pd's — results are bit-identical to both the flat
-    serving path and the distributed paths (pytest-guarded with zero-job
-    probes). Returns None (caller goes distributed) on any over-budget
+    Builds and executes the query's _BlockPlan driver-side with pyarrow
+    block fetches: phase A decodes the kept blocks, the θ''-filtered
+    candidates are rescored exactly (phase B). The gate is DECODE COST,
+    not Σ df: proceed only when the kept blocks' Σ posting_count (phase
+    A) and the candidate-overlapping blocks' Σ posting_count (phase B)
+    each fit reader.driver_local_max_postings. Exactness: candidates ⊇ every doc
+    whose true score can reach the true k-th (phase B below), and the
+    rescore fold is _fold_topk, as on every tier — results are
+    bit-identical to both the flat serving path and the distributed
+    executor (pytest-guarded with zero-job probes). Returns None (the
+    caller goes on to the flat tier or the executor) on any over-budget
     stage, no plan (block metadata over budget) or no finite θ. The
-    caller builds no plan under tombstones (prune math unsafe pre-purge,
-    the Lucene posture) or for a term carrying several clauses."""
+    caller skips this tier under tombstones (prune math unsafe
+    pre-purge, the Lucene posture) and for a term carrying several
+    clauses."""
+    plan = _block_plan(reader, meta, k, k1, b)
     if plan is None or not np.isfinite(plan.theta):
         return None
     avgdl = float(reader.stats["avgdl"])
@@ -1273,7 +1241,7 @@ def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
             prune_stats.update(
                 path="driver_local_blockmax", theta=theta,
                 n_blocks=int(len(bmeta)), n_keep=int(len(kept)),
-                blockmax_kept_postings=kept_cost, gate="driver")
+                blockmax_kept_postings=kept_cost)
         return _local_result(reader, topk_pd, with_text)
     # phase A approx: per-doc partial sums + contributing-term gub over
     # the kept blocks (plain float sums — only BOUNDS, the exact fold
@@ -1336,7 +1304,7 @@ def _search_driver_local_blockmax(reader: IndexReader, meta: pd.DataFrame,
             n_blocks=int(len(bmeta)), n_keep=int(len(kept)),
             n_candidates=int(cand_ids.size),
             blockmax_kept_postings=kept_cost,
-            blockmax_rescore_postings=over_cost, gate="driver")
+            blockmax_rescore_postings=over_cost)
     return _local_result(reader, topk_pd, with_text)
 
 
@@ -1463,440 +1431,17 @@ def _best_block_keys(bmeta: pd.DataFrame, n_blocks: int, avgdl: float,
     return keys
 
 
-def _theta_spark_meta(reader: IndexReader, meta: pd.DataFrame, k: int,
-                      k1: float, b: float, n_blocks: int) -> float:
-    """Out-of-budget θ: ONE metadata-only Spark job ranks blocks per term
-    (no payload bytes ride the window shuffle — the ADVICE r2 fix), the
-    winning keys come back to the driver, and their payloads are fetched
-    with pyarrow. Used only when the query terms' block count exceeds
-    BLOCK_META_BUDGET."""
-    terms = meta["term"].tolist()
-    buckets = sorted({int(v) for v in reader.bucket_of(terms).values()})
-    avgdl = reader.stats["avgdl"]
-    ub = _sky_part_expr(k1, b, avgdl)
-    w = Window.partitionBy("term").orderBy(
-        ub.desc(), F.asc("block_id"), F.asc("salt"))
-    key_rows = (
-        reader.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-        .select("term", "salt", "block_id", "sky_tfs", "sky_dls")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n_blocks)
-        .select("term", "salt", "block_id")
-        .collect()
-    )
-    if not key_rows:
-        return float("-inf")
-    keys = [(r["term"], int(r["salt"]), int(r["block_id"]))
-            for r in key_rows]
-    rows = _fetch_blocks_arrow(reader, keys)
-    return _theta_from_rows(rows, meta, avgdl, k, k1, b)
-
-
-def _decode_partials_factory(avgdl: float, k1: float, b: float,
-                             keep_bc=None):
-    """mapInPandas block decoder -> (doc_id, term, partial, gub) rows.
-    keep_bc: optional pyspark Broadcast of a sorted int64 array; only emit
-    those docs (phase B). A Broadcast, NOT a closure-captured array: the
-    closure is pickled into EVERY task, so a multi-million-candidate array
-    would ship once per task instead of once per executor."""
-
-    def score_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_ids = keep_bc.value if keep_bc is not None else None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # batch decode (guide §4.2): one numpy pass per Arrow batch,
-            # never a per-block Python loop; same values, same
-            # (qtf*idf)*tf_part elementwise float64 product
-            doc_ids, tfs, dls, counts = decode_blocks_flat(
-                pdf["doc_gaps"].tolist(), pdf["tfs"].tolist(),
-                pdf["dls"].tolist())
-            if doc_ids.size == 0:
-                continue
-            w = (pdf["qtf"].to_numpy(np.float64)
-                 * pdf["idf"].to_numpy(np.float64))
-            part = np.repeat(w, counts) * bm25_tf_part(
-                tfs, dls, avgdl, k1, b)
-            terms = np.repeat(pdf["term"].to_numpy(), counts)
-            gubs = np.repeat(pdf["gub"].to_numpy(np.float64), counts)
-            if keep_ids is not None:
-                m = np.isin(doc_ids, keep_ids)
-                if not m.any():
-                    continue
-                doc_ids, part, terms, gubs = (doc_ids[m], part[m],
-                                              terms[m], gubs[m])
-            yield pd.DataFrame({
-                "doc_id": doc_ids,
-                "term": terms,
-                "partial": part,
-                "gub": gubs,
-            })
-
-    return score_blocks
-
-
-def _sum_deterministic(partials: DataFrame,
-                       n_clauses: int | None = None) -> DataFrame:
-    """Per-doc score = fold of partials in term-sorted order (float64
-    determinism across partitionings/runs; SURVEY §7 hard-part 1).
-
-    n_clauses: when the caller knows the clause table holds ≤ 2 rows, a
-    doc carries at most two partials and the fold is a plain F.sum —
-    bit-identical (IEEE-754 addition is commutative: 0.0+a+b vs 0.0+b+a
-    round identically; only 3+ addends are association-sensitive) —
-    which swaps the ObjectHashAggregate + per-doc array sort for a
-    codegen HashAggregate with map-side partial aggregation (guide
-    §2.3: aggregate before you shuffle)."""
-    if n_clauses is not None and n_clauses <= 2:
-        return partials.groupBy("doc_id").agg(
-            F.sum("partial").alias("score"),
-            F.sum("gub").alias("contrib_gub"),
-        )
-    return partials.groupBy("doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "partial"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["partial"],
-        ).alias("score"),
-        F.sum("gub").alias("contrib_gub"),
-    )
-
-
-def _clause_matching(reader: IndexReader, meta: pd.DataFrame):
-    """Bucket/term-pruned postings scan with the per-clause (qtf, idf,
-    gub) weights attached. With unique clause terms (every non-fuzzy
-    query) the weights are LITERAL CASE columns — exact double literals,
-    no broadcast-exchange job per query; duplicate clause terms (fuzzy
-    expansion collisions) need the row-duplicating broadcast join."""
-    spark = reader.spark
-    buckets = sorted({int(v) for v in
-                      reader.bucket_of(meta["term"].tolist()).values()})
-    scan = reader.postings.filter(
-        F.col("bucket").isin(buckets)
-        & F.col("term").isin(meta["term"].tolist()))
-    if meta["term"].is_unique:
-        for col in ("qtf", "idf", "gub"):
-            expr = None
-            for t, v in zip(meta["term"], meta[col]):
-                cond = F.col("term") == F.lit(t)
-                expr = (F.when(cond, F.lit(float(v))) if expr is None
-                        else expr.when(cond, F.lit(float(v))))
-            scan = scan.withColumn(col, expr)
-        return scan
-    info = spark.createDataFrame(
-        meta[["term", "qtf", "idf", "gub"]],
-        "term string, qtf double, idf double, gub double",
-    )
-    return scan.join(F.broadcast(info), "term", "inner")
-
-
-def _all_match_scores(reader: IndexReader, meta: pd.DataFrame,
-                      k1: float, b: float) -> DataFrame:
-    """FULL scored set (doc_id, score) for an explicit clause-meta frame
-    (one row per (term, qtf) weighted clause, as produced by _term_meta /
-    _fuzzy_term_meta): bucket-pruned postings scan, Arrow decode, one
-    deterministic per-doc fold — the ``_all_matches=True`` execution of
-    search(), factored so DSL clauses that assemble their own meta
-    (term-level ``fuzzy``) reuse it verbatim."""
-    avgdl = reader.stats["avgdl"]
-    matching = _clause_matching(reader, meta)
-    partials = matching.select(
-        "term", "qtf", "idf", "gub", "doc_gaps", "tfs", "dls"
-    ).mapInPandas(_decode_partials_factory(avgdl, k1, b),
-                  schema=PARTIAL_SCHEMA)
-    return reader.live_only(
-        _sum_deterministic(partials,
-                           n_clauses=len(meta)).select("doc_id", "score"))
-
-
-def search(
-    reader: IndexReader,
-    query: str,
-    k: int = 10,
-    k1: float | None = None,
-    b: float | None = None,
-    prune: bool = True,
-    with_text: bool = True,
-    fuzzy: bool = False,
-    max_expansions: int = 50,
-    _all_matches: bool = False,
-    prune_stats: dict | None = None,
-) -> DataFrame:
-    """Top-k BM25. Returns (doc_id, score[, conv_id, turn_idx, text])
-    ordered by (score desc, doc_id asc); the text columns come with
-    with_text=True, the default. Queries whose terms' total
-    posting count fits reader.driver_local_max_postings take the
-    zero-Spark-job driver-local path (pyarrow block fetch + numpy
-    scoring, bit-identical — see DRIVER_TOPK_MAX_POSTINGS); the
-    distributed paths below run beyond the budget. prune=True (default)
-    enables the exact two-phase block-max path (identical results, fewer
-    decoded blocks); the prune/no-prune gate is decided DRIVER-side from
-    postings metadata, so when it falls back the cost over prune=False
-    is zero Spark jobs (measured −9% worst case, +77% best —
-    BENCH/BASELINE.md crossover table).
-    fuzzy=True expands query terms within Lucene AUTO edit distance
-    (R5: the reference's default ``fuzziness: AUTO``,
-    retrieval/es_search_final.py:21); each expansion scores as a weighted
-    term clause (weight = qtf * (1 - ed/min(|q|,|t|))). The block-max
-    prune path assumes one clause per term, so fuzzy falls back to the
-    unpruned scan.
-    _all_matches=True returns the FULL scored set (doc_id, score) with no
-    limit — the exact-combination input for multi-field best_fields.
-    prune_stats: pass a dict to receive {"path", "theta", "n_blocks",
-    "n_keep", "n_candidates"} for the prune=True decision — bench/test
-    observability for how much the block-max machinery actually skipped."""
-    spark = reader.spark
-    k1 = reader.stats["k1"] if k1 is None else k1
-    b = reader.stats["b"] if b is None else b
-    qterms = analyze_query(
-        query, mode=reader.stats.get("analyzer", "english_folded"))
-
-    if not qterms:
-        return _local_result(reader, _NO_HITS, with_text)
-    if fuzzy:
-        prune = False
-        meta = _fuzzy_term_meta(reader, qterms, k1, b, max_expansions)
-    else:
-        meta = _term_meta(reader, qterms, k1, b)
-    if meta.empty:
-        return _local_result(reader, _NO_HITS, with_text)
-    meta = meta.assign(qtf=meta["qtf"].astype(np.float64))
-    avgdl = reader.stats["avgdl"]
-    total_gub = float(meta["gub"].sum())
-
-    # driver-local serving (bit-identical to distributed, zero Spark
-    # jobs; see DRIVER_TOPK_MAX_POSTINGS). Tier order (r6): small flat
-    # Σ df -> fetch-everything flat path (no block-metadata machinery);
-    # larger Σ df -> block-max/MaxScore tier FIRST — even when the flat
-    # decode would fit the budget, the pruned tier's exact fold touches
-    # only θ''-candidates instead of lexsorting the full match set
-    # (measured ~3x on the stopword-conjunction shape) — then the flat
-    # path as fallback while Σ df still fits. _all_matches stays
-    # distributed (its result is corpus-sized input to multifield, not
-    # k rows).
-    # The block-max tier and the distributed gate below share ONE
-    # _BlockPlan: built here when the blockmax tier runs, else by the
-    # gate.
-    df_sum = int(meta["df"].sum())
-    budget = int(reader.driver_local_max_postings)
-    plan, planned = None, False
-    if not _all_matches and budget > 0:
-        if df_sum <= budget // 4:
-            local = _search_driver_local(reader, meta, k, k1, b,
-                                         with_text, prune_stats)
-            if local is not None:
-                return local
-        else:
-            # the plan's bounds weigh one clause per term: a fuzzy
-            # expansion collision (two clauses on one term) skips it
-            if not reader.has_deletes and meta["term"].is_unique:
-                plan, planned = _block_plan(reader, meta, k, k1, b), True
-                local = _search_driver_local_blockmax(
-                    reader, meta, plan, k, k1, b, with_text, prune_stats)
-                if local is not None:
-                    return local
-            if df_sum <= budget:
-                local = _search_driver_local(reader, meta, k, k1, b,
-                                             with_text, prune_stats)
-                if local is not None:
-                    return local
-
-    matching = _clause_matching(reader, meta)
-    payload_cols = ["term", "qtf", "idf", "gub", "doc_gaps", "tfs", "dls"]
-
-    if _all_matches:
-        return _all_match_scores(reader, meta, k1, b)
-
-    def plain_topk() -> DataFrame:
-        partials = matching.select(*payload_cols).mapInPandas(
-            _decode_partials_factory(avgdl, k1, b), schema=PARTIAL_SCHEMA)
-        if len(meta) == 1:
-            # single-term query: each doc holds exactly one posting for
-            # the term, so its partial IS its score — skip the per-doc
-            # sum shuffle entirely (decode -> TakeOrdered, one narrow
-            # stage). Bit-identical: summing one element is the element.
-            scored = partials.select(
-                "doc_id", F.col("partial").alias("score"))
-        else:
-            scored = _sum_deterministic(
-                partials, n_clauses=len(meta)).select("doc_id", "score")
-        return (reader.live_only(scored)
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k)))
-
-    if reader.has_deletes:
-        # tombstones invalidate the prune math (θ_meta's "k distinct
-        # docs" argument and the θ-decode sample may count deleted docs,
-        # overestimating the k-th LIVE score -> unsafe skips). Exactly
-        # Lucene's posture pre-merge: scan, filter liveDocs, let the next
-        # compaction purge and restore block-max pruning.
-        prune = False
-    if not prune:
-        topk = plain_topk()
-    else:
-        # θ + gate are DRIVER-SIDE whenever the query terms' block
-        # metadata fits the budget (r2 VERDICT #1: the old gate paid two
-        # Spark jobs to decide "don't prune" every time): the plan reads
-        # block metadata with pyarrow over the already-bucket-pruned
-        # postings dirs and fetches n_blocks·|terms| KB-sized θ blocks.
-        # Cost when the gate says fall back: ZERO extra Spark jobs.
-        if not planned:
-            plan = _block_plan(reader, meta, k, k1, b)
-        cutoff: dict[str, float]
-        if plan is not None:
-            theta, fully, slack_gub = plan.theta, plan.fully, plan.slack_gub
-            n_blocks_total = int(len(plan.bmeta))
-            n_keep = int(plan.keep_mask.sum())
-            gate = "driver"
-        else:
-            # extreme-scale fallback: metadata-only Spark jobs (never a
-            # payload shuffle) for θ and the keep count. EXACT block
-            # upper bound recomputed at query time from the stored (tf,
-            # dl) skyline: valid for any (k1, b) AND robust to
-            # incremental appends (which change N/avgdl). A pure column
-            # expression — JVM-side, evaluated before any decode; built
-            # on this branch only, the one that reads it (its py4j
-            # construction is not free).
-            block_ub = (F.col("qtf") * F.col("idf")
-                        * _sky_part_expr(k1, b, avgdl))
-            theta = _theta_spark_meta(reader, meta, k, k1, b,
-                                      max(2, (int(k) // 128) + 2))
-            cutoff = {t: theta - (total_gub - g)
-                      for t, g in zip(meta["term"], meta["gub"])}
-            cutoff_meta = spark.createDataFrame(
-                list(cutoff.items()), "term string, cutoff double")
-            cnt = (
-                matching.select("term", "qtf", "idf", "sky_tfs", "sky_dls")
-                .join(F.broadcast(cutoff_meta), "term")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum((block_ub >= F.col("cutoff"))
-                           .cast("long")).alias("keep"))
-                .collect()[0]
-            )
-            n_blocks_total = int(cnt["n"] or 0)
-            n_keep = int(cnt["keep"] or 0)
-            fully, slack_gub = set(), float(sum(meta["gub"]))
-            gate = "spark"
-        if prune_stats is not None:
-            prune_stats.update(theta=theta, n_blocks=n_blocks_total,
-                               n_keep=n_keep, gate=gate)
-        if (n_blocks_total == 0 or n_keep >= 0.7 * n_blocks_total
-                or (len(meta) > 1 and int(meta["df"].sum())
-                    < reader.prune_spark_min_postings)):
-            if prune_stats is not None:
-                prune_stats["path"] = "fallback_plain"
-            topk = plain_topk()
-        else:
-            if gate == "driver":
-                # survivors known exactly (aligned bounds) — broadcast
-                # their (term, salt, block_id) keys; ≤ 0.7·n_blocks tiny
-                # rows by the gate condition
-                surv = plan.bmeta.loc[plan.keep_mask,
-                                      ["term", "salt", "block_id"]]
-                surv_df = spark.createDataFrame(
-                    surv.drop_duplicates(),
-                    "term string, salt int, block_id int")
-                pruned = matching.join(
-                    F.broadcast(surv_df),
-                    ["term", "salt", "block_id"], "inner")
-            else:
-                cutoff_df = spark.createDataFrame(
-                    list(cutoff.items()), "term string, cutoff double")
-                with_cut = matching.join(F.broadcast(cutoff_df), "term")
-                pruned = with_cut.filter(block_ub >= F.col("cutoff"))
-            if len(meta) == 1:
-                # Single-clause shortcut: a doc has exactly ONE posting
-                # block for the term, so every doc in the pruned decode
-                # has its EXACT score (and every skipped doc provably
-                # scores < θ ≤ s_k). Phase B would re-derive the same
-                # set — skip it: one Spark job over the surviving blocks.
-                if prune_stats is not None:
-                    prune_stats["path"] = "single_clause_pruned"
-                partials = pruned.select(*payload_cols).mapInPandas(
-                    _decode_partials_factory(avgdl, k1, b),
-                    schema=PARTIAL_SCHEMA)
-                # one posting per doc for the single term: the partial
-                # IS the score — no per-doc sum shuffle (see plain_topk)
-                topk = (partials
-                        .select("doc_id", F.col("partial").alias("score"))
-                        .orderBy(F.desc("score"), F.asc("doc_id"))
-                        .limit(int(k)))
-                return _with_text(reader, topk) if with_text else topk
-            # persisted: BOTH the θ'' collect and the candidate filter
-            # consume approx — without it each action re-runs the decode.
-            # A fully-decoded term's gub rides as 0 in the contribution
-            # ledger (its absence is definitive; see _block_plan).
-            pay = list(payload_cols)
-            if fully:
-                pay[pay.index("gub")] = F.when(
-                    F.col("term").isin(sorted(fully)), F.lit(0.0)
-                ).otherwise(F.col("gub")).alias("gub")
-            approx = _sum_deterministic(
-                pruned.select(*pay).mapInPandas(
-                    _decode_partials_factory(avgdl, k1, b),
-                    schema=PARTIAL_SCHEMA),
-                n_clauses=len(meta)).persist()
-            # θ'' = max(θ, k-th approx) — approx ≤ true, so still a valid
-            # lower bound on the true k-th score.
-            kth_rows = (approx.select("score")
-                        .orderBy(F.desc("score")).limit(int(k)).collect())
-            theta2 = max(theta, float(kth_rows[-1]["score"])
-                         if len(kth_rows) >= k else float("-inf"))
-            # candidates: ub_total = approx + gub of non-contributing,
-            # not-fully-decoded terms
-            cand_ids = (
-                approx.filter(
-                    F.col("score") + (F.lit(slack_gub) - F.col("contrib_gub"))
-                    >= F.lit(theta2)
-                ).select("doc_id").toPandas()["doc_id"].to_numpy(np.int64)
-            )
-            approx.unpersist()
-            cand_ids = np.sort(cand_ids)
-            if prune_stats is not None:
-                prune_stats.update(path="two_phase",
-                                   n_candidates=int(cand_ids.size))
-            if cand_ids.size == 0:
-                return _local_result(reader, _NO_HITS, with_text)
-            lo, hi = int(cand_ids[0]), int(cand_ids[-1])
-            keep_bc = spark.sparkContext.broadcast(cand_ids)
-            rescored = (
-                matching.filter(
-                    (F.col("last_doc_id") >= F.lit(lo))
-                    & (F.col("first_doc_id") <= F.lit(hi))
-                )
-                .select(*payload_cols)
-                .mapInPandas(
-                    _decode_partials_factory(avgdl, k1, b, keep_bc=keep_bc),
-                    schema=PARTIAL_SCHEMA)
-            )
-            # materialize the ≤ k result rows NOW so the candidate
-            # broadcast can be released immediately (ADVICE r2: each
-            # pruned query otherwise leaked one candidate-id broadcast
-            # for the SparkSession lifetime)
-            topk_rows = (_sum_deterministic(rescored, n_clauses=len(meta))
-                         .select("doc_id", "score")
-                         .orderBy(F.desc("score"), F.asc("doc_id"))
-                         .limit(int(k))
-                         .collect())
-            keep_bc.unpersist()
-            keep_bc.destroy()
-            topk = spark.createDataFrame(
-                topk_rows, "doc_id bigint, score double")
-
-    # J2: k-row hits broadcast against the forward docs table
-    return _with_text(reader, topk) if with_text else topk
-
-
 # ---------------------------------------------------------------------------
-# Batch multi-query search: many top-k's in one fold
+# The distributed executor: one decode and one numpy fold for every BM25
+# term query beyond the driver-local budget
 # ---------------------------------------------------------------------------
 
 
 def _decode_clauses_factory(avgdl: float, k1: float, b: float,
                             terms: list[str], clauses: tuple):
     """mapInPandas block decoder -> (q, doc_id, t, partial) rows, one per
-    (posting, clause on its term): the batch's small clause table rides
-    in the closure, so no weights join follows the decode."""
+    (posting, clause on its term): the small clause table rides in the
+    closure, so no weights join follows the decode."""
     t_rank = {t: r for r, t in enumerate(terms)}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1912,11 +1457,11 @@ def _decode_clauses_factory(avgdl: float, k1: float, b: float,
     return run
 
 
-def _fold_topk_factory(k: int):
-    """mapInPandas per shuffle partition -> its per-qid top-k (q, doc_id,
-    score) by _fold_topk. A partition is hashed on doc_id, so it holds
-    every partial of its docs and folds them exactly; its top-k rows
-    contain the global top-k rows of its docs."""
+def _fold_topk_factory(k: int | None):
+    """mapInPandas per partition -> its per-qid top-k (q, doc_id, score)
+    by _fold_topk (k=None: every (qid, doc) score). A partition holds
+    every partial of its docs, so it folds them exactly, and its top-k
+    rows contain the global top-k rows of its docs."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [pdf for pdf in batches if not pdf.empty]
@@ -1931,6 +1476,158 @@ def _fold_topk_factory(k: int):
                             "score": s})
 
     return run
+
+
+def _distributed_scores(reader: IndexReader, meta: pd.DataFrame, k1: float,
+                        b: float, k: int | None) -> DataFrame:
+    """The distributed BM25 executor of a clause table (one row per (qid,
+    term) clause with qtf/idf): a bucket- and term-pruned postings scan
+    whose decode emits one weighted partial per (posting, clause),
+    tombstoned docs dropped, then _fold_topk per partition. Returns the
+    lazy (q int, doc_id bigint, score double) rows, q the qid's rank in
+    sorted order: each partition's per-qid top-k (k=None: every match).
+
+    A qid with several clauses has several partials per doc, so the
+    partials shuffle on doc_id before the fold. When every qid has one
+    clause, a (qid, doc) has exactly one partial and each decode
+    partition folds on its own: no shuffle."""
+    terms = sorted(set(meta["term"]))
+    qids = sorted(set(meta["qid"]))
+    buckets = sorted({int(v) for v in reader.bucket_of(terms).values()})
+    partials = reader.live_only(
+        reader.postings.filter(
+            F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+        .select("term", "doc_gaps", "tfs", "dls")
+        .mapInPandas(
+            _decode_clauses_factory(reader.stats["avgdl"], k1, b, terms,
+                                    _clause_index(meta, terms, qids)),
+            schema="q int, doc_id bigint, t int, partial double"))
+    if meta["qid"].duplicated().any():
+        partials = partials.repartition("doc_id")
+    return partials.mapInPandas(_fold_topk_factory(k),
+                                schema="q int, doc_id bigint, score double")
+
+
+def _distributed_topk_pd(reader: IndexReader, meta: pd.DataFrame, k: int,
+                         k1: float, b: float) -> pd.DataFrame:
+    """Per-qid top-k (qid, doc_id, score) of _distributed_scores in (qid,
+    score desc, doc_id asc) order: the partitions' top-k rows collected
+    and merged on the driver. Two Spark jobs with the doc_id shuffle,
+    one without. Memory: a fold task holds one partition's partials, and
+    the driver merges ≤ P·Q·k rows (P partitions, Q queries); it never
+    holds the Σ df postings."""
+    qids = sorted(set(meta["qid"]))
+    tops = _distributed_scores(reader, meta, k1, b, k).toPandas()
+    q, d, s = _topk_by_q(tops["q"].to_numpy(np.int64),
+                         tops["doc_id"].to_numpy(np.int64),
+                         tops["score"].to_numpy(np.float64), k)
+    return pd.DataFrame({"qid": np.asarray(qids, dtype=object)[q],
+                         "doc_id": d, "score": s})
+
+
+def _all_match_scores(reader: IndexReader, meta: pd.DataFrame,
+                      k1: float, b: float) -> DataFrame:
+    """FULL scored set (doc_id, score), lazy, of one query's clause table
+    (one row per (term, qtf) weighted clause, as produced by _term_meta /
+    _fuzzy_term_meta) on the distributed executor: the
+    ``_all_matches=True`` execution of search(), and the one the DSL
+    clauses that assemble their own meta (term-level ``term`` and
+    ``fuzzy``) call."""
+    return _distributed_scores(reader, meta.assign(qid="q"), k1, b,
+                               None).select("doc_id", "score")
+
+
+def search(
+    reader: IndexReader,
+    query: str,
+    k: int = 10,
+    k1: float | None = None,
+    b: float | None = None,
+    with_text: bool = True,
+    fuzzy: bool = False,
+    max_expansions: int = 50,
+    _all_matches: bool = False,
+    prune_stats: dict | None = None,
+) -> DataFrame:
+    """Top-k BM25. Returns (doc_id, score[, conv_id, turn_idx, text])
+    ordered by (score desc, doc_id asc); the text columns come with
+    with_text=True, the default. Queries whose terms' total posting
+    count fits reader.driver_local_max_postings run on the zero-Spark-job
+    driver-local tiers (pyarrow block fetch + numpy scoring, flat or
+    block-max pruned — see DRIVER_TOPK_MAX_POSTINGS and
+    _search_driver_local_blockmax). The rest run on the distributed
+    executor that search_many runs (_distributed_scores: at most two
+    Spark jobs), bit-identical to every other tier. Either way the
+    search runs eagerly and returns a local relation: collecting it
+    runs no further Spark job while the text fits DRIVER_TEXT_MAX_BYTES.
+    fuzzy=True expands query terms within Lucene AUTO edit distance
+    (R5: the reference's default ``fuzziness: AUTO``,
+    retrieval/es_search_final.py:21); each expansion scores as a weighted
+    term clause (weight = qtf * (1 - ed/min(|q|,|t|))). The block plan
+    weighs one clause per term, so a fuzzy expansion collision (two
+    clauses on one term) skips the block-max tier.
+    _all_matches=True returns the FULL scored set (doc_id, score) with no
+    limit, lazily, always distributed — the exact-combination input for
+    multi-field best_fields and bool_should.
+    prune_stats: pass a dict to receive the tier that answered
+    ({"path", ...}; the block-max tier adds "theta", "n_blocks",
+    "n_keep", "n_candidates") — bench/test observability."""
+    k1 = reader.stats["k1"] if k1 is None else k1
+    b = reader.stats["b"] if b is None else b
+    qterms = analyze_query(
+        query, mode=reader.stats.get("analyzer", "english_folded"))
+
+    if not qterms:
+        return _local_result(reader, _NO_HITS, with_text)
+    if fuzzy:
+        meta = _fuzzy_term_meta(reader, qterms, k1, b, max_expansions)
+    else:
+        meta = _term_meta(reader, qterms, k1, b)
+    if meta.empty:
+        return _local_result(reader, _NO_HITS, with_text)
+    meta = meta.assign(qtf=meta["qtf"].astype(np.float64))
+    if _all_matches:
+        return _all_match_scores(reader, meta, k1, b)
+
+    # driver-local serving (bit-identical to distributed, zero Spark
+    # jobs; see DRIVER_TOPK_MAX_POSTINGS). Tier order (r6): small flat
+    # Σ df -> fetch-everything flat path (no block-metadata machinery);
+    # larger Σ df -> block-max/MaxScore tier FIRST — even when the flat
+    # decode would fit the budget, the pruned tier's exact fold touches
+    # only θ''-candidates instead of lexsorting the full match set
+    # (measured ~3x on the stopword-conjunction shape) — then the flat
+    # path as fallback while Σ df still fits.
+    df_sum = int(meta["df"].sum())
+    budget = int(reader.driver_local_max_postings)
+    if budget > 0:
+        if df_sum <= budget // 4:
+            local = _search_driver_local(reader, meta, k, k1, b,
+                                         with_text, prune_stats)
+            if local is not None:
+                return local
+        else:
+            # the plan's bounds weigh one clause per term: a fuzzy
+            # expansion collision (two clauses on one term) skips it
+            if not reader.has_deletes and meta["term"].is_unique:
+                local = _search_driver_local_blockmax(
+                    reader, meta, k, k1, b, with_text, prune_stats)
+                if local is not None:
+                    return local
+            if df_sum <= budget:
+                local = _search_driver_local(reader, meta, k, k1, b,
+                                             with_text, prune_stats)
+                if local is not None:
+                    return local
+
+    if prune_stats is not None:
+        prune_stats["path"] = "fallback_plain"
+    topk_pd = _distributed_topk_pd(reader, meta.assign(qid="q"), k, k1, b)
+    return _local_result(reader, topk_pd, with_text)
+
+
+# ---------------------------------------------------------------------------
+# Batch multi-query search: many top-k's in one fold
+# ---------------------------------------------------------------------------
 
 
 def search_many(
@@ -1952,14 +1649,14 @@ def search_many(
     kernel (_fold_topk). Batches whose term-union posting count fits
     reader.driver_local_max_postings run it driver-side on pyarrow-
     fetched blocks (zero Spark jobs, see DRIVER_TOPK_MAX_POSTINGS).
-    Larger ones run two Spark jobs: a bucket- and term-pruned postings
-    scan whose decode emits one weighted partial per (posting, clause),
-    then, per doc_id shuffle partition, the same fold and per-query
-    top-k; the driver merges the partitions' top-k rows.
+    Larger ones run on the distributed executor (_distributed_scores,
+    at most two Spark jobs): a bucket- and term-pruned postings scan
+    whose decode emits one weighted partial per (posting, clause), then
+    the same fold and per-query top-k per partition; the driver merges
+    the partitions' top-k rows.
 
-    Scores are bit-identical to ``search``: same float64 partials
-    ((qtf*idf)*tf_part), same term-sorted strict left fold, same
-    (score desc, doc_id asc) tiebreak.
+    Scores are bit-identical to ``search``, which runs the same tiers
+    and the same executor.
 
     queries: {qid: query} or a list (auto qids q0000, q0001, ...).
     fuzzy=True applies the R5 AUTO edit-distance expansion to every
@@ -2014,30 +1711,7 @@ def search_many(
                    if int(allmeta.drop_duplicates("term")["df"].sum())
                    <= reader.driver_local_max_postings else None)
     if topk_pd is None:
-        # Memory: a fold task holds one doc_id shuffle partition's
-        # partials (Σ clause postings / P on average), and the driver
-        # collects and merges ≤ P·Q·k rows (P partitions, Q queries) —
-        # it never holds the Σ df postings.
-        terms = sorted(set(allmeta["term"]))
-        qids = sorted(set(allmeta["qid"]))
-        buckets = sorted({int(v) for v in reader.bucket_of(terms).values()})
-        partials = (
-            reader.postings.filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-            .select("term", "doc_gaps", "tfs", "dls")
-            .mapInPandas(
-                _decode_clauses_factory(reader.stats["avgdl"], k1, b, terms,
-                                        _clause_index(allmeta, terms, qids)),
-                schema="q int, doc_id bigint, t int, partial double"))
-        tops = (reader.live_only(partials).repartition("doc_id")
-                .mapInPandas(_fold_topk_factory(k),
-                             schema="q int, doc_id bigint, score double")
-                .toPandas())
-        q, d, s = _topk_by_q(tops["q"].to_numpy(np.int64),
-                             tops["doc_id"].to_numpy(np.int64),
-                             tops["score"].to_numpy(np.float64), k)
-        topk_pd = pd.DataFrame({"qid": np.asarray(qids, dtype=object)[q],
-                                "doc_id": d, "score": s})
+        topk_pd = _distributed_topk_pd(reader, allmeta, k, k1, b)
     # rows are in (qid, score desc, doc_id asc) order and the Arrow
     # LocalRelation keeps it
     return (_with_text(reader, topk_pd) if with_text
@@ -2637,8 +2311,8 @@ def explain(reader: IndexReader, query: str, doc_id: int,
     if not rows:
         return out
     # the engine's exact fold order: term asc, then partial asc for
-    # duplicate clause terms (see _driver_local_topk_pd / the Spark
-    # paths' _sum_deterministic) — the float64 sum is bit-identical
+    # duplicate clause terms (_fold_topk, every tier's fold) — the
+    # float64 sum is bit-identical
     rows.sort(key=lambda x: (x["term"], x["contribution"]))
     score = 0.0
     for x in rows:

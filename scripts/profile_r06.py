@@ -71,7 +71,7 @@ def time_search(spark, reps=3):
         times = []
         for _ in range(reps):
             t0 = time.monotonic()
-            search(reader, q, k=10, with_text=False, prune=False).collect()
+            search(reader, q, k=10, with_text=False).collect()
             times.append(round(time.monotonic() - t0, 3))
         print(f"bm25_q{i+1:02d} dist {times}")
     local = IndexReader(spark, IDX)

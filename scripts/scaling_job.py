@@ -82,13 +82,6 @@ def main() -> None:
         search(reader, q, k=10, with_text=False).collect()
     query_sec = time.monotonic() - qt0
 
-    # pruned (two-phase block-max) pass on the same index: the crossover
-    # evidence — at 7M docs the decode volume, not job overhead, dominates
-    qt0 = time.monotonic()
-    for q in queries:
-        search(reader, q, k=10, with_text=False, prune=True).collect()
-    query_pruned_sec = time.monotonic() - qt0
-
     print(json.dumps({
         "cores": cores,
         "n_convs": n_convs,
@@ -98,7 +91,6 @@ def main() -> None:
         "turns_per_sec": round(stats["n_docs"] / build_sec, 1),
         "query_total_sec": round(query_sec, 3),
         "query_mean_sec": round(query_sec / len(queries), 3),
-        "query_pruned_mean_sec": round(query_pruned_sec / len(queries), 3),
         "shuffle_partitions": shuffle,
     }))
     shutil.rmtree(out, ignore_errors=True)

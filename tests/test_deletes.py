@@ -103,12 +103,21 @@ def test_delete_by_query_all_paths_excluded(spark, idx):
 
 
 def test_prune_falls_back_and_stays_exact(spark, idx):
+    """Tombstones disable the block-max tier: a query over the flat
+    budget runs on the distributed executor, exact under the deletes."""
     reader = IndexReader(spark, idx)
     delete_by_query(reader, f"conv_id < '{CUT}'")
-    plain = _rows(search(reader, QUERIES[0], k=10, with_text=False))
+    plain = _rows(search(IndexReader(spark, idx, driver_local_max_postings=0),
+                         QUERIES[0], k=10, with_text=False))
+    from research_engine_spark.functions.analyzer import analyze_query
+
+    terms = [t for t, _ in analyze_query(QUERIES[0])]
+    sdf = int(reader.term_stats_arrow(terms)["df"].sum())
     stats: dict = {}
-    pruned = _rows(search(reader, QUERIES[0], k=10, with_text=False,
-                          prune=True, prune_stats=stats))
+    pruned = _rows(search(
+        IndexReader(spark, idx, driver_local_max_postings=sdf - 1),
+        QUERIES[0], k=10, with_text=False, prune_stats=stats))
+    assert stats["path"] == "fallback_plain", stats
     assert pruned == plain
 
 

@@ -27,7 +27,7 @@ def test_bit_identical_to_distributed(local_reader, reader, query):
     loc = _pdf(search(local_reader, query, k=10, with_text=False,
                       prune_stats=stats))
     assert stats.get("path") == "driver_local"
-    dist = _pdf(search(reader, query, k=10, with_text=False, prune=False))
+    dist = _pdf(search(reader, query, k=10, with_text=False))
     assert list(loc["doc_id"]) == list(dist["doc_id"])
     assert np.allclose(loc["score"], dist["score"], rtol=0, atol=0), (
         f"{query!r}: driver-local scores not bit-identical")
@@ -50,7 +50,7 @@ def test_zero_spark_jobs(local_reader, spark):
 
 def test_with_text_equality(local_reader, reader):
     loc = _pdf(search(local_reader, "neural networks", k=10))
-    dist = _pdf(search(reader, "neural networks", k=10, prune=False))
+    dist = _pdf(search(reader, "neural networks", k=10))
     assert loc.to_dict("records") == dist.to_dict("records")
 
 
@@ -74,7 +74,7 @@ def test_budget_fallback(spark, index_dir):
     """Σ df over budget -> the distributed path runs (path != local)."""
     r = IndexReader(spark, index_dir, driver_local_max_postings=1)
     stats: dict = {}
-    df = search(r, "neural networks", k=5, with_text=False, prune=False,
+    df = search(r, "neural networks", k=5, with_text=False,
                 prune_stats=stats)
     assert stats.get("path") != "driver_local"
     assert df.count() == 5
@@ -100,7 +100,7 @@ def test_tombstones_respected(spark, transcripts_df, tmp_path):
     assert not set(victims) & set(after["doc_id"])
     dist = _pdf(search(
         IndexReader(spark, d, driver_local_max_postings=0),
-        "neural networks", k=5, with_text=False, prune=False))
+        "neural networks", k=5, with_text=False))
     assert list(after["doc_id"]) == list(dist["doc_id"])
     assert np.allclose(after["score"], dist["score"], rtol=0, atol=0)
 
@@ -408,7 +408,7 @@ def _pair(spark, d, q, k, budget):
     loc = search(r_local, q, k=k, with_text=False, prune_stats=st)
     r_dist = IndexReader(spark, d, driver_local_max_postings=0,
                          driver_local_max_vocab=0)
-    dist = search(r_dist, q, k=k, with_text=False, prune=False)
+    dist = search(r_dist, q, k=k, with_text=False)
     # the same columns in the same positions on every tier
     assert loc.schema.simpleString() == dist.schema.simpleString()
     return _pdf(loc), st, _pdf(dist)
@@ -508,8 +508,8 @@ def test_blockmax_respects_tombstones_and_budget(spark, blockmax_setup,
 def test_blockmax_fall_through_plans_once(spark, blockmax_setup, monkeypatch,
                                           q):
     """A query the blockmax tier declines (kept blocks over a budget
-    below one block) falls through to the distributed gate, which reuses
-    the tier's block plan: one block-metadata read and one θ-block fetch
+    below one block) falls through to the distributed executor, which
+    builds no block plan: one block-metadata read and one θ-block fetch
     per query."""
     from research_engine_spark.operators import scorer
 
@@ -527,7 +527,7 @@ def test_blockmax_fall_through_plans_once(spark, blockmax_setup, monkeypatch,
                         counted("theta", scorer._fetch_blocks_arrow))
     loc, st, dist = _pair(spark, blockmax_setup, q, 5, budget=100)
     assert st["blockmax_kept_postings"] > 100, st  # the tier ran, declined
-    assert st["gate"] == "driver", st
+    assert st["path"] == "fallback_plain", st
     assert calls == {"meta": 1, "theta": 1}, (calls, st)
     assert list(loc["doc_id"]) == list(dist["doc_id"])
     assert np.allclose(loc["score"], dist["score"], rtol=0, atol=0)
@@ -567,7 +567,10 @@ def test_blockmax_maxscore_essential_lists(spark, tmp_path):
 import itertools  # noqa: E402
 import os  # noqa: E402
 
-from research_engine_spark.operators.esdsl import es_suggest  # noqa: E402
+from research_engine_spark.operators.esdsl import (  # noqa: E402
+    es_aggregations,
+    es_suggest,
+)
 from research_engine_spark.operators.retrieval_extras import (  # noqa: E402
     multi_query_search,
 )
@@ -706,7 +709,7 @@ def test_text_fetch_lifecycle(spark, tmp_path):
     def check(query):
         loc, jobs = _rows_and_jobs(spark, lambda: search(r, query, k=10))
         dist = search(IndexReader(spark, d, driver_local_max_postings=0),
-                      query, k=10, prune=False).collect()
+                      query, k=10).collect()
         assert jobs == 0, f"{query!r} launched {jobs} Spark jobs"
         assert loc and loc == [tuple(x) for x in dist]
         return loc
@@ -745,19 +748,36 @@ _BATCHES = {
                          "b": "neurel netwerk"}, {"fuzzy": True}),
     "with_text": ({"a": "neural networks", "b": "machine learning"},
                   {"with_text": True}),
+    # search()'s full match set on the executor vs the driver-local
+    # whole-set fold, _fold_meta_pd; "b" has 3+ clauses
+    "all_matches": ({"a": "the th\u0435 networks network",
+                     "b": "neural network models learning"},
+                    {"fuzzy": True, "_all_matches": True}),
 }
 
 
 @pytest.mark.parametrize("batch", sorted(_BATCHES))
 def test_batch_tiers_bit_identical(local_reader, reader, batch):
     from research_engine_spark.functions.analyzer import analyze_query
-    from research_engine_spark.operators.scorer import _fuzzy_term_meta
+    from research_engine_spark.operators.scorer import (_fold_meta_pd,
+                                                        _fuzzy_term_meta)
 
     qs, kw = _BATCHES[batch]
-    if batch == "fuzzy_collision":
-        meta = _fuzzy_term_meta(reader, analyze_query(qs["a"]), 1.2, 0.75,
-                                50)
-        assert not meta["term"].is_unique
+    metas = {qid: _fuzzy_term_meta(local_reader, analyze_query(q), 1.2,
+                                   0.75, 50)
+             for qid, q in qs.items() if kw.get("fuzzy")}
+    if metas:
+        assert not metas["a"]["term"].is_unique
+    if kw.get("_all_matches"):
+        assert max(len(m) for m in metas.values()) >= 3
+        for qid, q in qs.items():
+            got = search(reader, q, **kw).toPandas().sort_values("doc_id")
+            want = _fold_meta_pd(local_reader, metas[qid], 1.2,
+                                 0.75).sort_values("doc_id")
+            assert len(got) and list(got["doc_id"]) == list(want["doc_id"])
+            assert np.array_equal(got["score"].to_numpy(),
+                                  want["score"].to_numpy()), qid
+        return
     dist = [tuple(r) for r in search_many(reader, qs, k=7, **kw).collect()]
     loc = [tuple(r) for r in
            search_many(local_reader, qs, k=7, **kw).collect()]
@@ -769,10 +789,12 @@ def test_batch_tiers_bit_identical(local_reader, reader, batch):
 
 
 def test_no_match_scores_zero_jobs(pos_pair, spark):
-    """A no-match phrase_scores and an ES term leaf on an absent value
-    (both on the distributed tier) answer with an empty (doc_id, score)
-    local relation: no row and no Spark job, building it included."""
-    from research_engine_spark.operators.esdsl import _Ctx, _term_df
+    """A no-match phrase_scores, and an ES term leaf and a fuzzy leaf
+    with no expansion on an absent value (all on the distributed tier)
+    answer with an empty (doc_id, score) local relation: no row and no
+    Spark job, building it included."""
+    from research_engine_spark.operators.esdsl import (_clause_df, _Ctx,
+                                                       _term_df)
     from research_engine_spark.operators.scorer import phrase_scores
 
     _, dist_r = pos_pair
@@ -780,6 +802,8 @@ def test_no_match_scores_zero_jobs(pos_pair, spark):
         "phrase": lambda: phrase_scores(dist_r, "nonexistentterm networks"),
         "term": lambda: _term_df(_Ctx(dist_r, None, None), dist_r,
                                  "zzzzqqq"),
+        "fuzzy": lambda: _clause_df(_Ctx(dist_r, None, None),
+                                    {"fuzzy": {"text": "zzzzqqq"}}),
     }
     for name, make in calls.items():
         assert (make().schema.simpleString()
@@ -797,9 +821,13 @@ _EMPTY_RESULTS = {
         r, {"s": {"text": t or "ab", "term": {"suggest_mode": "always"}}}),
     "multi_query": lambda spark, r, sf, t: multi_query_search(
         r, [t] if t else [], k=5),
+    "significant_terms": lambda spark, r, sf, t: es_aggregations(r, {
+        "query": {"match": {"text": t or "zzzzqqq"}},
+        "aggs": {"s": {"significant_terms": {"field": "text"}}}}),
 }
 _MATCHING_TEXT = {"phrase_ps": "spark", "suggest": "neurel",
-                  "multi_query": "neural networks"}
+                  "multi_query": "neural networks",
+                  "significant_terms": "neural networks"}
 
 
 @pytest.fixture(scope="module")
@@ -815,9 +843,10 @@ def documents_dir(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", sorted(_EMPTY_RESULTS))
 def test_empty_results_zero_jobs(name, reader, spark, documents_dir):
-    """The empty answers of the phrase-score twin, the term suggester and
-    multi-query RRF are local relations with a matching call's columns:
-    collecting them runs no Spark job."""
+    """The empty answers of the phrase-score twin, the term suggester,
+    multi-query RRF and significant_terms over an empty foreground are
+    local relations with a matching call's columns: collecting them runs
+    no Spark job."""
     make = _EMPTY_RESULTS[name]
     match = make(spark, reader, documents_dir, _MATCHING_TEXT[name])
     assert match.count() > 0

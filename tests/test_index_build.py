@@ -291,14 +291,13 @@ def test_refresh_clears_prune_caches(spark, tmp_path):
     d = str(tmp_path / "refresh_idx")
     build_index(seg("a", 300, "alpha beta gamma"), d, n_buckets=4)
     reader = IndexReader(spark, d)
-    before = search(reader, "alpha", k=5, prune=True,
-                    with_text=False).toPandas()
+    before = search(reader, "alpha", k=5, with_text=False).toPandas()
     assert len(before) == 5
     # new segment where 'alpha' appears with much higher tf
     append_segment(seg("b", 50, "alpha " * 30), d)
     reader.refresh()
     stats: dict = {}
-    after = search(reader, "alpha", k=5, prune=True, with_text=False,
+    after = search(reader, "alpha", k=5, with_text=False,
                    prune_stats=stats).toPandas()
     plain = search(reader, "alpha", k=5, with_text=False).toPandas()
     assert list(after["doc_id"]) == list(plain["doc_id"])

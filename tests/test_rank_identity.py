@@ -1,7 +1,7 @@
 """The correctness gate (north rule): top-k docIDs AND BM25 scores from the
 Spark engine must be rank-identical to the oracle on the full reference
 query set, at every reference k, for default and non-default (k1, b), with
-the exact two-phase block-max pruned path agreeing with the unpruned path.
+the exact block-max pruned tier agreeing with the distributed executor.
 """
 
 import numpy as np
@@ -35,17 +35,35 @@ def test_parameterized_k1_b(reader, oracle, query):
     _assert_rank_identical(eng, ora, f"{query!r} k1=0.9 b=0.4")
 
 
+def _over_flat_budget(reader, query):
+    """A reader whose driver-local budget is one posting short of the
+    query's Σ df: the query skips the flat tier and runs the block-max
+    tier, or the distributed executor when that tier declines."""
+    from research_engine_spark.functions.analyzer import analyze_query
+    from research_engine_spark.operators.scorer import IndexReader
+
+    terms = [t for t, _ in analyze_query(query)]
+    sdf = int(reader.term_stats_arrow(terms)["df"].sum())
+    return IndexReader(reader.spark, reader.index_dir,
+                       driver_local_max_postings=sdf - 1)
+
+
 @pytest.mark.parametrize("query", REFERENCE_QUERIES)
 def test_pruned_equals_unpruned(reader, query):
-    pruned = search(reader, query, k=10, prune=True, with_text=False).toPandas()
-    full = search(reader, query, k=10, prune=False, with_text=False).toPandas()
+    """The block-max tier, wherever it serves a reference query, is
+    bit-identical to the budget-0 executor."""
+    stats: dict = {}
+    pruned = search(_over_flat_budget(reader, query), query, k=10,
+                    with_text=False, prune_stats=stats).toPandas()
+    assert stats["path"] in ("driver_local_blockmax", "fallback_plain")
+    full = search(reader, query, k=10, with_text=False).toPandas()
     assert list(pruned["doc_id"]) == list(full["doc_id"])
     assert np.allclose(pruned["score"], full["score"], rtol=0, atol=0)
 
 
 def test_pruned_custom_params(reader, oracle):
     q = "machine learning"
-    eng = search(reader, q, k=5, k1=0.9, b=0.4, prune=True,
+    eng = search(reader, q, k=5, k1=0.9, b=0.4,
                  with_text=False).toPandas()
     ora = oracle.search(q, k=5, k1=0.9, b=0.4)
     _assert_rank_identical(eng, ora, "pruned custom params")
@@ -53,18 +71,16 @@ def test_pruned_custom_params(reader, oracle):
 
 def test_cached_postings_rank_identity(reader, oracle):
     """cache_postings() (VERDICT r3 #7) must be a pure latency lever:
-    identical rows/scores through the InMemoryTableScan, pruned and
-    unpruned, and uncache() releases every pinned block."""
+    identical rows/scores through the InMemoryTableScan, and uncache()
+    releases every pinned block."""
     try:
         reader.cache_postings(include_docs=True)
         assert reader.postings.storageLevel.useMemory
         assert reader.docs.storageLevel.useMemory
         for q in REFERENCE_QUERIES[:4]:
-            for prune in (False, True):
-                eng = search(reader, q, k=10, prune=prune,
-                             with_text=False).toPandas()
-                ora = oracle.search(q, k=10)
-                _assert_rank_identical(eng, ora, f"cached {q!r} prune={prune}")
+            eng = search(reader, q, k=10, with_text=False).toPandas()
+            ora = oracle.search(q, k=10)
+            _assert_rank_identical(eng, ora, f"cached {q!r}")
     finally:
         reader.uncache()
     assert not reader.postings.storageLevel.useMemory
@@ -112,8 +128,9 @@ def test_prune_engages_on_skewed_tf(spark, tmp_path):
     """Block-max pruning must actually SKIP blocks when the score
     distribution allows it: a term with a cluster of high-tf docs early in
     doc_id order (so they share blocks) and tf=1 everywhere else gives
-    later blocks an upper bound below θ. Asserts the two-phase path ran,
-    most blocks were skipped, and results are identical to the plain scan.
+    later blocks an upper bound below θ. Asserts the block-max tier ran,
+    most blocks were skipped, and results are identical to the
+    distributed executor.
     """
     import datetime
 
@@ -135,25 +152,22 @@ def test_prune_engages_on_skewed_tf(spark, tmp_path):
     df = spark.createDataFrame(pdf)
     idx = str(tmp_path / "skew_idx")
     build_index(df, idx, n_buckets=4)
-    # budget 0: these assert the DISTRIBUTED block-max machinery
-    # engages; the tiny corpus would otherwise go driver-local
     reader = IndexReader(spark, idx, driver_local_max_postings=0)
 
     stats: dict = {}
-    pruned = search(reader, "skewterm", k=10, prune=True, with_text=False,
-                    prune_stats=stats).toPandas()
-    plain = search(reader, "skewterm", k=10, prune=False,
-                   with_text=False).toPandas()
-    assert stats["path"] == "single_clause_pruned", stats
+    pruned = search(_over_flat_budget(reader, "skewterm"), "skewterm",
+                    k=10, with_text=False, prune_stats=stats).toPandas()
+    plain = search(reader, "skewterm", k=10, with_text=False).toPandas()
+    assert stats["path"] == "driver_local_blockmax", stats
     assert stats["n_keep"] < 0.5 * stats["n_blocks"], stats
     assert list(pruned["doc_id"]) == list(plain["doc_id"])
     assert np.allclose(pruned["score"], plain["score"], rtol=0, atol=0)
 
 
 def test_prune_two_phase_multi_term(spark, tmp_path):
-    """Multi-term query over a skewed corpus: the full two-phase path
-    (phase A skip + candidate rescore) must engage and stay bit-identical
-    to the plain scan."""
+    """Multi-term query over a skewed corpus: the block-max tier's full
+    two-phase path (phase A skip + candidate rescore) must engage and
+    stay bit-identical to the distributed executor."""
     import datetime
 
     import pandas as pd
@@ -174,58 +188,49 @@ def test_prune_two_phase_multi_term(spark, tmp_path):
     df = spark.createDataFrame(pdf)
     idx = str(tmp_path / "skew2_idx")
     build_index(df, idx, n_buckets=4)
-    # budget 0: these assert the DISTRIBUTED block-max machinery
-    # engages; the tiny corpus would otherwise go driver-local.
-    # prune_spark_min_postings=0: the multi-term two-phase path is
-    # latency-gated to large posting volumes in production (r6) — this
-    # test exercises the machinery itself on a tiny corpus
-    reader = IndexReader(spark, idx, driver_local_max_postings=0,
-                         prune_spark_min_postings=0)
+    reader = IndexReader(spark, idx, driver_local_max_postings=0)
 
     stats: dict = {}
-    pruned = search(reader, "alpha beta", k=10, prune=True,
-                    with_text=False, prune_stats=stats).toPandas()
-    plain = search(reader, "alpha beta", k=10, prune=False,
-                   with_text=False).toPandas()
-    assert stats["path"] == "two_phase", stats
+    pruned = search(_over_flat_budget(reader, "alpha beta"), "alpha beta",
+                    k=10, with_text=False, prune_stats=stats).toPandas()
+    plain = search(reader, "alpha beta", k=10, with_text=False).toPandas()
+    assert stats["path"] == "driver_local_blockmax", stats
     assert stats["n_keep"] < 0.5 * stats["n_blocks"], stats
+    assert stats["n_candidates"] > 0, stats
     assert list(pruned["doc_id"]) == list(plain["doc_id"])
     assert np.allclose(pruned["score"], plain["score"], rtol=0, atol=0)
 
 
 @pytest.mark.parametrize("query", ["machine learning",
                                    "neural networks for language"])
-def test_spark_metadata_gate_identical(spark, index_dir, monkeypatch, query):
-    """Block metadata over BLOCK_META_BUDGET: θ comes from the
-    Spark-metadata gate (one metadata-only job + a pyarrow fetch of the
-    best blocks) and the rows stay bit-identical to the plain scan. A
-    fresh reader keeps the per-term block-metadata cache empty, so the
-    budget check really runs."""
+def test_spark_metadata_gate_identical(reader, monkeypatch, query):
+    """Block metadata over BLOCK_META_BUDGET: the block-max tier
+    declines, and a query over the flat budget runs on the distributed
+    executor, bit-identical to the budget-0 reader. A fresh reader keeps
+    the per-term block-metadata cache empty, so the budget check really
+    runs."""
     from research_engine_spark.operators import scorer
 
     monkeypatch.setattr(scorer, "BLOCK_META_BUDGET", 0)
-    reader = scorer.IndexReader(spark, index_dir, driver_local_max_postings=0)
     stats: dict = {}
-    pruned = search(reader, query, k=10, prune=True, with_text=False,
-                    prune_stats=stats).collect()
-    assert stats["gate"] == "spark", stats
-    plain = search(reader, query, k=10, prune=False, with_text=False)
-    assert [tuple(r) for r in pruned] == [tuple(r) for r in plain.collect()]
+    got = search(_over_flat_budget(reader, query), query, k=10,
+                 with_text=False, prune_stats=stats).collect()
+    assert stats == {"path": "fallback_plain"}, stats
+    want = search(reader, query, k=10, with_text=False).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
-def test_prune_gate_falls_back_on_uniform_corpus(reader):
-    """On the uniform synthetic corpus, common-term query blocks are
-    indistinguishable (every block's ub ≈ the global term ub), so the
-    cutoff cannot skip ≥30% of blocks and the gate must choose the
-    single-pass scan rather than decode the corpus twice."""
+def test_prune_gate_falls_back_on_uniform_corpus(reader, oracle):
+    """The budget-0 reader runs every query on the distributed executor
+    and reports it as ``fallback_plain``, the tier name the benchmark's
+    ``scorer.path.fallback_plain`` counter matches; its rows are the
+    oracle's."""
     stats: dict = {}
-    out = search(reader, "machine learning", k=10, prune=True,
-                 with_text=False, prune_stats=stats).toPandas()
-    assert stats["path"] == "fallback_plain", stats
-    assert stats["n_blocks"] > 0 and stats["n_keep"] >= 0, stats
-    plain = search(reader, "machine learning", k=10, prune=False,
-                   with_text=False).toPandas()
-    assert list(out["doc_id"]) == list(plain["doc_id"])
+    out = search(reader, "machine learning", k=10, with_text=False,
+                 prune_stats=stats).toPandas()
+    assert stats == {"path": "fallback_plain"}, stats
+    _assert_rank_identical(out, oracle.search("machine learning", k=10),
+                           "executor")
 
 
 def test_batch_search_matches_single_query(reader):

@@ -64,23 +64,55 @@ from research_engine_spark.plans.inspect import (  # noqa: E402
 )
 
 
-def test_search_plan_shape(reader):
-    """The scoring job must: prune postings partitions by bucket, push the
-    term filter to parquet, attach the query-term weights WITHOUT an
-    exchange (r6: literal CASE columns — the r5 broadcast join cost one
-    BroadcastExchange job per query), and finish with a distributed
-    top-k (TakeOrderedAndProject) — not a global sort."""
-    q = search(reader, "neural networks", k=10, with_text=False)
-    plan = _formatted_plan(q)
+def _collected_plan(reader, monkeypatch, run, group):
+    """(the DataFrames that ``run`` collects with toPandas, the rows it
+    returns, its Spark job count, the job count of collecting its
+    result): the executor's plan is the collected frame's, since search
+    and search_many return a local relation."""
+    spark = reader.spark
+    collected = []
+    cls = type(spark.range(1))
+    to_pandas = cls.toPandas
+
+    def capture(self):
+        collected.append(self)
+        return to_pandas(self)
+
+    monkeypatch.setattr(cls, "toPandas", capture)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, "probe")
+    try:
+        out = run()
+        n_run = len(tracker.getJobIdsForGroup(group))
+        rows = out.collect()
+        n_collect = len(tracker.getJobIdsForGroup(group)) - n_run
+    finally:
+        sc.setJobGroup(None, None)
+        monkeypatch.setattr(cls, "toPandas", to_pandas)
+    return collected, rows, n_run, n_collect
+
+
+def test_search_plan_shape(reader, monkeypatch):
+    """The distributed search's scoring job must prune postings
+    partitions by bucket, push the term filter to parquet and attach
+    the query-term weights WITHOUT an exchange (they ride in the decode
+    closure); its fold is a per-partition numpy top-k, not a global
+    sort."""
+    search(reader, "neural networks", k=10, with_text=False).collect()
+    collected, rows, _, _ = _collected_plan(
+        reader, monkeypatch,
+        lambda: search(reader, "neural networks", k=10, with_text=False),
+        "search_plan_probe")
+    assert len(rows) == 10 and len(collected) == 1
+    plan = _formatted_plan(collected[0])
     assert "PartitionFilters: [bucket" in plan
     assert "In(term, " in plan  # pushed to row groups
-    # clause weights are literals now: no join, no broadcast exchange
     assert "BroadcastExchange" not in plan
-    assert "CASE WHEN (term" in plan
-    assert "TakeOrderedAndProject" in plan
-    assert "Sort " not in plan.split("TakeOrderedAndProject")[0]
-    facts = assert_scan_efficient(q, require_partition_pruning=True)
-    assert facts.take_ordered
+    assert "Sort " not in plan
+    facts = assert_scan_efficient(collected[0],
+                                  require_partition_pruning=True)
+    assert facts.broadcast_joins == 0
 
 
 def test_filter_pushdown_documents(spark):
@@ -91,8 +123,13 @@ def test_filter_pushdown_documents(spark):
     assert "ReadSchema: struct<doc_id:bigint,n_chars:bigint>" in plan
 
 
-def test_hits_join_is_broadcast(reader):
-    """J2: the k-row hits side must broadcast against the docs table."""
+def test_hits_join_is_broadcast(reader, monkeypatch):
+    """J2: when the top-k's docs row groups exceed the driver-side text
+    budget, the k-row hits side must broadcast against the docs
+    table."""
+    from research_engine_spark.operators import scorer
+
+    monkeypatch.setattr(scorer, "DRIVER_TEXT_MAX_BYTES", 0)
     plan = _formatted_plan(search(reader, "neural networks", k=5,
                                   with_text=True))
     assert "BroadcastHashJoin" in plan
@@ -114,25 +151,12 @@ def test_batch_search_plan_shape(reader, monkeypatch):
 
     qs = ["neural networks", "machine learning"]
     search_many(reader, qs, k=5).collect()  # warm the term dictionary
-    spark = reader.spark
-    collected = []
-    cls = type(spark.range(1))
-    to_pandas = cls.toPandas
-
-    def capture(self):
-        collected.append(self)
-        return to_pandas(self)
-
-    monkeypatch.setattr(cls, "toPandas", capture)
-    sc = spark.sparkContext
-    sc.setJobGroup("batch_plan_probe", "probe")
-    try:
-        rows = search_many(reader, qs, k=5).collect()
-        jobs = sc.statusTracker().getJobIdsForGroup("batch_plan_probe")
-    finally:
-        sc.setJobGroup(None, None)
+    collected, rows, n_run, n_collect = _collected_plan(
+        reader, monkeypatch, lambda: search_many(reader, qs, k=5),
+        "batch_plan_probe")
     assert len(rows) == 10
-    assert len(jobs) <= 2, f"batch launched {len(jobs)} jobs"
+    assert n_run <= 2, f"batch launched {n_run} jobs"
+    assert n_collect == 0, f"collect launched {n_collect} jobs"
     assert len(collected) == 1
     facts = assert_scan_efficient(collected[0],
                                   require_partition_pruning=True)
@@ -142,16 +166,21 @@ def test_batch_search_plan_shape(reader, monkeypatch):
     assert "Window" not in plan
 
 
-def test_single_term_search_has_no_aggregate_shuffle(reader):
-    """A single-term query has exactly one partial per doc, so its plain
-    plan must feed the decode straight into TakeOrderedAndProject — no
-    per-doc sum HashAggregate and no hashpartitioning(doc_id) exchange.
-    A multi-term query on the same reader DOES need the deterministic
-    per-doc sum (regression guard for the shortcut's scope)."""
-    single = search(reader, "neural", k=10, with_text=False, prune=False)
-    plan = _formatted_plan(single)
-    assert "TakeOrderedAndProject" in plan
-    assert "hashpartitioning(doc_id" not in plan
-    multi = search(reader, "neural networks", k=10, with_text=False,
-                   prune=False)
-    assert "hashpartitioning(doc_id" in _formatted_plan(multi)
+def test_single_term_search_has_no_aggregate_shuffle(reader, monkeypatch):
+    """A single-term query has exactly one partial per doc, so the
+    executor folds each decode partition on its own: no
+    hashpartitioning(doc_id) exchange. A multi-term query on the same
+    reader DOES shuffle on doc_id before the fold (regression guard for
+    the shortcut's scope). A distributed search() runs at most 2 Spark
+    jobs, and collecting its result runs none."""
+    for q, shuffled in (("neural", False), ("neural networks", True)):
+        search(reader, q, k=10, with_text=False).collect()  # warm
+        collected, rows, n_run, n_collect = _collected_plan(
+            reader, monkeypatch,
+            lambda: search(reader, q, k=10, with_text=False),
+            f"search_jobs_probe_{shuffled}")
+        assert len(rows) == 10 and len(collected) == 1, q
+        plan = _formatted_plan(collected[0])
+        assert ("hashpartitioning(doc_id" in plan) is shuffled, q
+        assert n_run <= 2, f"{q!r}: search launched {n_run} jobs"
+        assert n_collect == 0, f"{q!r}: collect launched {n_collect} jobs"
