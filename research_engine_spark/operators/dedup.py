@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import wide
+
 
 def normalize_text(col):
     """Canonical form for fingerprinting: lowercase, collapse whitespace,
@@ -61,11 +63,8 @@ def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
     arrives as few parquet splits, serializing the normalize+shingle
     explode — the CPU-heavy part of every dedup operator built on this
     primitive — onto one task. Round-robin the raw rows up to session
-    parallelism first; a no-op on already-wide inputs."""
-    sc = df.sparkSession.sparkContext
-    p = int(sc.defaultParallelism)
-    if df.rdd.getNumPartitions() < p:
-        df = df.repartition(p)
+    parallelism first (session.wide); a no-op on already-wide inputs."""
+    df = wide(df)
     toks = F.split(normalize_text(F.col(text_col)), " ")
     k = F.size(toks) - F.lit(n - 1)
     # guard: Spark sequence(1, k) with k < 1 yields a DESCENDING sequence,
@@ -476,12 +475,8 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
     # tokenize+gram pass onto one task; round-robin the raw rows up to
     # the session parallelism first. At scale the input is already wide
     # and this is a no-op.
-    spark = df.sparkSession
-    p = int(spark.sparkContext.defaultParallelism)
-    src = df.select(F.col(id_col).alias("doc_id"),
-                    F.col(text_col).alias("_txt"))
-    if src.rdd.getNumPartitions() < p:
-        src = src.repartition(p)
+    src = wide(df.select(F.col(id_col).alias("doc_id"),
+                         F.col(text_col).alias("_txt")))
     toks = F.filter(F.split(F.lower(F.col("_txt")), r"[^a-z0-9]+"),
                     lambda t: t != "")
     base = (src.select("doc_id", toks.alias("_tk"))

@@ -24,7 +24,7 @@ builds), match_phrase, match_phrase_prefix (the LAST analyzed token is
 a term prefix, expanded in term-dictionary order capped at
 max_expansions; combined phrase frequency over all completions, prefix-
 position idf from the max expansion df — the Lucene MultiPhraseQuery
-convention; operators/scorer.py:_phrase_prefix_prologue),
+convention; operators/scorer.py:_phrase_prefix_query),
 match_bool_prefix (analyzed tokens as term clauses + the last as a
 prefix clause in a bool per operator/minimum_should_match — ES's
 documented construction; _mbp_rewrite), rank_feature (stored positive
@@ -139,6 +139,7 @@ from .multifield import MultiFieldReader
 from .scorer import (
     DRIVER_LOCAL_MAX_DELETES,
     _NO_HITS,
+    _NO_MATCH,
     IndexReader,
     _deleted_ids_arrow,
     _empty_df,
@@ -148,8 +149,12 @@ from .scorer import (
     _all_match_scores,
     _fuzzy_term_meta,
     _hits_df,
-    _phrase_prefix_driver_local,
+    _PHRASE_SHIFT,
+    _PositionalQuery,
+    _phrase_prefix_query,
     _phrase_scores_driver_local,
+    _positional_local,
+    _positional_scores,
     _term_meta,
     _topk_df,
     phrase_prefix_scores,
@@ -982,9 +987,9 @@ def _clause_pd(ctx: _Ctx, clause: dict):
         reader = ctx.reader(field)
         if reader.vocab_arrow() is None:
             return None  # expansion needs a job: go distributed
-        out = _phrase_prefix_driver_local(
+        out = _positional_local(reader, _phrase_prefix_query(
             reader, spec["query"], ctx.k1, ctx.b,
-            int(spec.get("max_expansions", 50)))
+            int(spec.get("max_expansions", 50))))
         return _scale_pd(out, float(spec.get("boost", 1.0)))
     if kind == "match_bool_prefix":
         _, spec = _leaf_spec(body)
@@ -1302,52 +1307,57 @@ def _sloppy_prep(ctx: _Ctx, reader: IndexReader, spec: dict):
     return (*ordered_terms, sum_idf, k1, b, int(meta["df"].sum()))
 
 
-def _sloppy_phrase_pd(ctx: _Ctx, reader: IndexReader, spec: dict):
-    """match_phrase slop / span_near, serving tier: numpy position-pair
-    weighting over the driver-local positional fetch, or None when
-    over budget."""
-    from .scorer import _PHRASE_SHIFT, _positions_local
+def _sloppy_wtf(keys_a: np.ndarray, keys_b: np.ndarray,
+                displacements: list) -> tuple[np.ndarray, np.ndarray]:
+    """Sloppy phrase frequency per doc: for each (d, w) of
+    _sloppy_displacements, in that order, the n pairs with b's key = a's
+    key + d add n * w to their doc. Returns (docs ascending, wtf)."""
+    hits = []
+    for d, w in displacements:
+        inter = np.intersect1d(keys_a + d, keys_b)
+        if inter.size:
+            u, c = np.unique(inter // _PHRASE_SHIFT, return_counts=True)
+            hits.append((u, c * w))
+    docs = (np.unique(np.concatenate([u for u, _ in hits])) if hits
+            else np.empty(0, np.int64))
+    wtf = np.zeros(docs.size)
+    for u, x in hits:
+        wtf[np.searchsorted(docs, u)] += x
+    return docs, wtf
 
-    slop = int(spec.get("slop", 0))
+
+def _sloppy_query(ctx: _Ctx, reader: IndexReader,
+                  spec: dict) -> _PositionalQuery:
+    """match_phrase slop / span_near as a positional query: every pair of
+    an ``a`` and a ``b`` position within the slop adds its weight 1/d to
+    the doc's sloppy frequency wtf (_sloppy_wtf), and
+    score = sum_idf * wtf / (wtf + k1*(1-b+b*dl/avgdl)). Weight
+    1/(1+gap) is Lucene's sloppy weight; enumeration counts ALL pairs
+    within the slop (a documented deviation from Lucene's greedy
+    single-use matching — identical whenever term occurrences don't
+    compete for partners)."""
     prep = _sloppy_prep(ctx, reader, spec)
     if prep is None:
-        return _NO_HITS.copy()
+        return _NO_MATCH
     t_a, t_b, sum_idf, k1, b, df_sum = prep
-    if df_sum > reader.driver_local_max_postings:
-        return None
-    if reader.has_deletes and \
-            reader.n_deleted_rows > DRIVER_LOCAL_MAX_DELETES:
-        return None
-    uniq = list(dict.fromkeys([t_a, t_b]))
-    by_term, dl_docs, dl_vals = _positions_local(reader, uniq)
-    if any(t not in by_term for t in uniq):
-        return _NO_HITS.copy()
-    _, keys_a = by_term[t_a]
-    _, keys_b = by_term[t_b]
-    acc: dict[int, float] = {}
-    for d, w in _sloppy_displacements(slop,
-                                      bool(spec.get("in_order", True))):
-        inter = np.intersect1d(keys_a + d, keys_b)
-        if not inter.size:
-            continue
-        docs = inter // _PHRASE_SHIFT
-        u, c = np.unique(docs, return_counts=True)
-        for doc, n in zip(u.tolist(), c.tolist()):
-            acc[doc] = acc.get(doc, 0.0) + n * w
-    if not acc:
-        return _NO_HITS.copy()
-    match_docs = np.fromiter(acc.keys(), dtype=np.int64, count=len(acc))
-    wtf = np.fromiter(acc.values(), dtype=np.float64, count=len(acc))
-    dls = dl_vals[np.searchsorted(dl_docs, match_docs)].astype(
-        np.float64)
+    displacements = _sloppy_displacements(
+        int(spec.get("slop", 0)), bool(spec.get("in_order", True)))
     avgdl = float(reader.stats["avgdl"])
-    scores = sum_idf * wtf / (wtf + k1 * (1 - b + b * dls / avgdl))
-    if reader.has_deletes:
-        deleted = _deleted_ids_arrow(reader)
-        if deleted.size:
-            keep = ~np.isin(match_docs, deleted)
-            match_docs, scores = match_docs[keep], scores[keep]
-    out = pd.DataFrame({"doc_id": match_docs, "score": scores})
+
+    def kernel(by_term, dl_docs, dl_vals) -> pd.DataFrame:
+        docs, wtf = _sloppy_wtf(by_term[t_a], by_term[t_b], displacements)
+        dls = dl_vals[np.searchsorted(dl_docs, docs)].astype(np.float64)
+        return pd.DataFrame({"doc_id": docs, "score": sum_idf * wtf / (
+            wtf + k1 * (1 - b + b * dls / avgdl))})
+
+    return _PositionalQuery(list(dict.fromkeys([t_a, t_b])), df_sum,
+                            kernel)
+
+
+def _sloppy_phrase_pd(ctx: _Ctx, reader: IndexReader, spec: dict):
+    """match_phrase slop / span_near, serving tier (None when over the
+    positional gate)."""
+    out = _positional_local(reader, _sloppy_query(ctx, reader, spec))
     return _scale_pd(out, float(spec.get("boost", 1.0)))
 
 
@@ -1394,74 +1404,10 @@ def _check_sloppy_terms(ordered_terms: list[str]):
 
 def _sloppy_phrase_df(ctx: _Ctx, reader: IndexReader,
                       spec: dict) -> DataFrame:
-    """match_phrase with slop, distributed: decode positions of the two
-    terms from the bucket-pruned positional postings, then ONE
-    equi-join per displacement d in [1, slop+1] on the shifted global
-    key (doc·2³²+pos) — hash joins, never a range join — unioned with
-    weight 1/d and summed per doc. Weight 1/(1+gap) is Lucene's sloppy
-    weight; enumeration counts ALL in-order pairs within the slop (a
-    documented deviation from Lucene's greedy single-use matching —
-    identical whenever term occurrences don't compete for partners)."""
-    from .indexer import decode_positions_block
-    from .scorer import _PHRASE_SHIFT
-
-    slop = int(spec.get("slop", 0))
-    spark = ctx.spark
-    prep = _sloppy_prep(ctx, reader, spec)
-    if prep is None:
-        return _hits_df(spark, _NO_HITS)
-    t_a, t_b, sum_idf, k1, b, _df_sum = prep
-    uniq = list(dict.fromkeys([t_a, t_b]))
-    buckets = sorted(set(reader.bucket_of(uniq).values()))
-    posts = (reader.postings
-             .filter(F.col("bucket").isin(buckets)
-                     & F.col("term").isin(uniq))
-             .select("term", "doc_gaps", "dls", "poss"))
-
-    def _flatten(it):
-        for pdf in it:
-            for r in pdf.itertuples(index=False):
-                doc_ids = delta_decode(vb_decode(bytes(r.doc_gaps)))
-                dls = vb_decode(bytes(r.dls)).astype(np.int64)
-                poss = decode_positions_block(bytes(r.poss),
-                                              doc_ids.size)
-                lens = np.fromiter((p.size for p in poss),
-                                   dtype=np.int64, count=doc_ids.size)
-                if not lens.sum():
-                    continue
-                docs_rep = np.repeat(doc_ids, lens).astype(np.int64)
-                dls_rep = np.repeat(dls, lens)
-                keys = (docs_rep * _PHRASE_SHIFT
-                        + np.concatenate(poss).astype(np.int64))
-                yield pd.DataFrame({"term": r.term, "key": keys,
-                                    "dl": dls_rep})
-
-    flat = posts.mapInPandas(_flatten,
-                             "term string, key long, dl long")
-    fa = flat.filter(F.col("term") == t_a)
-    fb = flat.filter(F.col("term") == t_b).select(
-        F.col("key").alias("k"), "dl")
-    legs = [
-        fa.select((F.col("key") + d).alias("k"),
-                  F.lit(w).alias("w"))
-        .join(fb, "k")
-        for d, w in _sloppy_displacements(
-            slop, bool(spec.get("in_order", True)))
-    ]
-    pairs = reduce(DataFrame.unionByName, legs)
-    avgdl = float(reader.stats["avgdl"])
-    per_doc = (pairs
-               .withColumn("doc_id",
-                           F.expr(f"k div {_PHRASE_SHIFT}"))
-               .groupBy("doc_id")
-               .agg(F.sum("w").alias("wtf"), F.min("dl").alias("dl")))
-    scored = per_doc.select(
-        "doc_id",
-        (F.lit(float(sum_idf)) * F.col("wtf")
-         / (F.col("wtf") + F.lit(k1) * (1 - b + b * F.col("dl")
-                                        / F.lit(avgdl))))
-        .alias("score"))
-    return _scale_df(reader.live_only(scored),
+    """match_phrase slop / span_near on the positional executor: the
+    serving tier's kernel per doc_id partition."""
+    return _scale_df(_positional_scores(reader, _sloppy_query(ctx, reader,
+                                                              spec)),
                      float(spec.get("boost", 1.0)))
 
 
@@ -4133,13 +4079,10 @@ def _bigram_counts(reader: IndexReader,
                    pairs: list[tuple[str, str]]) -> dict[tuple, int]:
     """Corpus counts of adjacent token bigrams, from the POSITIONAL
     index (no corpus re-scan): occurrences of ``a`` at position p and
-    ``b`` at p+1 in the same doc. Driver-local (zero Spark jobs) when
-    the involved terms' Σ df fits the reader budget — the same gate the
-    phrase query uses — else ONE job over the bucket-pruned positional
-    postings with a key-join (doc·2³²+pos arithmetic identical to the
-    local tier)."""
-    from .scorer import _PHRASE_SHIFT, _positions_local
-
+    ``b`` at p+1 in the same live doc. A positional query whose kernel
+    counts np.intersect1d(keys_a + 1, keys_b) per pair: driver-local
+    (zero Spark jobs) inside the positional gate, else one count per
+    pair per doc_id partition of the executor; the driver sums them."""
     out = {tuple(p): 0 for p in pairs}
     terms = sorted({t for p in pairs for t in p})
     ts = reader.term_stats_arrow(terms)
@@ -4147,64 +4090,21 @@ def _bigram_counts(reader: IndexReader,
     need = [p for p in out if p[0] in present and p[1] in present]
     if not need:
         return out
-    small = int(ts["df"].sum()) <= reader.driver_local_max_postings \
-        and (not reader.has_deletes
-             or reader.n_deleted_rows <= DRIVER_LOCAL_MAX_DELETES)
-    if small:
-        by_term, _, _ = _positions_local(
-            reader, sorted({t for p in need for t in p}))
-        deleted = (_deleted_ids_arrow(reader)
-                   if reader.has_deletes else None)
-        for a, b in need:
-            if a not in by_term or b not in by_term:
-                continue
-            docs_a, keys_a = by_term[a]
-            docs_b, keys_b = by_term[b]
-            if deleted is not None and deleted.size:
-                keys_a = keys_a[~np.isin(docs_a, deleted)]
-                keys_b = keys_b[~np.isin(docs_b, deleted)]
-            out[(a, b)] = int(np.intersect1d(keys_a + 1, keys_b).size)
-        return out
-    from .indexer import decode_positions_block
 
-    spark = reader.spark
-    uniq = sorted({t for p in need for t in p})
-    buckets = sorted(set(reader.bucket_of(uniq).values()))
-    posts = (reader.postings
-             .filter(F.col("bucket").isin(buckets)
-                     & F.col("term").isin(uniq))
-             .select("term", "doc_gaps", "poss"))
+    def kernel(by_term, dl_docs, dl_vals) -> pd.DataFrame:
+        return pd.DataFrame({
+            "i": np.arange(len(need), dtype=np.int32),
+            "c": np.array([np.intersect1d(by_term[a] + 1, by_term[b]).size
+                           for a, b in need], dtype=np.int64)})
 
-    def _flatten(it):
-        for pdf in it:
-            for r in pdf.itertuples(index=False):
-                doc_ids = delta_decode(vb_decode(bytes(r.doc_gaps)))
-                poss = decode_positions_block(bytes(r.poss),
-                                              doc_ids.size)
-                lens = np.fromiter((p.size for p in poss),
-                                   dtype=np.int64, count=doc_ids.size)
-                if not lens.sum():
-                    continue
-                docs_rep = np.repeat(doc_ids, lens).astype(np.int64)
-                keys = (docs_rep * _PHRASE_SHIFT
-                        + np.concatenate(poss).astype(np.int64))
-                yield pd.DataFrame({"term": r.term, "key": keys})
-
-    flat = posts.mapInPandas(_flatten, "term string, key long")
-    if reader.has_deletes:
-        flat = reader.live_only(flat.withColumn(
-            "doc_id", F.expr(f"key div {_PHRASE_SHIFT}"))).drop("doc_id")
-    pairs_df = spark.createDataFrame(list(need), "a string, b string")
-    cnt = (flat.alias("x")
-           .join(F.broadcast(pairs_df), F.col("x.term") == F.col("a"))
-           .select("a", "b", (F.col("key") + 1).alias("k"))
-           .join(flat.alias("y"),
-                 (F.col("y.term") == F.col("b"))
-                 & (F.col("y.key") == F.col("k")))
-           .groupBy("a", "b")
-           .agg(F.count(F.lit(1)).alias("c"))).collect()
-    for r in cnt:
-        out[(r.a, r.b)] = int(r.c)
+    query = _PositionalQuery(sorted({t for p in need for t in p}),
+                             int(ts["df"].sum()), kernel)
+    counts = _positional_local(reader, query)
+    if counts is None:
+        counts = _positional_scores(reader, query,
+                                    "i int, c bigint").toPandas()
+    for i, c in zip(counts["i"].tolist(), counts["c"].tolist()):
+        out[need[i]] += int(c)
     return out
 
 

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import wide
+
 _HEX = "0123456789abcdef"
 
 # pack_sequences pins its ranged frame so the totals collect and the
@@ -103,15 +105,12 @@ def pack_sequences(df: DataFrame, seq_len: int, id_col: str = "doc_id",
     if n_partitions is None:
         n_partitions = int(spark.conf.get(
             "spark.sql.shuffle.partitions", "32"))
-    src = df.select(F.col(id_col).alias("doc_id"),
-                    F.col(text_col).alias("_txt"))
     # parallelism floor (guide §2.5): a compacted corpus arrives as one
     # parquet split, serializing the tokenize pass (which otherwise runs
     # TWICE below — once for the range-partitioner's sample, once for
     # the real shuffle) onto one task. No-op on already-wide inputs.
-    p = int(spark.sparkContext.defaultParallelism)
-    if src.rdd.getNumPartitions() < p:
-        src = src.repartition(p)
+    src = wide(df.select(F.col(id_col).alias("doc_id"),
+                         F.col(text_col).alias("_txt")))
     toks = F.filter(F.split(F.lower(F.col("_txt")), r"[^a-z0-9]+"),
                     lambda t: t != "")
     base = src.select("doc_id", F.size(toks).alias("n_tokens"))

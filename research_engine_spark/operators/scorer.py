@@ -43,8 +43,9 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -1035,10 +1036,11 @@ def _with_text(reader: IndexReader, topk) -> DataFrame:
 
     A pandas top-k (every search/search_many tier, rows already in
     result order) fetches its k docs rows with pyarrow and hands the
-    result to Spark as an Arrow LocalRelation: zero Spark jobs. A Spark
-    DataFrame top-k (the distributed phrase and bool_should paths), or
-    one whose docs row groups exceed DRIVER_TEXT_MAX_BYTES,
-    broadcast-joins the k rows against the forward table instead."""
+    result to Spark as an Arrow LocalRelation: zero Spark jobs. A lazy
+    Spark top-k (phrase_search and bool_should_search over the
+    positional executor), or one whose docs row groups exceed
+    DRIVER_TEXT_MAX_BYTES, broadcast-joins the k rows against the forward
+    table instead."""
     keys = [c for c in topk.columns if c == "qid"]
     if isinstance(topk, pd.DataFrame):
         d = topk["doc_id"].to_numpy(np.int64)
@@ -1719,32 +1721,145 @@ def search_many(
 
 
 # ---------------------------------------------------------------------------
-# Phrase queries (R3/R4) over positional postings
+# Positional queries (R3/R4): phrase, phrase-prefix, sloppy/span_near and
+# bigram counts. One batched decode, one gate, one executor, and one numpy
+# kernel per query type that both tiers run
 # ---------------------------------------------------------------------------
 
-PHRASE_ROW_SCHEMA = "doc_id bigint, term string, dl int, positions array<int>"
+_PHRASE_SHIFT = np.int64(1) << np.int64(32)
+_POSITION_COLS = _PAYLOAD_COLS + ["poss"]
+_POSITION_ROW_SCHEMA = "doc_id bigint, t int, key bigint, dl int"
+_SCORES_SCHEMA = "doc_id bigint, score double"
 
 
-def _decode_positions_factory():
-    from .indexer import decode_positions_block
+class _PositionalQuery(NamedTuple):
+    """A positional query as both tiers run it: the index terms to fetch
+    ([] when nothing can match), their Σ df (the driver-local gate) and
+    the kernel, (by_term, dl_docs, dl_vals) -> pandas rows."""
+
+    terms: list
+    df_sum: int
+    kernel: Callable | None
+
+
+_NO_MATCH = _PositionalQuery([], 0, None)
+
+
+def _decode_positions(rows: pd.DataFrame, terms: list[str]):
+    """Batch decode of positional postings blocks (_POSITION_COLS, every
+    block's term in ``terms``) -> per position (doc_id, t = the rank of
+    its term in ``terms``, key = doc_id * 2^32 + pos) and per posting
+    (tf, doc_id, dl), int64 each. gaps/tfs/dls decode in one numpy pass
+    and the position streams in one more (n_positions == tf by
+    construction): no per-posting Python."""
+    from .indexer import decode_positions_flat
+
+    if not len(rows):
+        return (np.empty(0, np.int64),) * 6
+    doc_ids, tfs, dls, blk_counts = decode_blocks_flat(
+        rows["doc_gaps"].tolist(), rows["tfs"].tolist(),
+        rows["dls"].tolist())
+    pos_flat = decode_positions_flat([bytes(x) for x in rows["poss"]], tfs)
+    docs_rep = np.repeat(doc_ids, tfs)
+    t_rank = {t: r for r, t in enumerate(terms)}
+    blk_rank = np.fromiter((t_rank[t] for t in rows["term"].tolist()),
+                           dtype=np.int64, count=len(rows))
+    pos_rank = np.repeat(np.repeat(blk_rank, blk_counts), tfs)
+    return (docs_rep, pos_rank, docs_rep * _PHRASE_SHIFT + pos_flat, tfs,
+            doc_ids, dls)
+
+
+def _kernel_inputs(terms: list[str], t: np.ndarray, key: np.ndarray,
+                   doc: np.ndarray, dl: np.ndarray):
+    """What every positional kernel takes: by_term (term -> the global
+    keys of its positions, from their term ranks t; empty for a term
+    with none) and the doc_id-sorted lengths (dl_docs, dl_vals) of the
+    docs in (doc, dl), pairs per posting on the driver and per position
+    on the executor."""
+    by_term = {term: key[t == r] for r, term in enumerate(terms)}
+    dl_docs, first = np.unique(doc, return_index=True)
+    return by_term, dl_docs, dl[first]
+
+
+def _positional_local(reader: IndexReader,
+                      query: _PositionalQuery) -> pd.DataFrame | None:
+    """The driver-local tier of every positional query, and its one gate:
+    None (go distributed) when the terms' Σ df exceeds
+    reader.driver_local_max_postings or the tombstones exceed
+    DRIVER_LOCAL_MAX_DELETES. Otherwise a zero-Spark-job pyarrow fetch
+    of the blocks, the batch decode, tombstoned docs dropped, and the
+    query's kernel."""
+    import pyarrow.dataset as pads
+
+    if not query.terms:
+        return _NO_HITS.copy()
+    if query.df_sum > reader.driver_local_max_postings:
+        return None
+    deleted = None
+    if reader.has_deletes:
+        if reader.n_deleted_rows > DRIVER_LOCAL_MAX_DELETES:
+            return None
+        deleted = _deleted_ids_arrow(reader)
+    rows = reader._buckets_arrow("postings", query.terms, _POSITION_COLS,
+                                 pads.field("term").isin(query.terms))
+    doc, t, key, _, post_doc, post_dl = _decode_positions(rows, query.terms)
+    if deleted is not None and deleted.size:
+        live = ~np.isin(doc, deleted)
+        t, key = t[live], key[live]
+    return query.kernel(*_kernel_inputs(query.terms, t, key, post_doc,
+                                        post_dl))
+
+
+def _position_rows_factory(terms: list[str]):
+    """mapInPandas: postings blocks -> flat _POSITION_ROW_SCHEMA rows."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = {"doc_id": [], "term": [], "dl": [], "positions": []}
-            for row in pdf.itertuples(index=False):
-                doc_ids = delta_decode(vb_decode(bytes(row.doc_gaps)))
-                dls = vb_decode(bytes(row.dls)).astype(np.int64)
-                poss = decode_positions_block(bytes(row.poss), doc_ids.size)
-                rows["doc_id"].extend(doc_ids.tolist())
-                rows["term"].extend([row.term] * doc_ids.size)
-                rows["dl"].extend(dls.tolist())
-                rows["positions"].extend(
-                    [p.astype(np.int32).tolist() for p in poss])
-            yield pd.DataFrame(rows)
+            doc, t, key, tfs, _, dls = _decode_positions(pdf, terms)
+            if doc.size:
+                yield pd.DataFrame({
+                    "doc_id": doc, "t": t.astype(np.int32), "key": key,
+                    "dl": np.repeat(dls, tfs).astype(np.int32)})
 
     return run
+
+
+def _kernel_factory(terms: list[str], kernel: Callable):
+    """mapInPandas: one doc_id partition's position rows -> its kernel
+    rows."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parts = [pdf for pdf in batches if not pdf.empty]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        out = kernel(*_kernel_inputs(
+            terms, *(pdf[c].to_numpy(np.int64)
+                     for c in ("t", "key", "doc_id", "dl"))))
+        if len(out):
+            yield out
+
+    return run
+
+
+def _positional_scores(reader: IndexReader, query: _PositionalQuery,
+                       schema: str = _SCORES_SCHEMA) -> DataFrame:
+    """The distributed tier of every positional query, lazily: a bucket-
+    and term-pruned postings scan, the batch decode to flat position rows,
+    tombstoned docs dropped, ONE doc_id repartition (a doc's positions
+    must meet), then the query's kernel per partition. Its rows follow
+    ``schema``; (doc_id, score) for the scoring queries."""
+    if not query.terms:
+        return _hits_df(reader.spark, _NO_HITS)
+    buckets = sorted({int(v) for v in reader.bucket_of(query.terms).values()})
+    rows = reader.live_only(
+        reader.postings.filter(
+            F.col("bucket").isin(buckets) & F.col("term").isin(query.terms))
+        .select(*_POSITION_COLS)
+        .mapInPandas(_position_rows_factory(query.terms),
+                     schema=_POSITION_ROW_SCHEMA))
+    return rows.repartition("doc_id").mapInPandas(
+        _kernel_factory(query.terms, query.kernel), schema=schema)
 
 
 def _phrase_prologue(reader: IndexReader, phrase: str,
@@ -1773,24 +1888,26 @@ def _phrase_prologue(reader: IndexReader, phrase: str,
     return ordered_terms, uniq, meta, sum_idf, k1, b
 
 
-_PHRASE_SHIFT = np.int64(1) << np.int64(32)
-
-
-def _phrase_match_np(ordered_terms: list[str],
-                     by_term: dict[str, tuple[np.ndarray, np.ndarray]],
+def _phrase_match_np(slots: list[list[str]], by_term: dict[str, np.ndarray],
                      dl_docs: np.ndarray, dl_vals: np.ndarray,
                      sum_idf: float, avgdl: float, k1: float, b: float):
-    """The phrase intersection + scoring kernel, shared verbatim in
-    semantics with the distributed match(): positions lift to global keys
-    doc_id * 2^32 + pos, one np.isin per phrase term, ptf by unique
-    count, score = sum_idf * tf_part(ptf, dl). by_term: term ->
-    (doc-per-position int64, global key int64). Returns
+    """The phrase intersection + scoring kernel of both tiers. A slot is
+    the index terms one phrase position accepts (one term, or a prefix's
+    expansions); it matches where ANY of them sits. Positions are global
+    keys doc_id * 2^32 + pos, so one np.isin per slot intersects every
+    doc at once (+i never crosses a doc boundary: positions < 2^32).
+    ptf by unique count, score = sum_idf * tf_part(ptf, dl). Returns
     (match_docs, scores) or None for no match."""
-    cand = by_term[ordered_terms[0]][1]
-    for i, t in enumerate(ordered_terms[1:], start=1):
+
+    def keys(slot):
+        return (by_term[slot[0]] if len(slot) == 1
+                else np.concatenate([by_term[t] for t in slot]))
+
+    cand = keys(slots[0])
+    for i, slot in enumerate(slots[1:], start=1):
         if cand.size == 0:
             return None
-        cand = cand[np.isin(cand + np.int64(i), by_term[t][1])]
+        cand = cand[np.isin(cand + np.int64(i), keys(slot))]
     if cand.size == 0:
         return None
     match_docs, ptfs = np.unique(cand // _PHRASE_SHIFT, return_counts=True)
@@ -1801,164 +1918,50 @@ def _phrase_match_np(ordered_terms: list[str],
     return match_docs.astype(np.int64), scores.astype(np.float64)
 
 
-def _positions_local(reader: IndexReader, terms: list[str]):
-    """pyarrow (zero-Spark-job) fetch of the positional postings for
-    `terms`: returns (by_term, dl_docs, dl_vals) where by_term maps each
-    term PRESENT in the index to (doc-per-position int64, global key
-    doc_id * 2^32 + pos int64) and the dl arrays are sorted by doc_id.
-    Absent terms are simply missing keys — presence policy is the
-    caller's (a fixed phrase term must be present; a prefix expansion
-    set only needs one)."""
-    from .indexer import decode_positions_flat
+def _phrase_kernel(slots: list[list[str]], sum_idf: float, avgdl: float,
+                   k1: float, b: float) -> Callable:
+    def kernel(by_term, dl_docs, dl_vals) -> pd.DataFrame:
+        hit = _phrase_match_np(slots, by_term, dl_docs, dl_vals, sum_idf,
+                               avgdl, k1, b)
+        if hit is None:
+            return _NO_HITS.copy()
+        return pd.DataFrame({"doc_id": hit[0], "score": hit[1]})
 
-    import pyarrow.dataset as pads
+    return kernel
 
-    rows = reader._buckets_arrow("postings", terms, _PAYLOAD_COLS + ["poss"],
-                                 pads.field("term").isin(terms))
-    if not len(rows):
-        return {}, np.empty(0, np.int64), np.empty(0, np.int64)
-    # batch decode (r6, guide §4.2): gaps/tfs/dls in one numpy pass, the
-    # position streams in one more (n_positions == tf by construction) —
-    # the r5 per-block loop with a per-posting position split and a
-    # Python dict for the dl map dominated driver-local phrase latency
-    doc_ids, tfs, dls, blk_counts = decode_blocks_flat(
-        rows["doc_gaps"].tolist(), rows["tfs"].tolist(),
-        rows["dls"].tolist())
-    pos_flat = decode_positions_flat(
-        [bytes(x) for x in rows["poss"]], tfs)
-    docs_rep = np.repeat(doc_ids, tfs)
-    keys = docs_rep * _PHRASE_SHIFT + pos_flat
-    present = list(dict.fromkeys(rows["term"].tolist()))
-    t_rank = {t: r for r, t in enumerate(present)}
-    blk_rank = np.fromiter((t_rank[t] for t in rows["term"].tolist()),
-                           dtype=np.int64, count=len(rows))
-    post_rank = np.repeat(blk_rank, blk_counts)
-    pos_rank = np.repeat(post_rank, tfs)
-    by_term = {}
-    for t, r in t_rank.items():
-        sel = pos_rank == r
-        by_term[t] = (docs_rep[sel], keys[sel])
-    uid, first = np.unique(doc_ids, return_index=True)
-    return by_term, uid.astype(np.int64), dls[first]
+
+def _phrase_query(reader: IndexReader, phrase: str, k1: float | None,
+                  b: float | None) -> _PositionalQuery:
+    """match_phrase (R3), Lucene-PhraseQuery-shaped: with ordered
+    analyzed terms t_0..t_{m-1}, ptf(d) = #{p : t_i at position p+i ∀i};
+    score(d) = (Σ_i idf(t_i)) * ptf / (ptf + k1*(1-b+b*dl/avgdl)); docs
+    with ptf = 0 are excluded."""
+    ordered_terms, uniq, meta, sum_idf, k1, b = _phrase_prologue(
+        reader, phrase, k1, b)
+    if not ordered_terms or len(meta) < len(uniq):
+        return _NO_MATCH  # no term, or a phrase term is absent
+    return _PositionalQuery(uniq, int(meta["df"].sum()), _phrase_kernel(
+        [[t] for t in ordered_terms], sum_idf, reader.stats["avgdl"],
+        k1, b))
 
 
 def _phrase_scores_driver_local(reader: IndexReader, phrase: str,
                                 k1: float | None = None,
                                 b: float | None = None
                                 ) -> pd.DataFrame | None:
-    """Zero-Spark-job twin of phrase_scores for budget-sized phrases:
-    pyarrow block fetch (incl. the positional payload), numpy decode +
-    intersection. Returns the FULL (doc_id, score) match set as pandas,
-    or None when over budget / tombstones too large (caller falls back
-    to the distributed path)."""
-    ordered_terms, uniq, meta, sum_idf, k1, b = _phrase_prologue(
-        reader, phrase, k1, b)
-    empty = pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                          "score": pd.Series(dtype=np.float64)})
-    if not ordered_terms:
-        return empty
-    if len(meta) < len(uniq):
-        return empty  # a phrase term is absent
-    if int(meta["df"].sum()) > reader.driver_local_max_postings:
-        return None
-    deleted: np.ndarray | None = None
-    if reader.has_deletes:
-        if reader.n_deleted_rows > DRIVER_LOCAL_MAX_DELETES:
-            return None
-        deleted = _deleted_ids_arrow(reader)
-    avgdl = reader.stats["avgdl"]
-
-    by_term, dl_docs, dl_vals = _positions_local(reader, uniq)
-    if any(t not in by_term for t in uniq):
-        return empty
-    hit = _phrase_match_np(ordered_terms, by_term, dl_docs, dl_vals,
-                           sum_idf, avgdl, k1, b)
-    if hit is None:
-        return empty
-    match_docs, scores = hit
-    if deleted is not None and deleted.size:
-        keep = ~np.isin(match_docs, deleted)
-        match_docs, scores = match_docs[keep], scores[keep]
-    return pd.DataFrame({"doc_id": match_docs, "score": scores})
+    """The FULL (doc_id, score) match set of an exact phrase as pandas,
+    zero Spark jobs, or None when over the positional gate (caller falls
+    back to phrase_scores)."""
+    return _positional_local(reader, _phrase_query(reader, phrase, k1, b))
 
 
 def phrase_scores(reader: IndexReader, phrase: str,
                   k1: float | None = None, b: float | None = None) -> DataFrame:
     """Exact-phrase scoring over positional postings (R3: the reference's
-    match_phrase clause, retrieval/es_search_final.py:24-31).
-
-    Lucene-PhraseQuery-shaped semantics: with ordered analyzed terms
-    t_0..t_{m-1}, phrase frequency ptf(d) = #{p : t_i at position p+i ∀i};
-    score(d) = (Σ_i idf(t_i)) * ptf / (ptf + k1*(1-b+b*dl/avgdl)); docs
-    with ptf = 0 are excluded. Returns the FULL scored set (doc_id, score).
-    """
-    spark = reader.spark
-    ordered_terms, uniq, meta, sum_idf, k1, b = _phrase_prologue(
-        reader, phrase, k1, b)
-    if not ordered_terms or len(meta) < len(uniq):
-        # no term, or a phrase term is absent -> no phrase match anywhere
-        return _hits_df(spark, _NO_HITS)
-    avgdl = reader.stats["avgdl"]
-    n_uniq = len(uniq)
-
-    buckets = sorted({int(v) for v in reader.bucket_of(uniq).values()})
-    rows = (
-        reader.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(uniq))
-        .select("term", "doc_gaps", "dls", "poss")
-        .mapInPandas(_decode_positions_factory(), schema=PHRASE_ROW_SCHEMA)
-    )
-
-    # Batch-vectorized intersection (VERDICT r1 #6: the old per-doc
-    # applyInPandas paid one Python group invocation per matching doc).
-    # Positions are lifted to a global key doc_id * 2^32 + pos, so ONE
-    # np.isin per phrase term intersects every doc in the partition at
-    # once — +i never crosses a doc boundary because positions < 2^32.
-    # Docs missing a term die naturally in the intersection. The only
-    # requirement is doc co-location, provided by the repartition below
-    # (the same shuffle the old groupBy did, minus per-group serde).
-    _SHIFT = np.int64(1) << np.int64(32)
-
-    def match(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [p for p in batches if not p.empty]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        del parts
-        glob: dict[str, np.ndarray] = {}
-        for t in uniq:
-            grp = pdf[pdf["term"] == t]
-            if grp.empty:
-                return  # a phrase term absent from this partition's docs
-            lens = grp["positions"].str.len().to_numpy(np.int64)
-            docs = np.repeat(grp["doc_id"].to_numpy(np.int64), lens)
-            pos = (np.concatenate([np.asarray(x, dtype=np.int64)
-                                   for x in grp["positions"]])
-                   if lens.sum() else np.empty(0, np.int64))
-            glob[t] = docs * _SHIFT + pos
-        cand = glob[ordered_terms[0]]
-        for i, t in enumerate(ordered_terms[1:], start=1):
-            if cand.size == 0:
-                return
-            cand = cand[np.isin(cand + np.int64(i), glob[t])]
-        if cand.size == 0:
-            return
-        match_docs, ptfs = np.unique(cand // _SHIFT, return_counts=True)
-        dl_by_doc = pdf.drop_duplicates("doc_id").set_index("doc_id")["dl"]
-        dls = dl_by_doc.loc[match_docs].to_numpy(np.int64)
-        scores = sum_idf * bm25_tf_part(ptfs.astype(np.int64), dls,
-                                        avgdl, k1, b)
-        yield pd.DataFrame({"doc_id": match_docs.astype(np.int64),
-                            "score": scores.astype(np.float64)})
-
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return reader.live_only(rows.repartition(n_part, "doc_id").mapInPandas(
-        match, schema="doc_id bigint, score double"))
-
-
-# pseudo-term for the expanded last position of a match_phrase_prefix —
-# \x00 cannot survive any analyzer, so it never collides with an index term
-_PFX_SENTINEL = "\x00prefix*"
+    match_phrase clause, retrieval/es_search_final.py:24-31), on the
+    distributed executor; semantics in _phrase_query. Returns the FULL
+    scored set (doc_id, score), lazily."""
+    return _positional_scores(reader, _phrase_query(reader, phrase, k1, b))
 
 
 def _prefix_expansions(reader: IndexReader, prefix: str,
@@ -1981,22 +1984,23 @@ def _prefix_expansions(reader: IndexReader, prefix: str,
     return [r.term for r in rows]
 
 
-def _phrase_prefix_prologue(reader: IndexReader, phrase: str,
-                            k1: float | None, b: float | None,
-                            max_expansions: int):
-    """match_phrase_prefix prologue: the LAST analyzed token is a term
-    PREFIX whose expansions (capped, term order) may all complete the
-    phrase at the final position. Scoring semantics (documented
+def _phrase_prefix_query(reader: IndexReader, phrase: str,
+                         k1: float | None, b: float | None,
+                         max_expansions: int) -> _PositionalQuery:
+    """match_phrase_prefix: the LAST analyzed token is a term PREFIX
+    whose expansions (capped, term order) form the final slot of the
+    phrase kernel. Scoring semantics (documented
     Lucene-MultiPhraseQuery-shaped): combined phrase frequency
     ptf(d) = #{p : fixed terms at p..p+m-2 and ANY expansion at p+m-1}
     (positions are disjoint across expansions — a position holds one
     token — so this equals the sum of per-expansion ptfs); sum_idf =
     Σ idf(fixed ordered terms) + idf computed from the MAX df among the
     expansions (Lucene's convention for a multi-term position);
-    score(d) = sum_idf * ptf/(ptf + k1*(1-b+b*dl/avgdl)).
-    Returns (ordered_terms ending in _PFX_SENTINEL, fetch_terms, meta,
-    sum_idf, expansions, k1, b); ordered_terms == [] means no match
-    anywhere (empty analysis, no expansion, or a fixed term absent)."""
+    score(d) = sum_idf * ptf/(ptf + k1*(1-b+b*dl/avgdl)). The Σ df gate
+    covers the fixed terms and every expansion. The expansion lookup
+    itself is only job-free when the vocabulary is in RAM
+    (reader.vocab_arrow()); over that budget _prefix_expansions runs one
+    small term-pruned job."""
     if not reader.stats.get("positions"):
         raise ValueError("index was built without positions "
                          "(build_index(with_positions=True))")
@@ -2006,19 +2010,17 @@ def _phrase_prefix_prologue(reader: IndexReader, phrase: str,
 
     toks = analyze(
         phrase, mode=reader.stats.get("analyzer", "english_folded"))
-    nothing = ([], [], None, 0.0, [], k1, b)
     if not toks:
-        return nothing
+        return _NO_MATCH
     fixed, prefix = toks[:-1], toks[-1]
     expansions = _prefix_expansions(reader, prefix, max_expansions)
     if not expansions:
-        return nothing
-    uniq_fixed = sorted(set(fixed))
-    fetch = sorted(set(uniq_fixed) | set(expansions))
+        return _NO_MATCH
+    fetch = sorted(set(fixed) | set(expansions))
     meta = _term_meta(reader, [(t, 1) for t in fetch], k1, b)
     present = set(meta["term"])
-    if any(t not in present for t in uniq_fixed):
-        return nothing
+    if any(t not in present for t in fixed):
+        return _NO_MATCH
     idf_by_term = dict(zip(meta["term"], meta["idf"]))
     sum_idf = 0.0
     for t in fixed:  # float64 sum in phrase order, like _phrase_prologue
@@ -2026,125 +2028,20 @@ def _phrase_prefix_prologue(reader: IndexReader, phrase: str,
     max_df = int(meta.loc[meta["term"].isin(expansions), "df"].max())
     sum_idf += float(bm25_idf(reader.stats["n_docs"],
                               np.array([max_df]))[0])
-    return (list(fixed) + [_PFX_SENTINEL], fetch, meta, sum_idf,
-            expansions, k1, b)
-
-
-def _phrase_prefix_driver_local(reader: IndexReader, phrase: str,
-                                k1: float | None = None,
-                                b: float | None = None,
-                                max_expansions: int = 50
-                                ) -> pd.DataFrame | None:
-    """Zero-Spark-job twin of phrase_prefix_scores: same Σ df budget
-    (over fixed terms + every expansion) and tombstone gate as the plain
-    phrase serving path; None = go distributed. NOTE: the expansion
-    lookup itself is only job-free when the vocabulary is in RAM
-    (reader.vocab_arrow()); over that budget _prefix_expansions runs one
-    small term-pruned job before this gate is even consulted."""
-    ordered_terms, fetch, meta, sum_idf, expansions, k1, b = \
-        _phrase_prefix_prologue(reader, phrase, k1, b, max_expansions)
-    empty = pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                          "score": pd.Series(dtype=np.float64)})
-    if not ordered_terms:
-        return empty
-    if int(meta["df"].sum()) > reader.driver_local_max_postings:
-        return None
-    deleted: np.ndarray | None = None
-    if reader.has_deletes:
-        if reader.n_deleted_rows > DRIVER_LOCAL_MAX_DELETES:
-            return None
-        deleted = _deleted_ids_arrow(reader)
-    avgdl = reader.stats["avgdl"]
-
-    by_term, dl_docs, dl_vals = _positions_local(reader, fetch)
-    if any(t not in by_term for t in ordered_terms[:-1]):
-        return empty
-    exp_present = [e for e in expansions if e in by_term]
-    if not exp_present:
-        return empty
-    by_term[_PFX_SENTINEL] = (
-        np.concatenate([by_term[e][0] for e in exp_present]),
-        np.concatenate([by_term[e][1] for e in exp_present]))
-    hit = _phrase_match_np(ordered_terms, by_term, dl_docs, dl_vals,
-                           sum_idf, avgdl, k1, b)
-    if hit is None:
-        return empty
-    match_docs, scores = hit
-    if deleted is not None and deleted.size:
-        keep = ~np.isin(match_docs, deleted)
-        match_docs, scores = match_docs[keep], scores[keep]
-    return pd.DataFrame({"doc_id": match_docs, "score": scores})
+    return _PositionalQuery(fetch, int(meta["df"].sum()), _phrase_kernel(
+        [[t] for t in fixed] + [expansions], sum_idf,
+        reader.stats["avgdl"], k1, b))
 
 
 def phrase_prefix_scores(reader: IndexReader, phrase: str,
                          k1: float | None = None, b: float | None = None,
                          max_expansions: int = 50) -> DataFrame:
     """Distributed match_phrase_prefix scoring (the ES
-    match_phrase_prefix clause; semantics in _phrase_prefix_prologue).
-    Same plan shape as phrase_scores: term-pruned positional scan, ONE
-    doc_id repartition, batch-vectorized numpy intersection — the only
-    difference is that the final position matches the UNION of the
-    expansions' position keys. Returns the FULL (doc_id, score) set."""
-    spark = reader.spark
-    ordered_terms, fetch, meta, sum_idf, expansions, k1, b = \
-        _phrase_prefix_prologue(reader, phrase, k1, b, max_expansions)
-    if not ordered_terms:
-        return _hits_df(spark, _NO_HITS)
-    avgdl = reader.stats["avgdl"]
-    uniq_fixed = sorted(set(ordered_terms[:-1]))
-    exp_set = set(expansions)
-
-    buckets = sorted({int(v) for v in reader.bucket_of(fetch).values()})
-    rows = (
-        reader.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(fetch))
-        .select("term", "doc_gaps", "dls", "poss")
-        .mapInPandas(_decode_positions_factory(), schema=PHRASE_ROW_SCHEMA)
-    )
-    _SHIFT = np.int64(1) << np.int64(32)
-
-    def _keys(grp: pd.DataFrame) -> np.ndarray:
-        lens = grp["positions"].str.len().to_numpy(np.int64)
-        docs = np.repeat(grp["doc_id"].to_numpy(np.int64), lens)
-        pos = (np.concatenate([np.asarray(x, dtype=np.int64)
-                               for x in grp["positions"]])
-               if lens.sum() else np.empty(0, np.int64))
-        return docs * _SHIFT + pos
-
-    def match(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [p for p in batches if not p.empty]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        del parts
-        glob: dict[str, np.ndarray] = {}
-        for t in uniq_fixed:
-            grp = pdf[pdf["term"] == t]
-            if grp.empty:
-                return  # a fixed term absent from this partition's docs
-            glob[t] = _keys(grp)
-        egrp = pdf[pdf["term"].isin(exp_set)]
-        if egrp.empty:
-            return  # no expansion completes any phrase here
-        glob[_PFX_SENTINEL] = _keys(egrp)
-        cand = glob[ordered_terms[0]]
-        for i, t in enumerate(ordered_terms[1:], start=1):
-            if cand.size == 0:
-                return
-            cand = cand[np.isin(cand + np.int64(i), glob[t])]
-        if cand.size == 0:
-            return
-        match_docs, ptfs = np.unique(cand // _SHIFT, return_counts=True)
-        dl_by_doc = pdf.drop_duplicates("doc_id").set_index("doc_id")["dl"]
-        dls = dl_by_doc.loc[match_docs].to_numpy(np.int64)
-        scores = sum_idf * bm25_tf_part(ptfs.astype(np.int64), dls,
-                                        avgdl, k1, b)
-        yield pd.DataFrame({"doc_id": match_docs.astype(np.int64),
-                            "score": scores.astype(np.float64)})
-
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return reader.live_only(rows.repartition(n_part, "doc_id").mapInPandas(
-        match, schema="doc_id bigint, score double"))
+    match_phrase_prefix clause; semantics in _phrase_prefix_query): the
+    phrase kernel on the positional executor. Returns the FULL
+    (doc_id, score) set, lazily."""
+    return _positional_scores(reader, _phrase_prefix_query(
+        reader, phrase, k1, b, max_expansions))
 
 
 def _topk_pd(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
@@ -2166,8 +2063,9 @@ def phrase_search(reader: IndexReader, phrase: str, k: int = 10,
                   with_text: bool = False) -> DataFrame:
     """Top-k exact-phrase query (R3). Budget-sized phrases (Σ df of the
     phrase terms within reader.driver_local_max_postings) run entirely
-    driver-side — zero Spark jobs with or without text, bit-identical
-    (test-guarded)."""
+    driver-side — zero Spark jobs with or without text; the rest run on
+    the positional executor. Both tiers run the same decode and kernel,
+    so their scores are bit-identical (test-guarded)."""
     local = _phrase_scores_driver_local(reader, phrase, k1, b)
     if local is not None:
         return _local_result(reader, _topk_pd(local, k), with_text)

@@ -23,6 +23,7 @@ from .functions import textstats as TS
 from .operators import dedup as DD
 from .operators.fusion import rrf_fuse, with_rank
 from .operators.scorer import _empty_df
+from .session import wide
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 SQL: dict[str, str] = {}
@@ -30,21 +31,6 @@ SQL: dict[str, str] = {}
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _wide(df: DataFrame) -> DataFrame:
-    """Parallelism floor before CPU-heavy per-row work (tokenize /
-    explode / hashing): a small or compacted table arrives as one
-    parquet split, which would serialize the whole map stage onto one
-    task (guide §2.5 input skew). Round-robins up to the session
-    parallelism; a no-op when the scan is already wide (at real scale it
-    always is). Results are partitioning-independent, so plans above are
-    unchanged."""
-    sc = df.sparkSession.sparkContext
-    p = int(sc.defaultParallelism)
-    if df.rdd.getNumPartitions() < p:
-        return df.repartition(p)
-    return df
 
 
 def register(name: str, sql: str | None = None):
@@ -383,7 +369,7 @@ LIMIT 40
 def term_frequencies(spark, sf_dir):
     """Tokenize + explode + term-frequency aggregate (A6/F1, the SPIMI map
     stage over the documents analog)."""
-    d = _wide(_t(spark, sf_dir, "documents"))
+    d = wide(_t(spark, sf_dir, "documents"))
     toks = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                     lambda t: t != "")
     return (
@@ -510,7 +496,7 @@ def gopher_repetition_documents(spark, sf_dir):
     for ALL n's — the 100 TB shape (counts stay distributed; no per-doc
     driver loop). The oracle recomputes every n-gram count, the
     tie-broken top gram, and both fractions from raw text."""
-    d = _wide(_t(spark, sf_dir, "documents"))
+    d = wide(_t(spark, sf_dir, "documents"))
     m = GP.repetition_metrics(d, top_ns=(2, 3), dup_ns=(5,))
     return (
         m.orderBy(F.desc("top2_frac"), F.asc("doc_id")).limit(20)
@@ -564,7 +550,7 @@ def gopher_quality_documents(spark, sf_dir):
     census over word count, mean word length, alphabetic-word ratio,
     and required-word presence — pure column expressions, one
     map-side-combinable aggregate."""
-    d = _wide(_t(spark, sf_dir, "documents"))
+    d = wide(_t(spark, sf_dir, "documents"))
     flags = GP.doc_quality_flags(F.col("text"))
     fd = d.select(*[v.alias(k) for k, v in flags.items()])
     allok = (F.col("ok_word_count") & F.col("ok_mean_word_len")
@@ -747,7 +733,7 @@ FROM fp GROUP BY f
 def exact_dedup_documents(spark, sf_dir):
     """Exact dedup by digest: keeper per duplicate group (A7 scaled —
     hash-groupBy, never pairwise)."""
-    d = _wide(_t(spark, sf_dir, "documents"))
+    d = wide(_t(spark, sf_dir, "documents"))
     return (
         d.withColumn("fingerprint", TS.fingerprint(F.col("text")))
         .groupBy("fingerprint")
@@ -1110,7 +1096,7 @@ def bm25_documents(spark, sf_dir):
     """Flagship: BM25 top-k computed with pure DataFrame ops over the
     documents table (R1/A5/A6/J6/T1 in one plan; SQL-portable analyzer —
     regex tokens, no stemming — so DuckDB can replay it exactly)."""
-    d = _wide(_t(spark, sf_dir, "documents"))
+    d = wide(_t(spark, sf_dir, "documents"))
     qset = ["spark", "join", "shuffle"]
     toks_arr = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                         lambda t: t != "")
@@ -1206,7 +1192,7 @@ def bm25_batch_documents(spark, sf_dir):
     computed once for the term union, per-query weights joined in, top-10
     per query via a qid-PARTITIONED window (distributed across queries,
     never a single-partition rank)."""
-    d = _wide(_t(spark, sf_dir, "documents"))
+    d = wide(_t(spark, sf_dir, "documents"))
     union_terms = sorted({t for ts in _BATCH_QSETS.values() for t in ts})
     qterms = spark.createDataFrame(
         [(qid, t) for qid, ts in _BATCH_QSETS.items() for t in ts],
@@ -1739,7 +1725,7 @@ def rechunk_documents(spark, sf_dir):
     DuckDB-checked against the same boundary semantics."""
     from .operators.retrieval_extras import rechunk_conversations
 
-    d = _wide(_t(spark, sf_dir, "documents")).select(
+    d = wide(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").cast("string").alias("conv_id"),
         F.lit(0).alias("turn_idx"), "text")
     chunks = rechunk_conversations(d, window_tokens=20, overlap=5,

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Python workers fork from this daemon module (see its docstring), so it
 # must be importable wherever a worker starts, or every Python job fails.
@@ -78,3 +78,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def wide(df: DataFrame) -> DataFrame:
+    """Parallelism floor before CPU-heavy per-row work (tokenize /
+    explode / hashing): a small or compacted table arrives as one
+    parquet split, which would serialize the whole map stage onto one
+    task (guide §2.5 input skew). Round-robins up to the session
+    parallelism; a no-op when the scan is already wide (at real scale it
+    always is). Results are partitioning-independent, so plans above are
+    unchanged."""
+    p = int(df.sparkSession.sparkContext.defaultParallelism)
+    if df.rdd.getNumPartitions() < p:
+        return df.repartition(p)
+    return df

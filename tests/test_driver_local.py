@@ -165,13 +165,30 @@ def pos_pair(spark):
 
 @pytest.mark.parametrize("phrase", [
     "neural networks", "machine learning", "the neural",
-    "neural neural", "nonexistentterm networks"])
+    "neural neural", "nonexistentterm networks",
+    # the other positional queries, as ES query clauses
+    pytest.param({"match_phrase_prefix": {"text": "neural netw"}},
+                 id="prefix-neural netw"),
+    pytest.param({"match_phrase": {"text": {"query": "neural networks",
+                                            "slop": 2}}},
+                 id="slop2-neural networks"),
+    pytest.param({"span_near": {"clauses": [
+        {"span_term": {"text": "network"}},
+        {"span_term": {"text": "neural"}}], "slop": 2,
+        "in_order": False}}, id="span_near-unordered")])
 def test_phrase_driver_local(pos_pair, phrase):
+    from research_engine_spark.operators.esdsl import es_search
     from research_engine_spark.operators.scorer import phrase_search
 
+    def run(reader):
+        if isinstance(phrase, str):
+            return _pdf(phrase_search(reader, phrase, k=10))
+        return _pdf(es_search(reader, {"query": phrase, "size": 10}))
+
     loc_r, dist_r = pos_pair
-    loc = _pdf(phrase_search(loc_r, phrase, k=10))
-    dist = _pdf(phrase_search(dist_r, phrase, k=10))
+    loc, dist = run(loc_r), run(dist_r)
+    if not isinstance(phrase, str):
+        assert len(loc) > 0, phrase
     assert list(loc["doc_id"]) == list(dist["doc_id"]), phrase
     assert np.allclose(loc["score"], dist["score"], rtol=0, atol=0), phrase
 

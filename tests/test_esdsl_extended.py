@@ -290,6 +290,8 @@ def test_sloppy_phrase_planted_weights(spark):
         "alpha beta alpha gap beta",        # pairs: a1->b2 d=1, a3->b5 d=2
         "beta alpha rest rest rest",        # wrong order: no match
         "rest rest rest rest rest",
+        # six gap-2 pairs: w = 6 * (1/3), 4 filler tokens apart
+        " rest rest rest rest ".join(["alpha gap gap beta"] * 6),
     ]
     rows = [(f"c{i}", 0, "user", t, None) for i, t in enumerate(texts)]
     tx = spark.createDataFrame(
@@ -309,17 +311,24 @@ def test_sloppy_phrase_planted_weights(spark):
         got_d = {r.doc_id: r.score for r in
                  es_search(dist, body).collect()}
         assert got_l == got_d  # bit-identical tiers
-        # hand-computed: alpha and beta each appear in 6 of the 7 docs
-        n = 7
-        idf = sum(math.log(1 + (n - 6 + 0.5) / (6 + 0.5))
+        # hand-computed: alpha and beta each appear in 7 of the 8 docs
+        n = 8
+        idf = sum(math.log(1 + (n - 7 + 0.5) / (7 + 0.5))
                   for _ in range(2))
-        avgdl = 5.0
-        wtf = {0: 1.0, 1: 0.5, 2: 1 / 3, 4: 1.0 + 0.5}
-        want = {doc: idf * w / (w + 1.2 * (1 - 0.75 + 0.75 * 5 / avgdl))
+        dls = [5] * 7 + [44]
+        avgdl = sum(dls) / n
+        # doc 7: the executor once summed the six 1/3 weights one by one
+        # in shuffle order (1.9999999999999998); both tiers now add
+        # n * w per displacement, exactly 2.0
+        assert 6 * (1 / 3) == 2.0
+        wtf = {0: 1.0, 1: 0.5, 2: 1 / 3, 4: 1.0 + 0.5, 7: 6 * (1 / 3)}
+        want = {doc: idf * w / (w + 1.2 * (1 - 0.75 + 0.75 * dls[doc]
+                                           / avgdl))
                 for doc, w in wtf.items()}
         assert set(got_l) == set(want)
         for doc in want:
             assert abs(got_l[doc] - want[doc]) < 1e-12
+        assert got_l[7] == want[7]  # the same float expression, to the bit
         # longer phrases reject loudly
         with pytest.raises(ESQueryError, match="TWO-term"):
             es_search(local, {"query": {"match_phrase": {"text": {

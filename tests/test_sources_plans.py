@@ -184,3 +184,73 @@ def test_single_term_search_has_no_aggregate_shuffle(reader, monkeypatch):
         assert ("hashpartitioning(doc_id" in plan) is shuffled, q
         assert n_run <= 2, f"{q!r}: search launched {n_run} jobs"
         assert n_collect == 0, f"{q!r}: collect launched {n_collect} jobs"
+
+
+def _udf_output_types(df) -> list[str]:
+    """The type of every column a mapInPandas UDF emits in ``df``'s
+    optimized plan."""
+    types = []
+
+    def walk(node):
+        if node.nodeName() == "MapInPandas":
+            out = node.output()
+            types.extend(out.apply(i).dataType().simpleString()
+                         for i in range(out.size()))
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())  # noqa: SLF001
+    return types
+
+
+def test_positional_plan_shape(spark, monkeypatch, tmp_path):
+    """Every distributed positional query (phrase, phrase-prefix, sloppy
+    phrase, the phrase suggester's bigram counts) is one flat-row decode,
+    ONE doc_id exchange and the kernel per partition: no join, and no
+    array column out of any Python UDF."""
+    from research_engine_spark.corpus import synth_transcripts
+    from research_engine_spark.operators.esdsl import (
+        _bigram_counts,
+        es_search,
+    )
+    from research_engine_spark.operators.indexer import build_index
+    from research_engine_spark.operators.scorer import (
+        IndexReader,
+        phrase_search,
+    )
+
+    d = str(tmp_path / "pidx")
+    build_index(synth_transcripts(spark, n_convs=40, seed=21), d,
+                n_buckets=4, with_positions=True)
+    dist = IndexReader(spark, d, driver_local_max_postings=0,
+                       driver_local_max_vocab=0)
+    frames = {
+        "phrase": phrase_search(dist, "neural networks", k=10),
+        "prefix": es_search(dist, {"query": {"match_phrase_prefix": {
+            "text": "neural netw"}}}),
+        "sloppy": es_search(dist, {"query": {"match_phrase": {"text": {
+            "query": "neural networks", "slop": 2}}}}),
+    }
+    plans = {name: _formatted_plan(df) for name, df in frames.items()}
+    # the suggester's frame is collected inside _bigram_counts: take its
+    # plan before it runs
+    cls = type(spark.range(1))
+    to_pandas = cls.toPandas
+
+    def capture(self):
+        frames["bigram"], plans["bigram"] = self, _formatted_plan(self)
+        return to_pandas(self)
+
+    monkeypatch.setattr(cls, "toPandas", capture)
+    counts = _bigram_counts(dist, [("neural", "network")])
+    monkeypatch.setattr(cls, "toPandas", to_pandas)
+    assert counts[("neural", "network")] > 0
+    for name, df in frames.items():
+        assert df.count() > 0, name
+        plan = plans[name]
+        assert plan.count("hashpartitioning(doc_id") == 1, (name, plan)
+        assert "Join" not in plan, (name, plan)
+        types = _udf_output_types(df)
+        assert types and not any("array" in t for t in types), (name,
+                                                                 types)

@@ -198,8 +198,12 @@ def _py_lm(phrase: list[str], discount: float = 0.4) -> float:
     return s
 
 
-def test_phrase_suggest_ranking_and_tiers(spark, psugg_setup):
-    from research_engine_spark.operators.esdsl import es_phrase_suggest
+def test_phrase_suggest_ranking_and_tiers(spark, psugg_setup, tmp_path):
+    from research_engine_spark.operators.deletes import delete_by_query
+    from research_engine_spark.operators.esdsl import (
+        _bigram_counts,
+        es_phrase_suggest,
+    )
 
     body = {"s": {"text": "grap banana",
                   "phrase": {"size": 3, "max_errors": 1}}}
@@ -217,6 +221,18 @@ def test_phrase_suggest_ranking_and_tiers(spark, psugg_setup):
          ("grappa banana", _py_lm(["grappa", "banana"]), 1)],
         key=lambda x: -x[1])
     assert [(p, round(s, 10), c) for p, s, c in want] == got_l
+    # tombstone a doc holding the candidate bigram (on a copy of the
+    # index): both tiers count only live docs
+    d = str(tmp_path / "psugg_del")
+    shutil.copytree(psugg_setup, d)
+    local, dist = _readers(spark, d)
+    assert delete_by_query(local, "conv_id = 'c0'") == 1
+    dist.refresh()
+    pairs = [("grape", "banana"), ("banana", "split"), ("grappa", "banana")]
+    got = _bigram_counts(local, pairs)
+    assert got == _bigram_counts(dist, pairs)
+    assert got == {("grape", "banana"): 2, ("banana", "split"): 0,
+                   ("grappa", "banana"): 1}
 
 
 def test_phrase_suggest_confidence_gate(spark, psugg_setup):
